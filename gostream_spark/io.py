@@ -3,18 +3,48 @@
 S1 parquet scan, S3 in-memory source, S5 parquet sink. Streaming
 sources (S2) live in ``gostream_spark.streaming.source``.
 
-Scale note: each query loads only the tables it needs with a plain
-``spark.read.parquet`` — Catalyst prunes columns and pushes filters
-into the scan, which is the behavior that matters at 100 TB (verify
-with ``df.explain``: ``PushedFilters`` / ``ReadSchema``). No caching
-by default: at the design scale the input does not fit in memory, so
-the engine is built to be scan-efficient instead.
+Scale note: each query loads only the tables it needs with a
+``spark.read.schema(...).parquet`` scan — Catalyst prunes columns and
+pushes filters into the scan, which is the behavior that matters at
+100 TB (verify with ``df.explain``: ``PushedFilters`` /
+``ReadSchema``). No caching of data by default: at the design scale
+the input does not fit in memory, so the engine is built to be
+scan-efficient instead.
+
+What IS cached is table metadata, in one per-session memo
+(``_TABLE_META``) owned by this module. Reading parquet without a
+schema makes Spark infer it, and inference launches a Spark job that
+reads a footer — on every load of the same file. The memo keeps, per
+table path, the inferred schema (``table_schema``, used by
+``load_table`` and ``streaming.source.file_stream``) and the
+``spread_for_compute`` decision. Its key is the live SparkSession
+(a restarted session infers again) and the path; an entry is valid
+only while its stamp matches:
+
+- a fingerprint of the path's current file set, read through the
+  Hadoop FileSystem API so ``s3a://`` and ``hdfs://`` paths work: a
+  file's modification time and length, or a directory's modification
+  time plus its content summary (total length and file count);
+- the values of the confs that change what inference returns
+  (``_INFERENCE_CONFS``).
+
+A table rewritten at the same path therefore gets a new stamp (unless
+the rewrite keeps the length, the file count and the modification time
+to the millisecond) and is inferred (and probed) again — a stale schema
+would silently null out renamed columns, so this is a correctness
+property, not a cache policy. The inference itself is still ``spark.read.parquet(path)``;
+only its result is reused.
 """
 
 from __future__ import annotations
 
+import weakref
+from dataclasses import dataclass, field
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -54,7 +84,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     ensure_session_conf(spark, events=name == "events")
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(table_schema(spark, path, path_status(spark, path))).parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
@@ -95,18 +126,83 @@ def ensure_session_conf(spark: SparkSession, events: bool = False) -> None:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
-#: Per-session memo of the spread decision, keyed by scan path (r16,
-#: guide §5 "the driver should do almost no data work"): the
-#: ``df.rdd.getNumPartitions()`` probe materializes the plan into an
-#: RDD on the DRIVER — measured 100-500 ms of pure driver time per
-#: call — and every caller probes the same fixture table in the same
-#: session, where the split count cannot change (same files, same
-#: ``maxPartitionBytes``). Spark itself memoizes the underlying file
-#: listing per session (FileStatusCache) for exactly this reason. The
-#: WeakKeyDictionary keys on the live SparkSession so a restarted
-#: session re-probes, and the probe itself stays the ground truth —
-#: no re-implementation of FilePartition packing arithmetic.
-_SPREAD_DECISIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = None  # type: ignore[assignment]
+#: Confs whose values change what parquet schema inference returns:
+#: part of every ``_TABLE_META`` stamp, so flipping one re-infers.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+@dataclass
+class _TableMeta:
+    """What the engine knows about one table path in one session,
+    valid while ``stamp`` (file-set fingerprint + inference confs)
+    still matches."""
+
+    stamp: tuple
+    schema: StructType | None = None
+    #: ``spread_for_compute`` decision per ``defaultParallelism``
+    spread: dict[int, bool] = field(default_factory=dict)
+
+
+#: The per-session table-metadata memo (see the module docstring):
+#: SparkSession -> {path: _TableMeta}. Weak keys, so a stopped and
+#: restarted session starts empty; one entry per path, replaced when
+#: its stamp goes stale.
+_TABLE_META: "weakref.WeakKeyDictionary[SparkSession, dict[str, _TableMeta]]" = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def path_status(spark: SparkSession, path: str):
+    """``(FileSystem, FileStatus)`` of ``path`` through the HADOOP
+    FileSystem API — so it works on any filesystem a Spark path can
+    name (s3a://, hdfs://, ...), not just the driver's local disk — or
+    ``None`` when it cannot be read (missing path, no JVM access).
+    One lookup serves both a caller's file-vs-directory dispatch and
+    the ``_TABLE_META`` fingerprint."""
+    try:
+        hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        return fs, fs.getFileStatus(hpath)
+    except (Py4JError, AttributeError):
+        return None
+
+
+def _table_meta(spark: SparkSession, path: str, status) -> _TableMeta | None:
+    """The current ``_TABLE_META`` entry of ``path`` (a fresh one when
+    the stamp changed), or ``None`` when ``status`` is ``None`` — an
+    unreadable path is never memoized. Costs a handful of py4j round
+    trips (about 3 ms for a local file), against 0.1-0.2 s for the
+    inference job it saves."""
+    if status is None:
+        return None
+    fs, st = status
+    if st.isDirectory():
+        summary = fs.getContentSummary(st.getPath())
+        files = (st.getModificationTime(), summary.getLength(), summary.getFileCount())
+    else:
+        files = (st.getModificationTime(), st.getLen())
+    stamp = files + tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+    per_session = _TABLE_META.setdefault(spark, {})
+    meta = per_session.get(path)
+    if meta is None or meta.stamp != stamp:
+        meta = per_session[path] = _TableMeta(stamp)
+    return meta
+
+
+def table_schema(spark: SparkSession, path: str, status) -> StructType:
+    """Schema of the parquet table at ``path`` as Spark infers it,
+    inferred once per session and file set (``status`` is
+    ``path_status(spark, path)``). Call after ``ensure_session_conf``:
+    the confs it sets are part of the memo stamp."""
+    meta = _table_meta(spark, path, status)
+    if meta is None:
+        return spark.read.parquet(path).schema
+    if meta.schema is None:
+        meta.schema = spark.read.parquet(path).schema
+    return meta.schema
 
 
 def spread_for_compute(
@@ -126,27 +222,27 @@ def spread_for_compute(
     full-width parallelism for everything downstream — the classic
     fix for "1 task, 31 idle cores" on compute-bound jobs.
 
-    ``cache_key``: scan identity (use ``table_path(sf_dir, name)``) to
-    memoize the probe per session — a pushed filter/projection does not
-    change the split count, so filtered loads of the same table share
-    the key. ``None`` probes every call (arbitrary plans).
+    The ``df.rdd.getNumPartitions()`` probe materializes the plan into
+    an RDD on the DRIVER — measured 100-500 ms of pure driver time per
+    call (guide §5 "the driver should do almost no data work") — so
+    ``cache_key``, the scan's table path (``table_path(sf_dir,
+    name)``), memoizes the decision in that path's ``_TABLE_META``
+    entry: probed once per session and file set. A pushed
+    filter/projection does not change the split count, so filtered
+    loads of the same table share the entry. ``None`` probes every
+    call (arbitrary plans). The probe itself stays the ground truth —
+    no re-implementation of FilePartition packing arithmetic.
     """
-    global _SPREAD_DECISIONS
     target = spark.sparkContext.defaultParallelism
-    if cache_key is None:
-        if df.rdd.getNumPartitions() >= target:
-            return df
-        return df.repartition(target)
-    if _SPREAD_DECISIONS is None:
-        import weakref
-
-        _SPREAD_DECISIONS = weakref.WeakKeyDictionary()
-    per_session = _SPREAD_DECISIONS.setdefault(spark, {})
-    key = (cache_key, target)
-    spread = per_session.get(key)
-    if spread is None:
+    meta = None
+    if cache_key is not None:
+        meta = _table_meta(spark, cache_key, path_status(spark, cache_key))
+    if meta is None:
         spread = df.rdd.getNumPartitions() < target
-        per_session[key] = spread
+    else:
+        spread = meta.spread.get(target)
+        if spread is None:
+            spread = meta.spread[target] = df.rdd.getNumPartitions() < target
     return df.repartition(target) if spread else df
 
 
@@ -159,9 +255,10 @@ def load_spread(
     change the scan's split count, so filtered loads share the
     unfiltered table's cached decision.
 
-    The shared-key assumption holds because fixture tables are
-    UNPARTITIONED single-directory parquet whose file set is fixed for
-    the session (ADVICE r16): on a Hive-partitioned table a
+    The decision lives in the table's ``_TABLE_META`` entry beside its
+    schema, so it is probed again whenever the path's file set or the
+    session changes. The shared-key assumption holds because fixture
+    tables are UNPARTITIONED: on a Hive-partitioned table a
     partition-pruning ``where`` WOULD change the split count, and a
     first filtered load would cache the wrong spread decision for later
     unfiltered loads — if partitioned tables are ever added, fold the

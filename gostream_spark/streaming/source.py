@@ -3,8 +3,10 @@
 ``file_stream`` replays a bounded fixture table as a stream (the
 standard replay harness for deterministic streaming tests; at
 production scale the same code points at a continuously-appended
-directory or a Kafka source). Schema comes from a one-off batch read
-of the same file — streaming file sources require an explicit schema.
+directory or a Kafka source). Streaming file sources require an
+explicit schema; it comes from ``io.table_schema``, the same
+per-session memo the batch loader uses, so a table is inferred once
+per session and file set whichever way it is read.
 """
 
 from __future__ import annotations
@@ -14,24 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gostream_spark.io import TABLES, ensure_session_conf, table_path
-
-
-def _is_directory(spark: SparkSession, path: str) -> bool:
-    """Directory check through the HADOOP FileSystem API, so the
-    file-vs-directory table-layout dispatch works on any filesystem a
-    Spark path can name (s3a://, hdfs://, ...), not just the driver's
-    local disk — os.path.isdir on an object-store URI is always False
-    and would silently mis-route directory tables back into the
-    0-row name-glob bug this dispatch exists to fix. Falls back to
-    os.path for environments without JVM access."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.getFileStatus(hpath).isDirectory())
-    except Exception:
-        return os.path.isdir(path)
+from gostream_spark.io import TABLES, ensure_session_conf, path_status, table_path, table_schema
 
 
 def file_stream(
@@ -45,14 +30,20 @@ def file_stream(
     # see io.ensure_session_conf: engine must work under any caller session
     ensure_session_conf(spark, events=name == "events")
     path = table_path(sf_dir, name)
-    schema = spark.read.parquet(path).schema
+    status = path_status(spark, path)
+    schema = table_schema(spark, path, status)
     # The streaming file source wants a directory. Two layouts exist:
     # a single-FILE table (the driver fixtures) is scoped inside its
     # parent dir with a name glob; a DIRECTORY table (the real-world
     # layout — every production table is a directory of part files,
     # and tools/restage_sharded.py's determinism axis) streams the
-    # directory itself, every shard included.
-    if _is_directory(spark, path):
+    # directory itself, every shard included. The check goes through
+    # the Hadoop FileSystem lookup (io.path_status): os.path.isdir on an
+    # object-store URI is always False and would silently mis-route
+    # directory tables back into the 0-row name-glob bug this dispatch
+    # exists to fix. os.path is only the fallback without JVM access.
+    is_dir = status[1].isDirectory() if status is not None else os.path.isdir(path)
+    if is_dir:
         reader = spark.readStream.schema(schema).option(
             "pathGlobFilter", "*.parquet"
         )

@@ -40,11 +40,17 @@ def _payload(queries: dict, **extra) -> dict:
 
 
 def test_summary_carries_per_query_seconds_for_current_bench_set():
-    """With the REAL current bench query set (sizes and names from the
-    committed record), the summary line must carry every per-query
-    timing and still fit the driver's tail budget."""
-    with open(os.path.join(REPO, "bench_out", "bench_latest.json")) as f:
-        record = json.load(f)
+    """With the REAL current bench query set (names from the registry,
+    independent of whatever the last bench run left in bench_out/), the
+    summary line must carry every per-query timing and still fit the
+    driver's tail budget. The made-up 12.345 s per query is wider than
+    any real sf0.1 timing, so the line is at least as long as a real
+    run's."""
+    from gostream_spark.registry import all_queries
+
+    names = sorted(n for n, q in all_queries().items() if q.bench)
+    assert len(names) == 38
+    record = _payload({n: 12.345 for n in names})
     line = build_summary_line(record)
     assert len(line) <= _SUMMARY_LINE_BUDGET
     parsed = json.loads(line)

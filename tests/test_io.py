@@ -6,6 +6,7 @@ import os
 import shutil
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from gostream_spark.io import load_table, memory_source, write_parquet
@@ -77,3 +78,106 @@ def test_hostile_caller_session_tz_realigned(spark, sf_dir):
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def _jobs_launched(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, counted through a unique job group."""
+    sc = spark.sparkContext
+    group = f"io-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_load_launches_no_schema_job(spark, sf_dir):
+    """Parquet schema inference launches a footer-reading Spark job;
+    io memoizes the inferred schema per session and file set, so a
+    second load of any table — batch or streaming — launches none."""
+    from gostream_spark.io import TABLES
+    from gostream_spark.streaming.source import file_stream
+
+    for name in TABLES:
+        load_table(spark, sf_dir, name)
+        assert _jobs_launched(spark, lambda: load_table(spark, sf_dir, name)) == 0, name
+    file_stream(spark, sf_dir, "events")
+    assert _jobs_launched(spark, lambda: file_stream(spark, sf_dir, "events")) == 0
+
+
+def _write_documents(spark, root: str, layout: str, rows, schema: str) -> None:
+    """One ``documents`` table under ``root``, as a directory of part
+    files (Spark's layout) or as a single parquet file (the fixtures')."""
+    path = os.path.join(root, "documents.parquet")
+    df = spark.createDataFrame(rows, schema)
+    if layout == "directory":
+        write_parquet(df, path)
+    else:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        pq.write_table(pa.Table.from_pandas(df.toPandas(), preserve_index=False), path)
+
+
+@pytest.mark.parametrize("layout", ["directory", "file"])
+def test_rewritten_table_is_inferred_again(spark, tmp_path, layout):
+    """A table overwritten at the same path with a different schema must
+    not be read with the memoized old schema — that would null out the
+    renamed columns silently. The file-set fingerprint changes, so the
+    second load infers again and sees the new schema and rows."""
+    root = str(tmp_path)
+    _write_documents(spark, root, layout, [(1, "a"), (2, "b")], "doc_id BIGINT, lang STRING")
+    first = load_table(spark, root, "documents")
+    assert first.columns == ["doc_id", "lang"]
+    assert sorted(map(tuple, first.collect())) == [(1, "a"), (2, "b")]
+
+    _write_documents(
+        spark, root, layout, [(3, 30), (4, 40), (5, 50)], "doc_id BIGINT, n_chars BIGINT"
+    )
+    second = load_table(spark, root, "documents")
+    assert second.columns == ["doc_id", "n_chars"]
+    assert sorted(map(tuple, second.collect())) == [(3, 30), (4, 40), (5, 50)]
+
+
+_RESTART_SCRIPT = """
+import sys, uuid
+sys.path.insert(0, sys.argv[1])
+from gostream_spark.io import load_table
+from gostream_spark.session import get_spark
+
+def jobs(spark):
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    load_table(spark, sys.argv[2], "nation")
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+counts = [jobs(spark), jobs(spark)]
+spark.stop()
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+counts.append(jobs(spark))
+spark.stop()
+print("JOBS", *counts)
+"""
+
+
+def test_restarted_session_infers_again(sf_dir):
+    """The memo is keyed by the live session: after ``spark.stop()`` and
+    a new session, the first load infers again (exactly one job), and
+    the repeat load before the stop launched none. Runs in its own
+    driver process so the shared test session stays up."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(TMP)
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    done = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, repo, sf_dir],
+        capture_output=True, text=True, timeout=600, env=env,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    line = [ln for ln in done.stdout.splitlines() if ln.startswith("JOBS ")][-1]
+    assert line.split()[1:] == ["1", "0", "1"]

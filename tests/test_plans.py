@@ -684,6 +684,35 @@ def test_exact_substr_gram_pipeline_runs_once(spark, sf_dir):
     assert final.count("Scan parquet") == 2
 
 
+def test_dsir_importance_weights_runs_two_corpus_passes(spark, sf_dir):
+    """The r16 claim that dsir_importance_weights reads the corpus in
+    TWO token passes (bucket stats, then per-doc scores), down from
+    three, pinned at runtime like the exact_substr_dedup pin above:
+    after execution, the final adaptive plan scans documents twice,
+    explodes tokens twice and materializes the bucket-stats exchange
+    once. The grand totals are windows over the 64-row stats frame, so
+    stats has a single consumer and no exchange repeats: the plan has
+    no ReusedExchange, and a third scan would mean the stats pipeline
+    is being rebuilt again."""
+    import re
+
+    df = get_query("dsir_importance_weights").fn(spark, sf_dir)
+    df.collect()  # a noop write would execute a CLONED QueryExecution
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Scan parquet") == 2
+    assert final.count("Generate explode(split(text") == 2
+    buckets = [
+        line
+        for line in final.splitlines()
+        if re.search(r"Exchange hashpartitioning\(bucket#\d+", line)
+        and "ReusedExchange" not in line
+    ]
+    assert len(buckets) == 1, f"bucket-stats exchange materialized {len(buckets)}x"
+    assert "ReusedExchange" not in final
+
+
 def test_branching_dag_reuses_one_exchange(spark, sf_dir):
     # fork-shaped consumer DAG: the orderkey shuffle materializes once
     # and the second branch reads it back as ReusedExchange. Under AQE
