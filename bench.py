@@ -101,8 +101,9 @@ def build_summary_line(payload: dict) -> str:
         "n_queries": len(payload["queries"]),
         "full_record": "bench_out/bench_latest.json",
     }
-    if "io_contaminated" in payload:
-        summary["io_contaminated"] = True  # reason in the full record
+    for flag in ("io_contaminated", "membw_contaminated"):
+        if flag in payload:
+            summary[flag] = True  # reason in the full record
     line = json.dumps(summary)
     if len(line) > _SUMMARY_LINE_BUDGET:
         del summary["queries"]

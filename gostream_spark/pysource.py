@@ -268,8 +268,8 @@ class _JsonlStreamWriter(DataSourceStreamWriter):
 
 
 class JsonlSinkDataSource(DataSource):
-    """Writer-only source: ``df.write.format("gostream_jsonl")`` /
-    ``sdf.writeStream.format("gostream_jsonl")``."""
+    """Writer-only source: ``format("gostream_jsonl")`` on a batch
+    writer or on the stream runner's sink."""
 
     @classmethod
     def name(cls) -> str:

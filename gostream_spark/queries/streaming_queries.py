@@ -22,6 +22,7 @@ from gostream_spark.streaming import (
     enrich_stream,
     file_stream,
     run_available_now,
+    run_foreach_batch,
     run_foreach_batch_parquet,
     running_count_stateful,
     windowed_counts,
@@ -867,7 +868,6 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     out = _scratch("sink")
-    ckpt = _scratch("ckpt")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         cand = batch_df.filter(F.col("source") != "src0")
@@ -882,18 +882,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         clean = cand.join(contaminated, "doc_id", "left_anti")
         clean.select("doc_id", "source").write.mode("append").parquet(out)
 
-    stream = file_stream(spark, sf_dir, "documents")
-    q = (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("streaming decontamination did not finish")
-    finally:
-        q.stop()
+    run_foreach_batch(file_stream(spark, sf_dir, "documents"), write_batch)
     result = (
         spark.read.parquet(out)
         .groupBy("source")
@@ -901,7 +890,6 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     shutil.rmtree(out, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
     return result
 
 
@@ -1570,17 +1558,7 @@ def streaming_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     mv_root = _scratch("sink")
     state, merge_batch = make_matview_merger(mv_root)
 
-    ckpt = _scratch("ckpt")
-    q = (
-        sdf.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(300), "matview stream did not finish"
-    finally:
-        q.stop()
+    run_foreach_batch(sdf, merge_batch)
     assert state["current"] is not None
     return spark.read.parquet(state["current"])
 

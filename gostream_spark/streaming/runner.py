@@ -1,10 +1,17 @@
 """Streaming execution helpers (SURVEY.md §2.1 S4/S5/S6, §2.7 T7/T8).
 
-``run_available_now`` drives a streaming pipeline to completion with
-the ``availableNow`` trigger (process everything currently available,
-then stop) — the deterministic harness that makes streaming results
-collectable and oracle-checkable. Sinks: in-memory table (S4) or
-foreachBatch→parquet (S5/S6).
+Every stream the engine runs goes through ONE lifecycle,
+``_run_stream``: fresh checkpoint, trigger choice (``availableNow``
+to process everything currently available and stop — the
+deterministic harness that makes streaming results collectable and
+oracle-checkable — or a processing-time trigger bounded by an
+observed-output predicate), start under the startup lock, a bounded
+wait that polls the state-memory guard, then progress capture, stop
+and checkpoint removal. The public runners differ only in their
+sink: ``run_available_now``/``run_until`` write an in-memory table
+(S4) and return its contents; ``run_foreach_batch`` hands each
+micro-batch to a function, and ``run_foreach_batch_parquet``/
+``run_foreach_batch_split`` are foreachBatch→parquet writers (S5/S6).
 
 Checkpoints live under ``.tmp/`` in the repo (gitignored); every run
 gets a fresh checkpoint + query name so reruns in one session never
@@ -14,6 +21,7 @@ collide.
 from __future__ import annotations
 
 import itertools
+import json
 import os
 from collections import deque
 import shutil
@@ -32,7 +40,7 @@ _counter = itertools.count()
 # (VERDICT r8: driver-side streaming bench readings need attributable
 # batch-level evidence — wall-clock + a CPU probe cannot decompose a
 # slow streaming trial into trigger/addBatch/state-commit time). Every
-# runner below appends one entry per finished query; bench.py clears
+# stream appends one entry when it finishes; bench.py clears
 # the deque before a timed trial and summarizes it after. The maxlen
 # bounds memory in long-lived non-bench processes (r9 advice: a full
 # pytest session runs hundreds of streaming queries and nothing else
@@ -45,8 +53,6 @@ def _capture_progress(q) -> None:
     """Best-effort: stash the finished query's StreamingQueryProgress
     list (parsed JSON) for the caller. Never raises — progress capture
     must not fail a result-bearing run."""
-    import json
-
     try:
         RECENT_PROGRESS.append(
             {
@@ -67,10 +73,10 @@ def _capture_progress(q) -> None:
 # usable gauge is `stateOperators.memoryUsedBytes`, which grows
 # linearly (160-235 B/row) with no saturation. This guard turns the
 # measured flip rule — migrate to RocksDBStateStoreProvider once state
-# passes ~0.5x heap — into a runtime check: every runner below polls
-# the query's progress while it runs and emits ONE RuntimeWarning per
-# query past the threshold. Default-on (`state_memory_guard=True`);
-# it is advisory only and never fails a result-bearing run.
+# passes ~0.5x heap — into a runtime check: every stream polls the
+# query's progress while it runs and emits ONE RuntimeWarning per
+# query past the threshold. It is advisory only and never fails a
+# result-bearing run.
 #
 # Scope notes: `memoryUsedBytes` is the loaded-store figure reported
 # by the provider — for the default HDFS-backed map store that is the
@@ -83,40 +89,17 @@ def _capture_progress(q) -> None:
 # this guard's driver-side reading is a same-order proxy — the flip
 # decision there should read the same two numbers from executor
 # metrics.
-# Env-overridable (GOSTREAM_STATE_GUARD_THRESHOLD): deployments that
-# want an earlier heads-up than the measured 0.5x flip point can
-# lower it without code changes; it also lets a harness force-fire
-# the guard on a small fixture to validate the wiring end-to-end.
-# The env var is re-read at CALL time (not import time) so a long-
-# lived session — or a test monkeypatching os.environ — sees changes
-# without re-importing; the module constant is the documented default.
 STATE_MEMORY_GUARD_THRESHOLD = 0.5
 
 
-def _guard_threshold() -> float:
-    try:
-        return float(
-            os.environ.get(
-                "GOSTREAM_STATE_GUARD_THRESHOLD",
-                STATE_MEMORY_GUARD_THRESHOLD,
-            )
-        )
-    except ValueError:
-        return STATE_MEMORY_GUARD_THRESHOLD
-
-
 def state_pressure_warning(
-    progress: dict | None,
-    max_heap_bytes: int,
-    threshold: float | None = None,
+    progress: dict | None, max_heap_bytes: int
 ) -> str | None:
     """Pure core of the guard (unit-testable on synthetic payloads):
     given one parsed StreamingQueryProgress dict, return a warning
     message if total stateOperators.memoryUsedBytes exceeds
-    ``threshold`` x ``max_heap_bytes``, else None. ``threshold=None``
-    resolves GOSTREAM_STATE_GUARD_THRESHOLD at call time."""
-    if threshold is None:
-        threshold = _guard_threshold()
+    ``STATE_MEMORY_GUARD_THRESHOLD`` x ``max_heap_bytes``, else None."""
+    threshold = STATE_MEMORY_GUARD_THRESHOLD
     if not progress or max_heap_bytes <= 0:
         return None
     used = sum(
@@ -159,8 +142,6 @@ def _poll_state_guard(q, max_heap_bytes: int, warned: set) -> None:
     if not max_heap_bytes or q.name in warned:
         return
     try:
-        import json
-
         lp = q.lastProgress
         msg = state_pressure_warning(
             json.loads(lp) if isinstance(lp, str) else lp, max_heap_bytes
@@ -249,8 +230,6 @@ _STALE_AGE_SEC = 6 * 3600
 def _sweep_stale() -> None:
     """Best-effort removal of scratch dirs older than 6h so repeated
     harness runs don't accumulate checkpoints/sinks in .tmp."""
-    import time
-
     try:
         for entry in os.listdir(_TMP_ROOT):
             if not entry.startswith(("ckpt-", "sink-")):
@@ -262,12 +241,107 @@ def _sweep_stale() -> None:
         pass
 
 
+def _run_stream(
+    sdf: DataFrame,
+    sink,
+    until=None,
+    timeout_sec: float = 300,
+    state_partitions: int | None = None,
+    poll_sec: float = 0.25,
+    trigger_ms: int = 100,
+) -> None:
+    """The one stream lifecycle. ``sink(writer) -> writer`` sets up the
+    sink on ``sdf.writeStream``; this adds a fresh checkpoint and the
+    trigger, starts the query under ``_start_with_pin``, waits, and
+    always captures progress and stops the query.
+
+    Without ``until`` the trigger is ``availableNow`` and the wait
+    ends when the query terminates. With ``until`` (a no-argument
+    predicate over the sink) the trigger is ``processingTime`` every
+    ``trigger_ms`` and the wait ends when ``until()`` holds, checked
+    every ``poll_sec``. Either way the wait runs in bounded slices so
+    the state-memory guard sees each committed batch's progress while
+    the query is still running (the cliff gives no latency
+    early-warning — the gauge has to be read before the stalling
+    commit, not after termination), a failed query re-raises its
+    exception, and ``TimeoutError`` is raised after ``timeout_sec``
+    rather than returning a partial sink. Each availableNow slice is
+    clamped to the remaining deadline so a ``timeout_sec`` < 2 is
+    honored (ADVICE r13)."""
+    spark = sdf.sparkSession
+    ckpt = _scratch("ckpt")
+    trigger = (
+        {"availableNow": True}
+        if until is None
+        else {"processingTime": f"{trigger_ms} milliseconds"}
+    )
+    q = _start_with_pin(
+        spark,
+        state_partitions,
+        lambda: sink(sdf.writeStream)
+        .option("checkpointLocation", ckpt)
+        .trigger(**trigger)
+        .start(),
+    )
+    max_heap = _max_heap_bytes(spark)
+    warned: set = set()
+    try:
+        deadline = time.time() + timeout_sec
+        while not (
+            until()
+            if until is not None
+            else q.awaitTermination(
+                min(2.0, max(deadline - time.time(), 0.1))
+            )
+        ):
+            if time.time() > deadline:
+                raise TimeoutError(
+                    f"streaming query {q.name or q.id} not done after "
+                    f"{timeout_sec}s; refusing to return a partial sink"
+                )
+            if q.exception() is not None:
+                raise q.exception()
+            _poll_state_guard(q, max_heap, warned)
+            if until is not None:
+                time.sleep(poll_sec)
+        _poll_state_guard(q, max_heap, warned)
+    finally:
+        _capture_progress(q)
+        q.stop()
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _run_to_memory(
+    sdf: DataFrame, output_mode: str, predicate=None, **run
+) -> DataFrame:
+    """Memory-sink stream (S4) whose contents come back as a batch
+    DataFrame: ``_run_stream`` with ``until`` = ``predicate`` over the
+    sink table, if given."""
+    spark = sdf.sparkSession
+    name = f"gs_mem_{next(_counter)}_{uuid.uuid4().hex[:8]}"
+    _run_stream(
+        sdf,
+        lambda w: w.format("memory").queryName(name).outputMode(output_mode),
+        until=None
+        if predicate is None
+        else lambda: predicate(spark.table(name)),
+        **run,
+    )
+    # Materialize off the memory sink (localCheckpoint: executor-side
+    # blocks, freed by the ContextCleaner once the result is
+    # unreferenced), then drop the temp view so event-scale sink
+    # contents are not pinned in driver memory for the session
+    # lifetime across repeated harness runs.
+    result = spark.table(name).localCheckpoint(eager=True)
+    spark.catalog.dropTempView(name)
+    return result
+
+
 def run_available_now(
     sdf: DataFrame,
     output_mode: str = "append",
     timeout_sec: int = 300,
     state_partitions: int | None = None,
-    state_memory_guard: bool = True,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink (S4)
     and return the sink's contents as a batch DataFrame.
@@ -291,11 +365,10 @@ def run_available_now(
     partitions follow state cardinality/size, not the batch shuffle
     width. Fresh checkpoint per run, so re-pinning is always safe.
 
-    ``state_memory_guard`` (default on) polls the query's progress
-    while it runs and emits one RuntimeWarning if state passes
-    ``STATE_MEMORY_GUARD_THRESHOLD`` (0.5x) of the JVM heap — the
-    measured provider-flip point (see the guard's module comment).
-    Advisory only; never fails the run.
+    Like every stream, the run polls the state-memory guard: one
+    RuntimeWarning if state passes ``STATE_MEMORY_GUARD_THRESHOLD``
+    (0.5x) of the JVM heap — the measured provider-flip point (see
+    the guard's module comment). Advisory only; never fails the run.
 
     Concurrency-safe: the pin is applied under ``_start_with_pin``'s
     startup lock — held from conf-set until the query's first batch
@@ -304,59 +377,12 @@ def run_available_now(
     and each consumes its own (proven by
     tests/test_streaming.py::test_runner_concurrent_queries).
     """
-    name = f"gs_mem_{next(_counter)}_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch("ckpt")
-    spark = sdf.sparkSession
-
-    def _start():
-        return (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    q = _start_with_pin(spark, state_partitions, _start)
-    max_heap = _max_heap_bytes(spark) if state_memory_guard else 0
-    warned: set = set()
-    try:
-        # Await in short slices so the state-memory guard sees each
-        # committed batch's progress while the query is still running
-        # (the cliff gives no latency early-warning — the gauge has to
-        # be read before the stalling commit, not after termination).
-        # Each slice is clamped to the remaining deadline so a
-        # caller-supplied timeout_sec < 2 is honored (ADVICE r13) —
-        # awaitTermination(2) unconditionally would block up to 2s
-        # past a sub-second deadline.
-        deadline = time.time() + timeout_sec
-        finished = q.awaitTermination(
-            min(2.0, max(timeout_sec, 0.1))
-        )
-        while not finished and time.time() < deadline:
-            _poll_state_guard(q, max_heap, warned)
-            finished = q.awaitTermination(
-                min(2.0, max(deadline - time.time(), 0.1))
-            )
-        _poll_state_guard(q, max_heap, warned)
-        if not finished:
-            raise TimeoutError(
-                f"streaming query {name!r} still running after "
-                f"{timeout_sec}s; refusing to return a partial sink"
-            )
-    finally:
-        _capture_progress(q)
-        q.stop()
-    # Materialize off the memory sink (localCheckpoint: executor-side
-    # blocks, freed by the ContextCleaner once the result is
-    # unreferenced), then drop the temp view so event-scale sink
-    # contents are not pinned in driver memory for the session
-    # lifetime across repeated harness runs.
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+    return _run_to_memory(
+        sdf,
+        output_mode,
+        timeout_sec=timeout_sec,
+        state_partitions=state_partitions,
+    )
 
 
 def run_until(
@@ -367,7 +393,6 @@ def run_until(
     poll_sec: float = 0.25,
     trigger_ms: int = 100,
     state_partitions: int | None = None,
-    state_memory_guard: bool = True,
 ) -> DataFrame:
     """Drive a streaming DataFrame with a continuous processing-time
     trigger until ``predicate(sink_df) -> bool`` holds, then stop and
@@ -390,44 +415,23 @@ def run_until(
     matters MORE here: the continuous trigger runs many more
     micro-batches, each paying the per-partition store floor.
     """
-    name = f"gs_mem_{next(_counter)}_{uuid.uuid4().hex[:8]}"
-    ckpt = _scratch("ckpt")
-    spark = sdf.sparkSession
+    return _run_to_memory(
+        sdf,
+        output_mode,
+        predicate,
+        timeout_sec=timeout_sec,
+        poll_sec=poll_sec,
+        trigger_ms=trigger_ms,
+        state_partitions=state_partitions,
+    )
 
-    def _start():
-        return (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime=f"{trigger_ms} milliseconds")
-            .start()
-        )
 
-    q = _start_with_pin(spark, state_partitions, _start)
-    max_heap = _max_heap_bytes(spark) if state_memory_guard else 0
-    warned: set = set()
-    try:
-        deadline = time.time() + timeout_sec
-        while True:
-            if predicate(spark.table(name)):
-                break
-            if time.time() > deadline:
-                raise TimeoutError(
-                    f"streaming query {name!r}: predicate not satisfied "
-                    f"after {timeout_sec}s"
-                )
-            if q.exception() is not None:
-                raise q.exception()
-            _poll_state_guard(q, max_heap, warned)
-            time.sleep(poll_sec)
-    finally:
-        _capture_progress(q)
-        q.stop()
-    result = spark.table(name).localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return result
+def run_foreach_batch(sdf: DataFrame, fn, timeout_sec: int = 300) -> None:
+    """Drive the stream to completion (availableNow) through
+    ``foreachBatch(fn)``: ``fn(batch_df, batch_id)`` gets each
+    micro-batch with the full batch API — the arbitrary-terminal-bolt
+    escape hatch. The sink is whatever ``fn`` writes."""
+    _run_stream(sdf, lambda w: w.foreachBatch(fn), timeout_sec=timeout_sec)
 
 
 def run_foreach_batch_parquet(
@@ -435,9 +439,7 @@ def run_foreach_batch_parquet(
 ) -> tuple[SparkSession, str]:
     """S5/S6: drive the stream through foreachBatch into a parquet
     sink (append per micro-batch). Returns (session, sink path) so the
-    caller can re-read the materialized output. foreachBatch is the
-    arbitrary-terminal-bolt escape hatch: the batch DataFrame handed
-    to the function supports the full batch API.
+    caller can re-read the materialized output.
 
     Delivery note: plain append per batch is AT-LEAST-ONCE under
     mid-run batch retry (no batch-id manifest); safe here only
@@ -446,28 +448,11 @@ def run_foreach_batch_parquet(
     survive replay use the batch-id-stamped writers instead
     (`make_matview_merger`, the gostream_jsonl 2PC sink)."""
     out = out_dir or _scratch("sink")
-    ckpt = _scratch("ckpt")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"foreachBatch stream into {out!r} still running after "
-                f"{timeout_sec}s; sink holds a PARTIAL batch set"
-            )
-    finally:
-        _capture_progress(q)
-        q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(sdf, write_batch, timeout_sec)
     return sdf.sparkSession, out
 
 
@@ -481,7 +466,6 @@ def run_foreach_batch_split(
     the stream transformations twice. Returns (session, main_path,
     side_path)."""
     main_out, side_out = _scratch("sink"), _scratch("sink")
-    ckpt = _scratch("ckpt")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Idempotent per-batch writes: the two sink writes are NOT one
@@ -502,21 +486,5 @@ def run_foreach_batch_split(
         finally:
             batch_df.unpersist()
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(
-                f"split stream into {main_out!r}/{side_out!r} still running "
-                f"after {timeout_sec}s; sinks hold a PARTIAL batch set"
-            )
-    finally:
-        _capture_progress(q)
-        q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_foreach_batch(sdf, write_batch, timeout_sec)
     return sdf.sparkSession, main_out, side_out

@@ -85,3 +85,12 @@ def test_summary_preserves_contamination_flag():
     )
     parsed = json.loads(line)
     assert parsed["io_contaminated"] is True
+
+
+def test_summary_preserves_membw_contamination_flag():
+    line = build_summary_line(
+        _payload({"q": 1.0}, membw_contaminated="reason text")
+    )
+    parsed = json.loads(line)
+    assert parsed["membw_contaminated"] is True
+    assert "io_contaminated" not in parsed

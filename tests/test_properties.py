@@ -333,7 +333,8 @@ def test_no_driver_side_antipatterns_in_package():
     (tiny-dim-table count; the streaming_session_timeout memory-sink
     stop predicate, which its docstring marks as test scaffolding
     outside the streaming plan — the BSP convergence check left the
-    list in r17, see allowed_count_sites note)."""
+    list in r17, see allowed_count_sites note), and streams started or
+    awaited only in streaming/runner.py."""
     import os
     import re
 
@@ -360,6 +361,13 @@ def test_no_driver_side_antipatterns_in_package():
                     bad.append((rel, pat))
             if re.search(r"(?<!itertools)\.count\(\)", src) and rel not in allowed_count_sites:
                 bad.append((rel, ".count()"))
+            # One stream lifecycle: every start/wait/stop goes through
+            # streaming/runner.py (progress capture, state guard,
+            # startup lock, checkpoint cleanup).
+            if rel != os.path.join("streaming", "runner.py") and re.search(
+                r"\.writeStream\b|awaitTermination\(", src
+            ):
+                bad.append((rel, "writeStream/awaitTermination"))
     assert not bad, bad
 
 

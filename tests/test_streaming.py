@@ -1342,21 +1342,17 @@ def test_join_state_plateaus_and_dedup_state_grows_under_shifted_replay(
     shutil.rmtree(str(root), ignore_errors=True)
 
 
-def test_state_memory_guard_pure_core(monkeypatch):
+def test_state_memory_guard_pure_core():
     """VERDICT r12 #3: the flip-rule runtime guard. The measured
     in-heap cliff (PERF.md flip-point probe) has NO latency
     early-warning, so the runner compares stateOperators.
     memoryUsedBytes to the JVM heap per batch and warns past 0.5x.
-    This exercises the pure core on synthetic progress payloads.
-    The env knob is scrubbed so the default-threshold assertions do
-    not silently depend on the harness environment (ADVICE r13), and
-    call-time re-reading is pinned explicitly below."""
+    This exercises the pure core on synthetic progress payloads."""
     from gostream_spark.streaming.runner import (
         STATE_MEMORY_GUARD_THRESHOLD,
         state_pressure_warning,
     )
 
-    monkeypatch.delenv("GOSTREAM_STATE_GUARD_THRESHOLD", raising=False)
     heap = 1024 * 1048576  # 1 GiB
     assert STATE_MEMORY_GUARD_THRESHOLD == 0.5
 
@@ -1388,17 +1384,6 @@ def test_state_memory_guard_pure_core(monkeypatch):
     assert state_pressure_warning(
         {"stateOperators": [{"numRowsTotal": 5}]}, heap
     ) is None
-
-    # The env knob is resolved at CALL time, so a monkeypatched
-    # environment changes the default threshold without re-import
-    # (this is how the capacity probe force-fires the guard on small
-    # fixtures via GOSTREAM_STATE_GUARD_THRESHOLD=1e-7).
-    monkeypatch.setenv("GOSTREAM_STATE_GUARD_THRESHOLD", "0.3")
-    assert state_pressure_warning(below, heap) is not None  # 0.4 > 0.3
-    monkeypatch.setenv("GOSTREAM_STATE_GUARD_THRESHOLD", "not-a-float")
-    assert state_pressure_warning(below, heap) is None  # falls back 0.5
-    # An explicit threshold argument always wins over the env.
-    assert state_pressure_warning(below, heap, threshold=0.1) is not None
 
 
 def test_state_memory_guard_warns_once_per_query():
@@ -1438,3 +1423,29 @@ def test_state_memory_guard_warns_once_per_query():
             raise RuntimeError("gateway down")
 
     _poll_state_guard(_DeadQuery(), heap, set())  # must not raise
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "streaming_decontaminate_anti",
+        "streaming_matview_incremental",
+        "pysink_stream_roundtrip",
+    ],
+)
+def test_registered_streams_record_progress(spark, sf_dir, name):
+    """Streams the query modules run go through the runner's one
+    lifecycle, so each lands in RECENT_PROGRESS (the per-query
+    monitoring record bench.py summarizes) with its batches, and its
+    output still equals the batch oracle."""
+    from gostream_spark.registry import get_query
+    from gostream_spark.streaming.runner import RECENT_PROGRESS
+    from tests.parity import compare
+
+    q = get_query(name)
+    RECENT_PROGRESS.clear()
+    df = q.fn(spark, sf_dir)
+    assert any(stream["batches"] for stream in RECENT_PROGRESS), list(
+        RECENT_PROGRESS
+    )
+    compare(df, q.oracle, sf_dir)
