@@ -44,7 +44,9 @@ def connected_components(
     ``nodes``: single-column DataFrame of node ids. ``edges``:
     two-column DataFrame of undirected edges (any names). Returns
     (id, cluster). Deterministic: the fixpoint is unique regardless
-    of partitioning or iteration interleaving.
+    of partitioning or iteration interleaving. Raises ``RuntimeError``
+    if the labels have not reached the fixpoint within ``max_iter``
+    propagations (rounded up to even).
     """
     a, b = edges.columns
     e = edges.select(F.col(a).alias("src"), F.col(b).alias("dst"))
@@ -109,7 +111,13 @@ def connected_components(
     # passing an odd bound sized to a graph's diameter always gets AT
     # LEAST max_iter propagations (ADVICE r16: the old floor-division
     # form ran max_iter-1 on odd budgets).
-    for it in range(max((max_iter + 1) // 2, 1)):
+    #
+    # A budget that runs out while the last cycle still moved labels
+    # raises instead of returning unconverged labels as clusters: a
+    # graph deeper than the budget (a long chain) would otherwise be
+    # silently split into many clusters.
+    cycles = max((max_iter + 1) // 2, 1)
+    for it in range(cycles):
         p1 = propagate(labels, first=it == 0).select("id", "lbl")
         p2 = propagate(p1)
         obs = Observation(f"cc_changed_{next(_OBS_IDS)}")
@@ -119,6 +127,15 @@ def connected_components(
         )
         p2 = p2.localCheckpoint(eager=True)
         labels = p2.select("id", "lbl")
-        if obs.get["changed"] == 0:
+        changed = obs.get["changed"]
+        if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge within its budget of "
+            f"{cycles} cycles ({2 * cycles} propagations, max_iter="
+            f"{max_iter}): {changed} labels still changed in the last "
+            "cycle. The graph is deeper than the budget; raise max_iter "
+            "above its diameter."
+        )
     return labels.select("id", F.col("lbl").alias("cluster"))

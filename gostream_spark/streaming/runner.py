@@ -1,21 +1,24 @@
 """Streaming execution helpers (SURVEY.md §2.1 S4/S5/S6, §2.7 T7/T8).
 
 Every stream the engine runs goes through ONE lifecycle,
-``_run_stream``: fresh checkpoint, trigger choice (``availableNow``
-to process everything currently available and stop — the
-deterministic harness that makes streaming results collectable and
-oracle-checkable — or a processing-time trigger bounded by an
+``_run_stream``: fresh (or caller-owned) checkpoint, trigger choice
+(``availableNow`` to process everything currently available and stop
+— the deterministic harness that makes streaming results collectable
+and oracle-checkable — or a processing-time trigger bounded by an
 observed-output predicate), start under the startup lock, a bounded
 wait that polls the state-memory guard, then progress capture, stop
-and checkpoint removal. The public runners differ only in their
-sink: ``run_available_now``/``run_until`` write an in-memory table
-(S4) and return its contents; ``run_foreach_batch`` hands each
+and removal of a fresh checkpoint. The public runners differ only in
+their sink: ``run_available_now``/``run_until`` write an in-memory
+table (S4) and return its contents; ``run_foreach_batch`` hands each
 micro-batch to a function, and ``run_foreach_batch_parquet``/
 ``run_foreach_batch_split`` are foreachBatch→parquet writers (S5/S6).
 
 Checkpoints live under ``.tmp/`` in the repo (gitignored); every run
 gets a fresh checkpoint + query name so reruns in one session never
-collide.
+collide, and the fresh checkpoint is removed however the run ends.
+The one exception is a caller-owned checkpoint passed to
+``_run_stream`` (the crash/restart tests): that directory is resumed
+if it holds an earlier run's offsets and state, and never removed.
 """
 
 from __future__ import annotations
@@ -249,11 +252,19 @@ def _run_stream(
     state_partitions: int | None = None,
     poll_sec: float = 0.25,
     trigger_ms: int = 100,
+    checkpoint: str | None = None,
 ) -> None:
     """The one stream lifecycle. ``sink(writer) -> writer`` sets up the
-    sink on ``sdf.writeStream``; this adds a fresh checkpoint and the
+    sink on ``sdf.writeStream``; this adds the checkpoint and the
     trigger, starts the query under ``_start_with_pin``, waits, and
     always captures progress and stops the query.
+
+    Without ``checkpoint`` the run gets a fresh ``.tmp/ckpt-*``
+    directory that is removed on every exit path, failures included.
+    With ``checkpoint`` (a caller-owned path) the query starts from or
+    resumes that directory — offsets, commits and state of earlier
+    runs — and the runner never removes it: the restart half of the
+    exactly-once contract.
 
     Without ``until`` the trigger is ``availableNow`` and the wait
     ends when the query terminates. With ``until`` (a no-argument
@@ -269,23 +280,24 @@ def _run_stream(
     clamped to the remaining deadline so a ``timeout_sec`` < 2 is
     honored (ADVICE r13)."""
     spark = sdf.sparkSession
-    ckpt = _scratch("ckpt")
+    ckpt = checkpoint or _scratch("ckpt")
     trigger = (
         {"availableNow": True}
         if until is None
         else {"processingTime": f"{trigger_ms} milliseconds"}
     )
-    q = _start_with_pin(
-        spark,
-        state_partitions,
-        lambda: sink(sdf.writeStream)
-        .option("checkpointLocation", ckpt)
-        .trigger(**trigger)
-        .start(),
-    )
-    max_heap = _max_heap_bytes(spark)
-    warned: set = set()
+    q = None
     try:
+        q = _start_with_pin(
+            spark,
+            state_partitions,
+            lambda: sink(sdf.writeStream)
+            .option("checkpointLocation", ckpt)
+            .trigger(**trigger)
+            .start(),
+        )
+        max_heap = _max_heap_bytes(spark)
+        warned: set = set()
         deadline = time.time() + timeout_sec
         while not (
             until()
@@ -306,9 +318,11 @@ def _run_stream(
                 time.sleep(poll_sec)
         _poll_state_guard(q, max_heap, warned)
     finally:
-        _capture_progress(q)
-        q.stop()
-    shutil.rmtree(ckpt, ignore_errors=True)
+        if q is not None:
+            _capture_progress(q)
+            q.stop()
+        if checkpoint is None:
+            shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _run_to_memory(

@@ -51,3 +51,58 @@ def test_odd_max_iter_budget_rounds_up(spark):
         for r in connected_components(nodes, chain, max_iter=3).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
+
+
+def _union_find(nodes, edges):
+    """Reference labels: each node -> the minimum id of its component."""
+    parent = {n: n for n in nodes}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in nodes}
+
+
+def _components(spark, nodes, edges, **kw):
+    from gostream_spark.operators.components import connected_components
+
+    got = connected_components(
+        spark.createDataFrame([(n,) for n in nodes], "id BIGINT"),
+        spark.createDataFrame(edges, "src BIGINT, dst BIGINT"),
+        **kw,
+    )
+    return {r.id: r.cluster for r in got.collect()}
+
+
+def test_path_deeper_than_budget_raises(spark):
+    """A 41-node path has diameter 40; the default budget (max_iter=20,
+    10 cycles) cannot close it. The unconverged labels (21 clusters)
+    must not come back as an answer."""
+    import pytest
+
+    nodes = list(range(1, 42))
+    path = [(i, i + 1) for i in range(1, 41)]
+    with pytest.raises(RuntimeError, match="budget of 10 cycles"):
+        _components(spark, nodes, path)
+
+
+def test_star_and_path_plus_clique_within_budget_are_exact(spark):
+    """Graphs within the budget still come back exact, checked against
+    a union-find: a 30-leaf star (diameter 2), and a 12-node path plus
+    a 6-clique and a singleton under a budget just deep enough
+    (max_iter=12 for diameter 11)."""
+    star = [(1, leaf) for leaf in range(2, 32)]
+    assert _components(spark, list(range(1, 32)), star) == _union_find(
+        range(1, 32), star
+    )
+    nodes = list(range(1, 20))
+    path = [(i, i + 1) for i in range(1, 12)]
+    clique = [(a, b) for a in range(13, 19) for b in range(a + 1, 19)]
+    got = _components(spark, nodes, path + clique, max_iter=12)
+    assert got == _union_find(nodes, path + clique)

@@ -4,31 +4,18 @@ what a production deploy monitors instead of a termination condition."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from gostream_spark.io import load_table
-from gostream_spark.streaming import file_stream, windowed_counts
+from gostream_spark.streaming import file_stream, run_available_now, windowed_counts
+from gostream_spark.streaming.runner import RECENT_PROGRESS
 
 
-def test_streaming_progress_reports_input_rows(spark, sf_dir, tmp_path):
+def test_streaming_progress_reports_input_rows(spark, sf_dir):
     n_events = load_table(spark, sf_dir, "events").count()
     ev = file_stream(spark, sf_dir, "events")
-    agg = windowed_counts(ev)
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(f"obs_{uuid.uuid4().hex[:8]}")
-        .outputMode("complete")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
-    progresses = [p for p in q.recentProgress if p is not None]
+    run_available_now(windowed_counts(ev), output_mode="complete", timeout_sec=120)
+    progresses = [p for p in RECENT_PROGRESS[-1]["batches"] if p is not None]
     assert progresses, "expected at least one progress record"
     total_in = sum(p["numInputRows"] for p in progresses)
     assert total_in == n_events, (

@@ -334,12 +334,15 @@ def test_no_driver_side_antipatterns_in_package():
     stop predicate, which its docstring marks as test scaffolding
     outside the streaming plan — the BSP convergence check left the
     list in r17, see allowed_count_sites note), and streams started or
-    awaited only in streaming/runner.py."""
+    awaited only in streaming/runner.py — in the package AND in tests/,
+    matched on code tokens (string literals and comments, this
+    test's own patterns included, do not count)."""
     import os
     import re
+    import tokenize
 
-    pkg = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                       "gostream_spark")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "gostream_spark")
     # r17: operators/components.py left the list — its BSP convergence
     # check now rides the checkpoint job as an observe metric, so a
     # reappearing DataFrame.count() there is a regression this catches.
@@ -361,13 +364,26 @@ def test_no_driver_side_antipatterns_in_package():
                     bad.append((rel, pat))
             if re.search(r"(?<!itertools)\.count\(\)", src) and rel not in allowed_count_sites:
                 bad.append((rel, ".count()"))
-            # One stream lifecycle: every start/wait/stop goes through
-            # streaming/runner.py (progress capture, state guard,
-            # startup lock, checkpoint cleanup).
-            if rel != os.path.join("streaming", "runner.py") and re.search(
-                r"\.writeStream\b|awaitTermination\(", src
-            ):
-                bad.append((rel, "writeStream/awaitTermination"))
+    # One stream lifecycle: every start/wait/stop goes through
+    # streaming/runner.py (progress capture, state guard, startup lock,
+    # checkpoint cleanup) — the crash/restart tests included.
+    runner = os.path.join(pkg, "streaming", "runner.py")
+    for top in (pkg, os.path.join(repo, "tests")):
+        for root, _dirs, files in os.walk(top):
+            for fn in files:
+                path = os.path.join(root, fn)
+                if not fn.endswith(".py") or path == runner:
+                    continue
+                with open(path) as f:
+                    code = [
+                        t for t in tokenize.generate_tokens(f.readline)
+                        if t.type not in (tokenize.STRING, tokenize.COMMENT, tokenize.NL)
+                    ]
+                for a, b in zip(code, code[1:]):
+                    if (a.string, b.string) in (
+                        (".", "writeStream"), ("awaitTermination", "(")
+                    ):
+                        bad.append((os.path.relpath(path, repo), a.start[0]))
     assert not bad, bad
 
 

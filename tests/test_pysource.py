@@ -214,30 +214,14 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path):
     import glob
     import json
     import os
-    import time
 
     from gostream_spark.pysource import ensure_registered
+    from gostream_spark.streaming.runner import _run_stream
 
     ensure_registered(spark)
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(out)
-
-    def start():
-        stream = (
-            spark.readStream.format("gostream_synth")
-            .option("rows", 2000)
-            .option("batch", 200)
-            .load()
-            .select("event_id", "bucket", "amount")
-        )
-        return (
-            stream.writeStream.format("gostream_jsonl")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(processingTime="100 milliseconds")
-            .start()
-        )
 
     def committed_rows():
         return sum(
@@ -246,22 +230,32 @@ def test_stream_checkpoint_recovery_exactly_once(spark, tmp_path):
             for _ in open(p)
         )
 
-    q = start()
-    # Generous deadlines: they only bound the poll loop (a fast run
-    # exits as soon as the row target lands); a loaded CI box sharing
-    # cores with other Spark jobs needs the headroom (this test once
-    # flaked at 60 s under two concurrent sweep processes).
-    deadline = time.time() + 180
-    while committed_rows() < 400 and time.time() < deadline:
-        time.sleep(0.1)
-    q.stop()  # crash mid-stream: some batches committed, one in flight
+    # Generous deadlines: they only bound the wait (a fast run stops
+    # as soon as the row target lands); a loaded CI box sharing cores
+    # with other Spark jobs needs the headroom (this test once flaked
+    # at 60 s under two concurrent sweep processes).
+    def run_until_rows(n: int, timeout_sec: int) -> None:
+        stream = (
+            spark.readStream.format("gostream_synth")
+            .option("rows", 2000)
+            .option("batch", 200)
+            .load()
+            .select("event_id", "bucket", "amount")
+        )
+        _run_stream(
+            stream,
+            lambda w: w.format("gostream_jsonl").option("path", out),
+            until=lambda: committed_rows() >= n,
+            timeout_sec=timeout_sec,
+            poll_sec=0.1,
+            checkpoint=ckpt,
+        )
+
+    # crash mid-stream: some batches committed, one in flight
+    run_until_rows(400, timeout_sec=180)
     assert committed_rows() >= 400, "expected partial progress before stop"
 
-    q2 = start()  # recovery: same checkpoint, same sink
-    deadline = time.time() + 240
-    while committed_rows() < 2000 and time.time() < deadline:
-        time.sleep(0.15)
-    q2.stop()
+    run_until_rows(2000, timeout_sec=240)  # recovery: same checkpoint, same sink
 
     ids = sorted(
         json.loads(line)["event_id"]
@@ -381,31 +375,22 @@ def test_stream_writer_crashed_publish_without_marker_is_swept(tmp_path):
 def test_jsonl_stream_sink_survives_whole_driver_kill(spark, tmp_path):
     """Driver-loss at the STREAM level for the 2PC jsonl sink (the
     sink-side twin of test_streaming's matview driver-kill): a
-    separate driver process (tests/jsonl_sink_restart_harness.py)
-    hard-kills its JVM once two batch manifests have committed; a
-    fresh process on the same checkpoint + sink dir must finish with
-    EXACTLY the synthetic stream's rows committed — every event_id
-    once, replayed batches deduplicated by their manifests."""
+    separate driver process (the ``jsonl`` scenario of
+    tests/stream_crash_harness.py) hard-kills its JVM once two batch
+    manifests have committed; a fresh process on the same checkpoint +
+    sink dir must finish with EXACTLY the synthetic stream's rows
+    committed — every event_id once, replayed batches deduplicated by
+    their manifests."""
     import json
-    import os
-    import subprocess
-    import sys
 
     from gostream_spark.queries.python_datasource import open_shards
+    from tests.stream_crash_harness import launch
 
     rows = 3000
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    harness = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "jsonl_sink_restart_harness.py")
 
-    def run(mode: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, out, ckpt, str(rows)],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    crashed = run("crash")
+    crashed = launch("jsonl", "crash", out, ckpt, rows)
     assert crashed.returncode != 0, (
         f"crash run must die\n{crashed.stdout}\n{crashed.stderr}"
     )
@@ -413,7 +398,7 @@ def test_jsonl_stream_sink_survives_whole_driver_kill(spark, tmp_path):
     assert committed_mid, "crash run must leave committed batches"
     assert len(committed_mid) < rows, "halt must precede completion"
 
-    recovered = run("recover")
+    recovered = launch("jsonl", "recover", out, ckpt, rows)
     assert recovered.returncode == 0, (
         f"recovery failed rc={recovered.returncode}\n"
         f"{recovered.stdout}\n{recovered.stderr}"

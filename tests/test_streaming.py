@@ -14,8 +14,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from gostream_spark.streaming.ops import dedup_stream, windowed_counts
-from gostream_spark.streaming.runner import run_available_now
+from gostream_spark.streaming.runner import (
+    RECENT_PROGRESS,
+    _run_stream,
+    run_available_now,
+    run_until,
+)
 from gostream_spark.streaming.source import rate_stream
+from tests.stream_crash_harness import launch
 
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
 
@@ -48,6 +54,58 @@ def _stream_dir(spark, path):
         .option("latestFirst", "false")
         .parquet(path)
     )
+
+
+def _append_parquet(out, output_mode="append"):
+    """``_run_stream`` sink: foreachBatch appending each batch to ``out``."""
+    return lambda w: w.foreachBatch(
+        lambda batch_df, _batch_id: batch_df.write.mode("append").parquet(out)
+    ).outputMode(output_mode)
+
+
+def _stage_quarters(df, stage, parts=range(4)):
+    """Append one parquet file per ``event_id % 4`` residue in ``parts``
+    to ``stage``: a deterministic file-per-batch sequence for streams
+    read with maxFilesPerTrigger=1."""
+    for i in parts:
+        df.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(stage)
+    return stage
+
+
+def _batch_dirs(root):
+    return sorted(os.path.basename(p) for p in glob.glob(f"{root}/b*"))
+
+
+def _latest(spark, root, key, value):
+    """Merge update-mode deltas in ``root/b<id>``: latest batch wins per key."""
+    latest = {}
+    for d in sorted(glob.glob(f"{root}/b*")):  # sorted => ascending batch id
+        for r in spark.read.parquet(d).collect():
+            latest[r[key]] = r[value]
+    return latest
+
+
+def _counts(df, key, alias):
+    """Batch ground truth: rows per ``key``."""
+    return {
+        r[key]: r[alias]
+        for r in df.groupBy(key)
+        .agg(F.count(F.lit(1)).cast("long").alias(alias))
+        .collect()
+    }
+
+
+def _state_files(ckpt):
+    """Committed state versions under a checkpoint: *.delta/*.snapshot
+    (HDFS-backed store), *.changelog/*.zip (RocksDB changelog
+    checkpointing)."""
+    return [
+        p
+        for pat in ("*.delta", "*.snapshot", "*.changelog", "*.zip")
+        for p in glob.glob(f"{ckpt}/state/**/{pat}", recursive=True)
+    ]
 
 
 def test_dedup_state_spans_batches(spark):
@@ -194,18 +252,9 @@ def test_checkpoint_recovery_exactly_once(spark):
     def run_once():
         schema = spark.read.parquet(src).schema
         sdf = spark.readStream.schema(schema).parquet(src).select("event_id")
-
-        def write_batch(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            sdf.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            sdf, _append_parquet(out), timeout_sec=120, checkpoint=ckpt
         )
-        q.awaitTermination(120)
-        q.stop()
 
     write_file(0, [1, 2, 3])
     run_once()
@@ -246,22 +295,18 @@ def test_processing_time_trigger(spark):
     """T7: processingTime trigger — micro-batches fire on the wall
     clock; the rate spout produces rows while the query runs."""
     df = rate_stream(spark, rows_per_second=100).select("value")
-    name = f"rate_sink_{uuid.uuid4().hex[:8]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(processingTime="500 milliseconds")
-        .start()
+    active = []
+
+    def rows_arrived(sink_df) -> bool:
+        active.append(bool(spark.streams.active))
+        return sink_df.count() > 0
+
+    out = run_until(
+        df, rows_arrived, output_mode="append", timeout_sec=20,
+        poll_sec=0.5, trigger_ms=500,
     )
-    try:
-        deadline = time.time() + 20
-        while time.time() < deadline and spark.table(name).count() == 0:
-            time.sleep(0.5)
-        assert spark.table(name).count() > 0
-        assert q.isActive
-    finally:
-        q.stop()
+    assert out.count() > 0
+    assert active[-1]  # still running when its rows were observed
 
 
 def test_session_windows_merge_across_batches(spark):
@@ -361,19 +406,12 @@ def test_stateful_counts_survive_query_restart(spark):
     # The memory sink refuses checkpoint recovery (not fault-tolerant);
     # a restartable deploy uses a durable sink — foreachBatch->parquet.
     def run_once():
-        def write_batch(batch_df, batch_id):
-            batch_df.write.mode("append").parquet(out)
-
-        q = (
-            running_count_stateful(_stream_dir(spark, d))
-            .writeStream.foreachBatch(write_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            running_count_stateful(_stream_dir(spark, d)),
+            _append_parquet(out, "update"),
+            timeout_sec=120,
+            checkpoint=ckpt,
         )
-        assert q.awaitTermination(120), "restart run did not finish"
-        q.stop()
         rows = spark.read.parquet(out).collect()
         latest: dict[int, int] = {}
         for r in rows:
@@ -411,7 +449,6 @@ def test_stateful_counts_on_rocksdb_state_store(spark):
     spillable — the config SCALE.md names for beyond-heap state).
     Asserts the provider is actually engaged via the query's state
     operator metrics, not just that the conf was set."""
-    import json as _json
     from datetime import datetime
 
     from gostream_spark.streaming.ops import running_count_stateful
@@ -425,24 +462,13 @@ def test_stateful_counts_on_rocksdb_state_store(spark):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        name = f"gs_rocks_{uuid.uuid4().hex[:8]}"
-        q = (
-            running_count_stateful(_stream_dir(spark, d))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option(
-                "checkpointLocation",
-                os.path.join(TMP, f"ckpt-rocks-{uuid.uuid4().hex[:8]}"),
-            )
-            .trigger(availableNow=True)
-            .start()
+        res = run_available_now(
+            running_count_stateful(_stream_dir(spark, d)),
+            output_mode="update",
+            timeout_sec=120,
         )
-        assert q.awaitTermination(120), "rocksdb run did not finish"
-        progress = [_json.loads(p.json) for p in q.recentProgress]
-        q.stop()
-        got = {r.user_id: r.n_events for r in spark.table(name).collect()}
-        spark.catalog.dropTempView(name)
+        progress = RECENT_PROGRESS[-1]["batches"]
+        got = {r.user_id: r.n_events for r in res.collect()}
         assert got == {1: 2, 2: 1}
         mem = [
             s["customMetrics"]
@@ -494,34 +520,15 @@ def test_tumbling_counts_available_now_is_single_batch(spark, sf_dir):
     micro-batch — if this ever splits into several, the fixed
     micro-batch machinery (~0.35 s each: WAL, planning, state commit)
     multiplies and the bench number degrades for no plan reason."""
-    import shutil
-    import uuid
-
     from gostream_spark.queries.streaming_queries import windowed_counts
-    from gostream_spark.streaming import runner
     from gostream_spark.streaming.source import file_stream
 
     ev = file_stream(spark, sf_dir, "events")
-    name = f"pin_batches_{uuid.uuid4().hex[:6]}"
-    ckpt = runner._scratch("ckpt")
-    q = (
-        windowed_counts(ev)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        assert q.awaitTermination(120)
-    finally:
-        q.stop()
-    progresses = [p for p in q.recentProgress if p["numInputRows"] > 0]
-    spark.catalog.dropTempView(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
+    run_available_now(windowed_counts(ev), output_mode="complete", timeout_sec=120)
+    batches = RECENT_PROGRESS[-1]["batches"]
+    progresses = [p for p in batches if p["numInputRows"] > 0]
     assert len(progresses) == 1, [
-        (p["batchId"], p["numInputRows"]) for p in q.recentProgress
+        (p["batchId"], p["numInputRows"]) for p in batches
     ]
 
 
@@ -660,18 +667,11 @@ def test_stateful_crash_after_state_commit_recovers_exactly_once(
     state version (not the orphaned one the crashed attempt
     committed), and the merged sink output must equal the one-shot
     batch aggregate — exactly-once despite the at-least-once replay."""
-    import glob
-
     ev = (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
         .select("event_id", "event_type")
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     os.makedirs(out)
@@ -692,7 +692,7 @@ def test_stateful_crash_after_state_commit_recovers_exactly_once(
         finally:
             batch_df.unpersist()
 
-    def start():
+    def run():
         sdf = (
             spark.readStream.schema("event_id long, event_type string")
             .option("maxFilesPerTrigger", 1)
@@ -701,41 +701,69 @@ def test_stateful_crash_after_state_commit_recovers_exactly_once(
         counts = sdf.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("long").alias("n")
         )
-        return (
-            counts.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_stream(
+            counts,
+            lambda w: w.foreachBatch(sink).outputMode("update"),
+            checkpoint=ckpt,
         )
 
-    q = start()
     with pytest.raises(Exception, match="injected crash after state commit"):
-        q.awaitTermination(300)
+        run()
         raise AssertionError("query must fail on the injected crash")
-    q.stop()
-    crashed_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/b*"))
+    crashed_dirs = _batch_dirs(out)
     assert "b2" not in crashed_dirs, "sink must have nothing for the dead batch"
     assert not bomb["armed"], "the bomb must actually have gone off"
 
-    q2 = start()  # recovery: same checkpoint, same sink
-    assert q2.awaitTermination(300), "recovered run must finish"
-    q2.stop()
+    run()  # recovery: same checkpoint, same sink
 
-    dirs = sorted(glob.glob(f"{out}/b*"))
-    assert [os.path.basename(d) for d in dirs] == ["b0", "b1", "b2", "b3"]
+    assert _batch_dirs(out) == ["b0", "b1", "b2", "b3"]
     # Merge update-mode deltas: latest batch wins per key.
-    latest: dict[str, int] = {}
-    for d in dirs:  # sorted => ascending batch id
-        for r in spark.read.parquet(d).collect():
-            latest[r.event_type] = r.n
-    truth = {
-        r.event_type: r.n
-        for r in ev.groupBy("event_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    }
+    latest = _latest(spark, out, "event_type", "n")
+    truth = _counts(ev, "event_type", "n")
     assert latest == truth, (latest, truth)
+
+
+def test_failed_stream_removes_its_checkpoint(spark, sf_dir):
+    """A stream that fails must not leave its fresh ``ckpt-*``
+    directory under the runner's scratch root: the runner removes its
+    own checkpoint on every exit path, failures included."""
+    from gostream_spark.streaming import runner
+    from gostream_spark.streaming.source import file_stream
+
+    os.makedirs(runner._TMP_ROOT, exist_ok=True)
+
+    def ckpts():
+        return {e for e in os.listdir(runner._TMP_ROOT) if e.startswith("ckpt-")}
+
+    def fail(batch_df, batch_id):
+        raise RuntimeError("injected batch failure")
+
+    before = ckpts()
+    with pytest.raises(Exception, match="injected batch failure"):
+        runner.run_foreach_batch(file_stream(spark, sf_dir, "events"), fail)
+    assert ckpts() - before == set()
+
+
+def test_task_retry_mid_batch_is_exactly_once(spark, tmp_path, sf_dir):
+    """Task-level failure inside a micro-batch: under local[2,2] (one
+    retry per task) a Python UDF in the stream's projection fails
+    every first task attempt after it has emitted rows (the ``retry``
+    scenario of tests/stream_crash_harness.py). The retried attempts
+    must commit instead, and ``run_foreach_batch_parquet``'s sink must
+    hold every staged event_id exactly once — the failed attempts'
+    partial output never becomes visible."""
+    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
+        "event_id"
+    )
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
+    out, markers = str(tmp_path / "sink"), str(tmp_path / "markers")
+    os.makedirs(markers)
+
+    run = launch("retry", "clean", stage, out, markers)
+    assert run.returncode == 0, (run.returncode, run.stdout, run.stderr)
+    assert os.listdir(markers), "no first task attempt failed"
+    got = sorted(r.event_id for r in spark.read.parquet(out).collect())
+    assert got == sorted(r.event_id for r in ev.collect())
 
 
 def test_file_stream_reads_directory_table(spark, tmp_path, sf_dir):
@@ -767,51 +795,33 @@ def test_file_stream_reads_directory_table(spark, tmp_path, sf_dir):
 def test_stateful_state_survives_whole_driver_kill(spark, tmp_path, sf_dir, store):
     """Failure injection on the STATE STORE across DRIVER loss: the
     running-count ``applyInPandasWithState`` query runs in a separate
-    driver process (tests/stateful_restart_harness.py) that halt()s
-    its JVM after the state store committed batch 2's state version
-    but before the sink saw batch 2 — no shutdown hooks, no graceful
-    stop. A fresh process on the same checkpoint must reload the last
-    COMMITTED state version (post-batch-1, not the crashed attempt's
-    orphan), replay batch 2 against it, and finish with per-key
-    cumulative counts equal to the one-shot batch ground truth. This
-    is the state-side twin of test_matview_survives_whole_driver_kill
-    (sink side) and the whole-process upgrade of
+    driver process (the ``stateful`` scenario of
+    tests/stream_crash_harness.py) that halt()s its JVM after the
+    state store committed batch 2's state version but before the sink
+    saw batch 2 — no shutdown hooks, no graceful stop. A fresh process
+    on the same checkpoint must reload the last COMMITTED state
+    version (post-batch-1, not the crashed attempt's orphan), replay
+    batch 2 against it, and finish with per-key cumulative counts
+    equal to the one-shot batch ground truth. This is the state-side
+    twin of test_matview_survives_whole_driver_kill (sink side) and
+    the whole-process upgrade of
     test_stateful_crash_after_state_commit_recovers_exactly_once
     (in-process restart). Runs on BOTH providers: the HDFS-backed
     default and RocksDB with changelog checkpointing — the store a
     100 TB deployment runs, whose recovery path (replay changelog
     deltas onto the last snapshot) is exactly what a mid-batch
     halt() stresses."""
-    import glob
-    import subprocess
-    import sys
-
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
         "event_id", "user_id"
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-    out = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    harness = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "stateful_restart_harness.py"
-    )
-
-    def run(mode: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, stage, out, ckpt, store],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    crashed = run("crash")
+    crashed = launch("stateful", "crash", stage, out, ckpt, store=store)
     assert crashed.returncode != 0, (
         f"crash run must die, got rc=0\n{crashed.stdout}\n{crashed.stderr}"
     )
-    crashed_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/b*"))
+    crashed_dirs = _batch_dirs(out)
     assert crashed_dirs == ["b0", "b1"], (
         f"halt fired between state commit and sink write for b2; sink "
         f"must hold exactly b0,b1 — got {crashed_dirs}"
@@ -819,33 +829,19 @@ def test_stateful_state_survives_whole_driver_kill(spark, tmp_path, sf_dir, stor
     # The state store must have durably committed versions pre-kill
     # (*.delta/*.snapshot for the HDFS store; *.changelog/*.zip for
     # RocksDB changelog checkpointing).
-    state_files = [
-        p
-        for pat in ("*.delta", "*.snapshot", "*.changelog", "*.zip")
-        for p in glob.glob(f"{ckpt}/state/**/{pat}", recursive=True)
-    ]
-    assert state_files, "crash run must leave committed state versions behind"
+    assert _state_files(ckpt), "crash run must leave committed state versions behind"
 
-    recovered = run("recover")
+    recovered = launch("stateful", "recover", stage, out, ckpt, store=store)
     assert recovered.returncode == 0, (
         f"recovery run failed rc={recovered.returncode}\n"
         f"{recovered.stdout}\n{recovered.stderr}"
     )
-    dirs = sorted(glob.glob(f"{out}/b*"))
-    assert [os.path.basename(d) for d in dirs] == ["b0", "b1", "b2", "b3"]
+    assert _batch_dirs(out) == ["b0", "b1", "b2", "b3"]
     # Update-mode deltas: latest batch wins per key. If the recovered
     # driver had lost (or double-applied) state, users whose last
     # event is in batch 2 or 3 would carry wrong cumulative counts.
-    latest: dict[int, int] = {}
-    for d in dirs:  # sorted => ascending batch id
-        for r in spark.read.parquet(d).collect():
-            latest[r.user_id] = r.n_events
-    truth = {
-        r.user_id: r.n_events
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .collect()
-    }
+    latest = _latest(spark, out, "user_id", "n_events")
+    truth = _counts(ev, "user_id", "n_events")
     assert latest == truth, (
         f"{len(latest)} keys vs {len(truth)}; "
         f"mismatches={[k for k in truth if latest.get(k) != truth[k]][:5]}"
@@ -861,65 +857,43 @@ def test_stream_stream_join_survives_whole_driver_kill(
     covered matview sink, 2PC jsonl sink, applyInPandasWithState on
     both providers). A watermarked full-outer stream-stream join (the
     `streaming_stream_stream_full_join` shape) runs in a separate
-    driver (tests/ss_join_restart_harness.py) that halt()s its JVM
-    after batch 2's join-state versions committed but before the sink
-    saw batch 2. A fresh driver on the same checkpoint must replay
-    batch 2 against the post-batch-1 state — loading the crashed
-    attempt's orphaned version instead would double-insert batch 2's
-    rows into both sides' join state and emit duplicate matches. The
-    recovery contract asserted here is EQUIVALENCE: the killed-and-
-    recovered sink must equal an uninterrupted clean run's sink
-    row-for-row over the same deterministic batch sequence (same
-    staged files, maxFilesPerTrigger=1)."""
-    import glob
-    import subprocess
-    import sys
-
+    driver (the ``ss_join`` scenario of tests/stream_crash_harness.py)
+    that halt()s its JVM after batch 2's join-state versions committed
+    but before the sink saw batch 2. A fresh driver on the same
+    checkpoint must replay batch 2 against the post-batch-1 state —
+    loading the crashed attempt's orphaned version instead would
+    double-insert batch 2's rows into both sides' join state and emit
+    duplicate matches. The recovery contract asserted here is
+    EQUIVALENCE: the killed-and-recovered sink must equal an
+    uninterrupted clean run's sink row-for-row over the same
+    deterministic batch sequence (same staged files,
+    maxFilesPerTrigger=1)."""
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     out_clean = str(tmp_path / "sink_clean")
     ckpt_clean = str(tmp_path / "ckpt_clean")
 
-    harness = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "ss_join_restart_harness.py"
-    )
-
-    def run(mode: str, o: str, c: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, stage, o, c, store],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    crashed = run("crash", out, ckpt)
+    crashed = launch("ss_join", "crash", stage, out, ckpt, store=store)
     assert crashed.returncode != 0, (
         f"crash run must die, got rc=0\n{crashed.stdout}\n{crashed.stderr}"
     )
-    crashed_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/b*"))
+    crashed_dirs = _batch_dirs(out)
     assert crashed_dirs == ["b0", "b1"], (
         f"halt fired between state commit and sink write for b2; sink "
         f"must hold exactly b0,b1 — got {crashed_dirs}"
     )
-    state_files = [
-        p
-        for pat in ("*.delta", "*.snapshot", "*.changelog", "*.zip")
-        for p in glob.glob(f"{ckpt}/state/**/{pat}", recursive=True)
-    ]
-    assert state_files, "crash run must leave committed join-state versions"
+    assert _state_files(ckpt), "crash run must leave committed join-state versions"
 
-    recovered = run("recover", out, ckpt)
+    recovered = launch("ss_join", "recover", stage, out, ckpt, store=store)
     assert recovered.returncode == 0, (
         f"recovery run failed rc={recovered.returncode}\n"
         f"{recovered.stdout}\n{recovered.stderr}"
     )
-    clean = run("clean", out_clean, ckpt_clean)
+    clean = launch("ss_join", "clean", stage, out_clean, ckpt_clean, store=store)
     assert clean.returncode == 0, (
         f"clean run failed rc={clean.returncode}\n{clean.stdout}\n{clean.stderr}"
     )
@@ -934,10 +908,7 @@ def test_stream_stream_join_survives_whole_driver_kill(
             )
         return sorted(rows)
 
-    rec_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/b*"))
-    clean_dirs = sorted(
-        os.path.basename(p) for p in glob.glob(f"{out_clean}/b*")
-    )
+    rec_dirs, clean_dirs = _batch_dirs(out), _batch_dirs(out_clean)
     assert rec_dirs == clean_dirs, (rec_dirs, clean_dirs)
     got, want = sink_rows(out), sink_rows(out_clean)
     assert got == want, (
@@ -1018,7 +989,9 @@ def test_state_schema_evolution_is_refused_then_replayed(spark, tmp_path, sf_dir
     """Pin what Spark does when a stateful query redeploys with a
     CHANGED state schema against an existing checkpoint (VERDICT r8
     #5) — the operational event every long-lived 100 TB deployment
-    eventually hits. Observed and pinned here (Spark 4.1):
+    eventually hits. Observed and pinned here (Spark 4.1), with the
+    ``schema_v1``/``schema_v2`` scenarios of
+    tests/stream_crash_harness.py:
 
     1. v1 (state struct<cnt:long>) runs to completion;
     2. v2 (additive extension struct<cnt:long,last_event:long>) on the
@@ -1032,79 +1005,46 @@ def test_state_schema_evolution_is_refused_then_replayed(spark, tmp_path, sf_dir
 
     SCALE.md §state-schema-evolution documents the playbook this test
     enforces."""
-    import glob
-    import subprocess
-    import sys
-
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
         "event_id", "user_id"
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
     out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
     out2, ckpt2 = str(tmp_path / "sink2"), str(tmp_path / "ckpt2")
-    harness = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "schema_evolution_harness.py"
-    )
 
-    def run(mode: str, o: str, c: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, stage, o, c],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    assert run("v1", out, ckpt).returncode == 0
-    v1_dirs = sorted(os.path.basename(p) for p in glob.glob(f"{out}/b*"))
+    assert launch("schema_v1", "clean", stage, out, ckpt).returncode == 0
+    v1_dirs = _batch_dirs(out)
     assert v1_dirs, "v1 must have produced sink batches"
 
     # New input arrives, then the v2 binary (extended state) deploys
     # against the old checkpoint.
-    for i in range(2):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-    v2 = run("v2", out, ckpt)
+    _stage_quarters(ev, stage, parts=range(2))
+    v2 = launch("schema_v2", "recover", stage, out, ckpt)
     assert v2.returncode == 5, (v2.returncode, v2.stdout, v2.stderr)
     assert "STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE" in v2.stdout, v2.stdout
-    assert sorted(
-        os.path.basename(p) for p in glob.glob(f"{out}/b*")
-    ) == v1_dirs, "refused run must not have written any new sink batch"
+    assert _batch_dirs(out) == v1_dirs, (
+        "refused run must not have written any new sink batch"
+    )
 
     # Playbook: fresh checkpoint, replay the retained source.
-    assert run("v2fresh", out2, ckpt2).returncode == 0
-    latest: dict[int, int] = {}
-    for d in sorted(glob.glob(f"{out2}/b*")):
-        for r in spark.read.parquet(d).collect():
-            latest[r.user_id] = r.n_events
-    staged = spark.read.parquet(stage)
-    truth = {
-        r.user_id: r.n
-        for r in staged.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .collect()
-    }
+    assert launch("schema_v2", "clean", stage, out2, ckpt2).returncode == 0
+    latest = _latest(spark, out2, "user_id", "n_events")
+    truth = _counts(spark.read.parquet(stage), "user_id", "n_events")
     assert latest == truth
 
 
 def test_matview_survives_whole_driver_kill(spark, tmp_path, sf_dir):
     """Failure injection on the DRIVER: the incremental-matview stream
-    runs in a SEPARATE driver process (tests/matview_restart_harness.py)
-    that hard-kills its own JVM with Runtime.halt() — no shutdown
-    hooks, no graceful stop — right after the second committed view
-    version. A fresh process on the SAME checkpoint + mv_root must
-    (a) resume the view from the latest durably-committed version
-    (the merger's restart-recovery scan), (b) skip or replay batches
-    per the staged-version manifest, and (c) finish with the view
-    equal to the one-shot batch aggregate — exactly-once across
-    driver loss, strictly stronger than the task/batch-crash tests
-    above."""
-    import glob
-    import subprocess
-    import sys
-
+    runs in a SEPARATE driver process (the ``matview`` scenario of
+    tests/stream_crash_harness.py) that hard-kills its own JVM with
+    Runtime.halt() — no shutdown hooks, no graceful stop — right after
+    the second committed view version. A fresh process on the SAME
+    checkpoint + mv_root must (a) resume the view from the latest
+    durably-committed version (the merger's restart-recovery scan),
+    (b) skip or replay batches per the staged-version manifest, and
+    (c) finish with the view equal to the one-shot batch aggregate —
+    exactly-once across driver loss, strictly stronger than the
+    task/batch-crash tests above."""
     ev = (
         spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
         .select(
@@ -1113,24 +1053,10 @@ def test_matview_survives_whole_driver_kill(spark, tmp_path, sf_dir):
             F.round(F.col("value") * 100).cast("long").alias("cents"),
         )
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
-    mv_root = str(tmp_path / "mv")
-    ckpt = str(tmp_path / "ckpt")
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
+    mv_root, ckpt = str(tmp_path / "mv"), str(tmp_path / "ckpt")
 
-    harness = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "matview_restart_harness.py")
-
-    def run(mode: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, stage, mv_root, ckpt],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    crashed = run("crash")
+    crashed = launch("matview", "crash", stage, mv_root, ckpt)
     assert crashed.returncode != 0, (
         f"crash run must die, got rc=0\n{crashed.stdout}\n{crashed.stderr}"
     )
@@ -1140,7 +1066,7 @@ def test_matview_survives_whole_driver_kill(spark, tmp_path, sf_dir):
         "halt after the second commit cannot have committed all batches"
     )
 
-    recovered = run("recover")
+    recovered = launch("matview", "recover", stage, mv_root, ckpt)
     assert recovered.returncode == 0, (
         f"recovery run failed rc={recovered.returncode}\n"
         f"{recovered.stdout}\n{recovered.stderr}"
@@ -1179,36 +1105,19 @@ def test_stateful_restart_rescale_keeps_checkpoint_state_partitions(
     partitions 0..3, with no partition-4+ store ever created. The pin
     lives in offset-log metadata, so one provider (HDFS-backed
     default) suffices."""
-    import glob
-    import subprocess
-    import sys
-
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(
         "event_id", "user_id"
     )
-    stage = str(tmp_path / "stage")
-    for i in range(4):
-        ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
-            "append"
-        ).parquet(stage)
+    stage = _stage_quarters(ev, str(tmp_path / "stage"))
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    harness = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "stateful_restart_harness.py"
-    )
 
-    def run(mode: str, partitions: str) -> subprocess.CompletedProcess:
-        return subprocess.run(
-            [sys.executable, harness, mode, stage, out, ckpt, "hdfs", partitions],
-            capture_output=True, text=True, timeout=600,
-        )
-
-    crashed = run("crash", "4")
+    crashed = launch("stateful", "crash", stage, out, ckpt, partitions=4)
     assert crashed.returncode != 0, (
         f"crash run must die, got rc=0\n{crashed.stdout}\n{crashed.stderr}"
     )
 
-    recovered = run("recover", "9")
+    recovered = launch("stateful", "recover", stage, out, ckpt, partitions=9)
     assert recovered.returncode == 0, (
         f"recovery under rescaled conf failed rc={recovered.returncode}\n"
         f"{recovered.stdout}\n{recovered.stderr}"
@@ -1224,16 +1133,8 @@ def test_stateful_restart_rescale_keeps_checkpoint_state_partitions(
     assert part_dirs == {"0", "1", "2", "3"}, part_dirs
 
     # Semantics proof: per-key cumulative counts equal ground truth.
-    latest: dict[int, int] = {}
-    for d in sorted(glob.glob(f"{out}/b*")):
-        for r in spark.read.parquet(d).collect():
-            latest[r.user_id] = r.n_events
-    truth = {
-        r.user_id: r.n_events
-        for r in ev.groupBy("user_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_events"))
-        .collect()
-    }
+    latest = _latest(spark, out, "user_id", "n_events")
+    truth = _counts(ev, "user_id", "n_events")
     assert latest == truth
 
 
