@@ -1,9 +1,10 @@
-"""Sketch expression builders (SURVEY.md §2.8 L2): the md5-derived
-SimHash / MinHash constructions shared by the dedup queries and the
-property tests.
+"""Sketch expression builders (SURVEY.md §2.8 L2): the word-trigram
+shingles and the md5-derived SimHash / MinHash constructions shared
+by the dedup queries and the property tests.
 
-All three builders are pure Column expressions (JVM-side, no UDFs)
-over an array-of-strings column, and all derive their hash bits from
+The shingles come from one regex over the text column. The sketch
+builders are pure Column expressions (JVM-side, no UDFs) over an
+array-of-strings column, and all derive their hash bits from
 md5 hex digits — deliberately: fixed-width lowercase hex strings
 compare identically in Spark and DuckDB, which is what makes the
 dedup family exactly oracle-checkable. Production at 100 TB would
@@ -23,6 +24,25 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _HEXDIGITS = "0123456789abcdef"
+
+
+# A zero-width match at the start of each space-separated token (the
+# string start, or right after a space) whose lookahead captures that
+# token and the next two. The lookbehind must be the positive
+# ``(?<= )``: the negated ``(?<![^ ])`` also matches between the two
+# UTF-16 halves of a surrogate pair, so an emoji would start an extra
+# shingle.
+_TRIGRAM_RE = r"(?:^|(?<= ))(?=([^ ]* [^ ]* [^ ]*))"
+
+
+def trigram_shingles(text: Column) -> Column:
+    """Word 3-shingles of ``text`` split on single spaces, in order
+    and with repeats: element i is tokens i, i+1 and i+2 joined by
+    spaces, exactly as ``split(text, ' ')`` numbers the tokens (empty
+    tokens included). Fewer than 3 tokens give an empty array and a
+    NULL text gives NULL. One regex pass over the string, with no
+    ``slice``, so no length clamp is needed for short texts."""
+    return F.regexp_extract_all(text, F.lit(_TRIGRAM_RE), F.lit(1))
 
 
 def _hexval(tok: Column, p: int) -> Column:

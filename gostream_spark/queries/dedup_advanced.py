@@ -16,7 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gostream_spark.functions import cosine_similarity
-from gostream_spark.functions.sketches import simhash_from_nibbles, simhash_nibbles
+from gostream_spark.functions.sketches import (
+    bottomk_sketch,
+    simhash_from_nibbles,
+    simhash_nibbles,
+    trigram_shingles,
+)
 from gostream_spark.io import load_spread, load_table, spread_for_compute
 from gostream_spark.operators import topk_ranked
 from gostream_spark.operators.prefix_join import prefix_filtered_jaccard_pairs
@@ -232,22 +237,9 @@ def _bottomk_band_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges per (band, band_hash) bucket (hub = min doc_id; linear in
     bucket size, never all-pairs). Used by the cluster-closure and
     PageRank-centrality queries."""
-    from gostream_spark.functions.sketches import bottomk_sketch
-
     docs = load_spread(spark, sf_dir)
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n - 2),
-            F.zip_with(
-                F.slice(toks, 2, n - 2),
-                F.slice(toks, 3, n - 2),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     m = bottomk_sketch(F.col("sh"), 8)
     sig = with_sh.select("doc_id", m.alias("m"))
@@ -923,25 +915,8 @@ def neardup_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning.
     """
     docs = load_spread(spark, sf_dir)
-    toks = F.split("text", " ")
-    n_t = F.size(toks)
-    # Clamp the slice length: the n_t >= 3 row filter does not stop
-    # Catalyst evaluating this projection for shorter rows inside the
-    # same codegen stage, and slice(.., -1) THROWS on sub-shingle
-    # docs (the degenerate-input class tests/test_degenerate_inputs.py
-    # pins).
-    n_sh = F.greatest(n_t - 2, F.lit(0))
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n_sh),
-            F.zip_with(
-                F.slice(toks, 2, n_sh),
-                F.slice(toks, 3, n_sh),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n_t = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     # coalesce makes n non-nullable: otherwise the downstream join
     # conditions on n infer isnotnull(n), which Catalyst
     # alias-substitutes into the full shingle expression and pushes

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gostream_spark.functions import cosine_similarity
+from gostream_spark.functions.sketches import trigram_shingles
 from gostream_spark.io import load_spread, load_table, spread_for_compute
 from gostream_spark.operators import topk_per_group, topk_ranked
 from gostream_spark.registry import register
@@ -229,22 +230,8 @@ def neardup_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding (`minhash_lsh_buckets`) so hot shingles can't explode the
     join."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    # Clamped slice length: the n >= 3 filter does not stop Catalyst
-    # evaluating the projection for shorter rows in the same codegen
-    # stage, and slice(.., -1) throws on an empty-text doc (latent
-    # here only because the %5 subset happens to dodge it — see
-    # neardup_prefix_filter_pairs, which hit it).
-    n_sh = F.greatest(n - 2, F.lit(0))
-    shingles = F.zip_with(
-        F.slice(toks, 1, n_sh),
-        F.zip_with(
-            F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        ),
-        lambda x, yz: F.concat(x, F.lit(" "), yz),
-    )
+    n = F.size(F.split("text", " "))
+    shingles = trigram_shingles(F.col("text"))
     # r16 (guide §2.4): carry each doc's distinct-shingle count THROUGH
     # the join instead of re-deriving it in separate per-side size
     # aggregates. The old plan computed the shingle pipeline FOUR times
@@ -347,19 +334,8 @@ def minhash_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     every band (the no-false-negative half of exact-dup recall), and
     the bucket count never exceeds the signature-set count."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    n_sh = F.greatest(n - 2, F.lit(0))  # slice(.., -1) throws on empty text
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n_sh),
-            F.zip_with(
-                F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     # to_json key, not an ad-hoc separator join: a shingle may legally
     # contain any byte a token can, so JSON escaping is the only
@@ -481,19 +457,8 @@ def minhash_md5_band_table(docs: DataFrame) -> DataFrame:
     (doc_id, band_id, band_hash). Row-local (no shuffle); callers add
     their own groupBy/join over the band keys. Cross-engine exact —
     the DuckDB twins recompute the identical signature."""
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    n_sh = F.greatest(n - 2, F.lit(0))  # slice(.., -1) throws on empty text
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n_sh),
-            F.zip_with(
-                F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     sig = with_sh.select(
         "doc_id", *[_minhash_md5_sig(F.col("sh"), i).alias(f"mh{i}") for i in range(8)]
@@ -582,19 +547,8 @@ def minhash_bottomk_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     in candidate generation). Docs with < 8 distinct shingles are
     excluded (their bottom-8 sketch is undefined)."""
     docs = load_spread(spark, sf_dir)
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    n_sh = F.greatest(n - 2, F.lit(0))  # slice(.., -1) throws on empty text
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n_sh),
-            F.zip_with(
-                F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     mins = F.slice(
         F.array_sort(
@@ -1123,17 +1077,8 @@ def neardup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     size tables shuffle-joined (corpus-cardinality — never
     hint-broadcast)."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 4 == 1)
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    n_sh = F.greatest(n - 2, F.lit(0))  # clamp: see neardup_jaccard_pairs
-    shingles = F.zip_with(
-        F.slice(toks, 1, n_sh),
-        F.zip_with(
-            F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
-            lambda x, y: F.concat(x, F.lit(" "), y),
-        ),
-        lambda x, yz: F.concat(x, F.lit(" "), yz),
-    )
+    n = F.size(F.split("text", " "))
+    shingles = trigram_shingles(F.col("text"))
     sh = (
         docs.filter(n >= 3)
         .select("doc_id", F.explode(F.array_distinct(shingles)).alias("shingle"))

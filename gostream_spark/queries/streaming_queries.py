@@ -857,7 +857,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus scale, so the per-batch join is a broadcast — the
     stream side never shuffles. Final sink contents = the batch
     decontamination's clean set, asserted by the oracle."""
-    from gostream_spark.streaming.runner import _scratch
+    from gostream_spark.streaming.runner import _sink_dir
 
     import shutil
 
@@ -867,7 +867,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(_grams4(F.split("text", " "))).alias("g"))
         .distinct()
     )
-    out = _scratch("sink")
+    out = _sink_dir()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         cand = batch_df.filter(F.col("source") != "src0")
@@ -1538,13 +1538,13 @@ def streaming_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     a keyed outer join of (tiny) view vs (tiny) partials — never a
     rescan of history; history-rescan-free maintenance is the entire
     point of IVM."""
-    from gostream_spark.streaming.runner import _scratch
+    from gostream_spark.streaming.runner import _sink_dir
 
     # Stage the fixture as four files so availableNow yields >1 batch.
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", F.round(F.col("value") * 100).cast("long").alias("cents")
     )
-    stage = _scratch("sink")
+    stage = _sink_dir()
     for i in range(4):
         ev.filter(F.col("event_id") % 4 == i).coalesce(1).write.mode(
             "append"
@@ -1555,7 +1555,7 @@ def streaming_matview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("maxFilesPerTrigger", 1)
         .parquet(stage)
     )
-    mv_root = _scratch("sink")
+    mv_root = _sink_dir()
     state, merge_batch = make_matview_merger(mv_root)
 
     run_foreach_batch(sdf, merge_batch)
@@ -1649,14 +1649,14 @@ def matview_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     format) bounds history storage."""
     import os
 
-    from gostream_spark.streaming.runner import _scratch
+    from gostream_spark.streaming.runner import _sink_dir
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    mv_root = _scratch("sink")
+    mv_root = _sink_dir()
     os.makedirs(mv_root, exist_ok=True)
     state, merge = make_matview_merger(mv_root)
     # Apply the four slices as batches 0..3 (deterministic replay of

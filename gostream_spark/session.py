@@ -26,6 +26,28 @@ def get_spark(
     demotion/promotion), UTC session timezone (required for oracle
     parity — DuckDB timestamps are UTC-naive), Arrow enabled for the
     pandas interchange used by the vectorized operators.
+
+    Two settings cut driver and listing overhead:
+
+    - PySpark's per-call call-site capture is off
+      (``spark.python.sql.dataFrameDebugging.enabled=false``). With it
+      on, every Column call such as ``F.col("x")`` makes 13 py4j round
+      trips instead of 3. PySpark caches the flag process-wide at the
+      first Column call, so it is set in the builder. Cost: an error
+      message no longer names the PySpark line that built the failing
+      expression; Spark's own stack traces are unchanged.
+    - File listing runs at most ``defaultParallelism`` tasks
+      (``spark.sql.sources.parallelPartitionDiscovery.parallelism``,
+      Spark's default 10,000). A file-stream micro-batch passes each
+      of its files as a root path, so past the 32-path threshold
+      Spark lists them in a job with one task per file, and each task
+      deserializes the whole Hadoop configuration: about 1 s of CPU
+      for an 81-file catch-up batch against 0.06 s at 4 tasks
+      (PERF.md, "Stream listing fan-out"). On a cluster
+      ``defaultParallelism`` is the total executor core count, so
+      listing still uses every core. The value is derived from the
+      session and set on it after creation, for the session's whole
+      lifetime: the file source reads it again for every batch.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -47,8 +69,13 @@ def get_spark(
         # to a microsecond TimestampType column).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     spark = builder.getOrCreate()
+    spark.conf.set(
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+        str(spark.sparkContext.defaultParallelism),
+    )
     spark.sparkContext.setLogLevel("WARN")
     return spark

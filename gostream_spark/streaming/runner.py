@@ -19,10 +19,14 @@ collide, and the fresh checkpoint is removed however the run ends.
 The one exception is a caller-owned checkpoint passed to
 ``_run_stream`` (the crash/restart tests): that directory is resumed
 if it holds an earlier run's offsets and state, and never removed.
+The ``sink-*`` parquet directories (``_sink_dir``) back the
+DataFrames the foreachBatch runners return, so they stay until the
+interpreter exits.
 """
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import json
 import os
@@ -227,12 +231,22 @@ def _scratch(kind: str) -> str:
     return path
 
 
+def _sink_dir() -> str:
+    """A fresh parquet sink directory, removed at interpreter exit: the
+    foreachBatch runners and the streaming queries return DataFrames
+    that read it lazily, so it cannot go earlier. ``_sweep_stale``
+    removes those of a killed process."""
+    path = _scratch("sink")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 _STALE_AGE_SEC = 6 * 3600
 
 
 def _sweep_stale() -> None:
-    """Best-effort removal of scratch dirs older than 6h so repeated
-    harness runs don't accumulate checkpoints/sinks in .tmp."""
+    """Best-effort removal of scratch dirs older than 6h, left by
+    processes that were killed before they could remove their own."""
     try:
         for entry in os.listdir(_TMP_ROOT):
             if not entry.startswith(("ckpt-", "sink-")):
@@ -453,7 +467,8 @@ def run_foreach_batch_parquet(
 ) -> tuple[SparkSession, str]:
     """S5/S6: drive the stream through foreachBatch into a parquet
     sink (append per micro-batch). Returns (session, sink path) so the
-    caller can re-read the materialized output.
+    caller can re-read the materialized output. A sink the runner
+    allocates (no ``out_dir``) is removed at interpreter exit.
 
     Delivery note: plain append per batch is AT-LEAST-ONCE under
     mid-run batch retry (no batch-id manifest); safe here only
@@ -461,7 +476,7 @@ def run_foreach_batch_parquet(
     raises instead of returning a partial sink. Patterns that must
     survive replay use the batch-id-stamped writers instead
     (`make_matview_merger`, the gostream_jsonl 2PC sink)."""
-    out = out_dir or _scratch("sink")
+    out = out_dir or _sink_dir()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(out)
@@ -479,7 +494,7 @@ def run_foreach_batch_split(
     writes share a single upstream computation instead of re-running
     the stream transformations twice. Returns (session, main_path,
     side_path)."""
-    main_out, side_out = _scratch("sink"), _scratch("sink")
+    main_out, side_out = _sink_dir(), _sink_dir()
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # Idempotent per-batch writes: the two sink writes are NOT one

@@ -45,6 +45,7 @@ QUERIES = [
     "minhash_bottomk_bands",
     "simhash_dedup",
     "neardup_jaccard_pairs",
+    "neardup_cluster_components",
     # Python-worker paths — empty text must not divide by zero
     "mapinpandas_doc_features",
     "udtf_tokenize",

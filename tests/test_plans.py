@@ -434,8 +434,9 @@ def test_prefix_filter_pairs_no_cartesian_no_corpus_broadcast(spark, sf_dir):
     # splits < parallelism); on wide-split layouts there is nothing
     # below which pushdown could hide.
     if "RoundRobinPartitioning" in plan:
-        below_rr = plan.split("RoundRobinPartitioning", 1)[1]
-        assert "zip_with" not in below_rr.split("Scan parquet")[0]
+        above_rr, below_rr = plan.split("RoundRobinPartitioning", 1)
+        assert "regexp_extract_all" in above_rr
+        assert "regexp_extract_all" not in below_rr.split("Scan parquet")[0]
 
 
 def test_subquery_shapes_decorrelate_to_joins(spark, sf_dir):

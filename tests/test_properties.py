@@ -160,6 +160,56 @@ docs_strategy = st.lists(
 )
 
 
+def _zip_with_shingles(text):
+    """Reference word 3-shingles: the slice/zip_with form the dedup
+    queries used before ``sketches.trigram_shingles``. The slice
+    length is clamped at 0 because ``slice(.., -1)`` throws on texts
+    of fewer than 3 tokens."""
+    toks = F.split(text, " ")
+    n_sh = F.greatest(F.size(toks) - 2, F.lit(0))
+    return F.zip_with(
+        F.slice(toks, 1, n_sh),
+        F.zip_with(
+            F.slice(toks, 2, n_sh), F.slice(toks, 3, n_sh),
+            lambda x, y: F.concat(x, F.lit(" "), y),
+        ),
+        lambda x, yz: F.concat(x, F.lit(" "), yz),
+    )
+
+
+# Spaces (runs of them make empty tokens), letters, an accented
+# letter, an emoji (a UTF-16 surrogate pair inside the JVM) and other
+# whitespace that must not split tokens.
+_SHINGLE_CHARS = st.sampled_from([" ", " ", "a", "b", "é", "\U0001F600", "\n", "\t"])
+
+
+@given(
+    texts=st.lists(
+        st.one_of(st.none(), st.text(alphabet=_SHINGLE_CHARS, max_size=24)),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow])
+def test_trigram_shingles_match_zip_with_form(spark, texts):
+    """``trigram_shingles`` (one regex pass) returns the same array,
+    element for element, as the slice/zip_with form: for NULL text,
+    empty tokens, texts shorter than 3 tokens and emoji."""
+    from gostream_spark.functions.sketches import trigram_shingles
+
+    texts = texts + [None, "", " ", "  ", "a b", "a b c", "a  b c ", "\U0001F600 a b"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i INT, text STRING")
+    rows = df.select(
+        "i",
+        _zip_with_shingles(F.col("text")).alias("want"),
+        trigram_shingles(F.col("text")).alias("got"),
+    ).collect()
+    assert len(rows) == len(texts)
+    bad = [(texts[r.i], r.want, r.got) for r in rows if r.want != r.got]
+    assert not bad, bad
+
+
 @given(texts=docs_strategy)
 @settings(**_SETTINGS)
 def test_minhash_bands_collide_for_exact_duplicates(spark, texts):
@@ -175,18 +225,7 @@ def test_minhash_bands_collide_for_exact_duplicates(spark, texts):
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
     )
-    toks = F.split("text", " ")
-    n = F.size(toks)
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n - 2),
-            F.zip_with(
-                F.slice(toks, 2, n - 2), F.slice(toks, 3, n - 2),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    shingles = F.array_distinct(_zip_with_shingles(F.col("text")))
     sig = df.select("doc_id", "text", shingles.alias("sh")).select(
         "doc_id",
         "text",

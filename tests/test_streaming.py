@@ -791,6 +791,104 @@ def test_file_stream_reads_directory_table(spark, tmp_path, sf_dir):
     assert out.count() == ev.count()
 
 
+_SINKS_SCRIPT = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from gostream_spark.session import get_spark
+from gostream_spark.streaming.runner import (
+    run_foreach_batch_parquet, run_foreach_batch_split,
+)
+from gostream_spark.streaming.source import file_stream
+
+spark = get_spark(master="local[1]", shuffle_partitions=1)
+sdf = file_stream(spark, sys.argv[2], "events").select("event_id")
+_, out = run_foreach_batch_parquet(sdf)
+_, main, side = run_foreach_batch_split(sdf, lambda df: df.event_id % 2 == 0)
+rows = sum(spark.read.parquet(p).count() for p in (out, main, side))
+print("SINKS", rows, out, main, side)
+"""
+
+
+def test_foreach_batch_sinks_removed_at_exit(spark, sf_dir):
+    """The foreachBatch runners' ``.tmp/sink-*`` directories back the
+    DataFrames they return, so they live until the process exits and
+    no longer: a driver process that runs both runners and reads their
+    results leaves none of its sinks behind."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(TMP)
+    run = subprocess.run(
+        [sys.executable, "-c", _SINKS_SCRIPT, repo, sf_dir],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    line = [x for x in run.stdout.splitlines() if x.startswith("SINKS ")][-1]
+    rows, *sinks = line.split()[1:]
+    n_events = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").count()
+    assert int(rows) == 2 * n_events
+    assert len(sinks) == 3 and all(os.path.basename(p).startswith("sink-") for p in sinks)
+    assert [p for p in sinks if os.path.exists(p)] == []
+
+
+def _jobs(spark):
+    """Spark's status store and the jobs it retains, once every
+    listener event posted so far has been handled."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty(10_000)
+    store = sc.statusStore()
+    jobs, it = [], store.jobsList(None).iterator()  # a Scala Seq
+    while it.hasNext():
+        jobs.append(it.next())
+    return store, jobs
+
+
+def _stages_after(spark, last_job):
+    """(job id, stage name, task count) of every stage that ran in a
+    job newer than ``last_job``."""
+    store, jobs = _jobs(spark)
+    stages = []
+    for job in jobs:
+        if job.jobId() <= last_job:
+            continue
+        sids = job.stageIds().iterator()  # a Scala Seq
+        while sids.hasNext():
+            st = store.lastStageAttempt(sids.next())
+            if st.status().toString() != "SKIPPED":
+                stages.append((job.jobId(), st.name(), st.numTasks()))
+    return stages
+
+
+def test_file_listing_does_not_fan_out_per_file(spark, tmp_path, sf_dir):
+    """A file-stream micro-batch passes each of its files to Spark as
+    its own root path; past 32 paths Spark lists them in a job whose
+    task count is capped only by
+    ``spark.sql.sources.parallelPartitionDiscovery.parallelism``
+    (default 10,000), i.e. one task per file, each deserializing the
+    whole Hadoop configuration. The session caps it at the core
+    count. Two micro-batches of 35 files each: the cap must hold for
+    every batch, not only the first, because the source reads the
+    setting again for each batch."""
+    from gostream_spark.streaming.source import file_stream
+
+    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    root = tmp_path / "sf-70-files"
+    ev.repartition(70).write.parquet(str(root / "events.parquet"))
+    assert len(glob.glob(str(root / "events.parquet" / "*.parquet"))) == 70
+
+    before = max((job.jobId() for job in _jobs(spark)[1]), default=-1)
+    out = run_available_now(
+        file_stream(spark, str(root), "events", max_files_per_trigger=35)
+        .select("event_id"),
+    )
+    stages = _stages_after(spark, before)
+    assert out.count() == ev.count()
+    assert len(RECENT_PROGRESS[-1]["batches"]) >= 2
+    # Not bounded by defaultParallelism: the scan stage may pack the
+    # batch's 35 small files into a few more partitions than that.
+    assert stages and all(n < 35 for _, _, n in stages), stages
+
+
 @pytest.mark.parametrize("store", ["hdfs", "rocksdb"])
 def test_stateful_state_survives_whole_driver_kill(spark, tmp_path, sf_dir, store):
     """Failure injection on the STATE STORE across DRIVER loss: the

@@ -53,6 +53,7 @@ EXPENSIVE_IN_FILTER = (
     "sha2(",
     "xxhash64(",
     "zip_with(",
+    "[^ ]* [^ ]* [^ ]*",  # functions.sketches.trigram_shingles' regex
     "aggregate(",
     "array_sort(",
     "sort_array(",

@@ -26,6 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from gostream_spark.functions.sketches import trigram_shingles
 from gostream_spark.io import load_table
 from gostream_spark.operators.prefix_join import (
     candidate_pairs,
@@ -39,20 +40,8 @@ T_NUM, T_DEN = 3, 5
 
 def _g(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    n_t = F.size(toks)
-    n_sh = F.greatest(n_t - 2, F.lit(0))
-    shingles = F.array_distinct(
-        F.zip_with(
-            F.slice(toks, 1, n_sh),
-            F.zip_with(
-                F.slice(toks, 2, n_sh),
-                F.slice(toks, 3, n_sh),
-                lambda x, y: F.concat(x, F.lit(" "), y),
-            ),
-            lambda x, yz: F.concat(x, F.lit(" "), yz),
-        )
-    )
+    n_t = F.size(F.split("text", " "))
+    shingles = F.array_distinct(trigram_shingles(F.col("text")))
     return docs.filter(n_t >= 3).select(
         "doc_id",
         shingles.alias("sh"),
