@@ -205,9 +205,7 @@ def table_schema(spark: SparkSession, path: str, status) -> StructType:
     return meta.schema
 
 
-def spread_for_compute(
-    df: DataFrame, spark: SparkSession, cache_key: str | None = None
-) -> DataFrame:
+def spread_for_compute(df: DataFrame, spark: SparkSession, path: str) -> DataFrame:
     """Decouple compute parallelism from input splits for stages whose
     per-row cost dwarfs the scan (hash sketches, edit distance,
     feature extraction).
@@ -225,18 +223,16 @@ def spread_for_compute(
     The ``df.rdd.getNumPartitions()`` probe materializes the plan into
     an RDD on the DRIVER — measured 100-500 ms of pure driver time per
     call (guide §5 "the driver should do almost no data work") — so
-    ``cache_key``, the scan's table path (``table_path(sf_dir,
-    name)``), memoizes the decision in that path's ``_TABLE_META``
-    entry: probed once per session and file set. A pushed
-    filter/projection does not change the split count, so filtered
-    loads of the same table share the entry. ``None`` probes every
-    call (arbitrary plans). The probe itself stays the ground truth —
-    no re-implementation of FilePartition packing arithmetic.
+    the decision is memoized in the ``_TABLE_META`` entry of ``path``,
+    the table path ``df`` scans (``table_path(sf_dir, name)``): probed
+    once per session and file set. A pushed filter/projection does not
+    change the split count, so filtered loads of the same table share
+    the entry; an unreadable path probes every call. The probe itself
+    stays the ground truth — no re-implementation of FilePartition
+    packing arithmetic.
     """
     target = spark.sparkContext.defaultParallelism
-    meta = None
-    if cache_key is not None:
-        meta = _table_meta(spark, cache_key, path_status(spark, cache_key))
+    meta = _table_meta(spark, path, path_status(spark, path))
     if meta is None:
         spread = df.rdd.getNumPartitions() < target
     else:
@@ -267,7 +263,7 @@ def load_spread(
     df = load_table(spark, sf_dir, name)
     if where is not None:
         df = df.filter(where)
-    return spread_for_compute(df, spark, cache_key=table_path(sf_dir, name))
+    return spread_for_compute(df, spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gostream_spark.functions.sketches import top_token_run_max
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.registry import register
 
 _HEXDIGITS = "0123456789abcdef"
@@ -700,14 +700,27 @@ def scrub_pii_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         " ",
     )
-    red = docs.select(
+    # The counts come out of an inline_outer GENERATOR: a Filter on
+    # plain aliases would be alias-substituted below the Project and
+    # run both regex scans (and the synthesis) a second time; a
+    # predicate on generator output cannot be pushed below the
+    # Generate. The synthesized text is its own column first, so each
+    # of the three expressions reads it instead of rebuilding it.
+    text2 = F.col("text2")
+    red = docs.select("doc_id", "source", synth.alias("text2")).select(
         "doc_id",
         "source",
-        F.regexp_count(synth, F.lit(_EMAIL_RE)).cast("long").alias("n_emails"),
-        F.regexp_count(synth, F.lit(_PHONE_RE)).cast("long").alias("n_phones"),
-        F.regexp_replace(
-            F.regexp_replace(synth, _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>"
-        ).alias("scrubbed"),
+        F.inline_outer(
+            F.array(
+                F.struct(
+                    F.regexp_count(text2, F.lit(_EMAIL_RE)).cast("long").alias("n_emails"),
+                    F.regexp_count(text2, F.lit(_PHONE_RE)).cast("long").alias("n_phones"),
+                    F.regexp_replace(
+                        F.regexp_replace(text2, _EMAIL_RE, "<EMAIL>"), _PHONE_RE, "<PHONE>"
+                    ).alias("scrubbed"),
+                )
+            )
+        ),
     )
     return red.filter(F.col("n_emails") + F.col("n_phones") > 0).select(
         "doc_id", "source", "n_emails", "n_phones", F.md5("scrubbed").alias("scrubbed_md5")
@@ -980,9 +993,7 @@ FROM d LEFT JOIN rem r USING (doc_id)
     tags=("L1", "L2", "ext"),
     bench=True,
 )
-def exact_substr_dedup(
-    spark: SparkSession, sf_dir: str, digest: str = "xxhash128"
-) -> DataFrame:
+def exact_substr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact duplicate-SPAN removal — the ExactSubstr pass of
     "Deduplicating Training Data Makes Language Models Better" (Lee
     et al., 2021), re-expressed relationally: every word 5-gram
@@ -1000,7 +1011,7 @@ def exact_substr_dedup(
     construction; this is the shuffle form a 100 TB corpus needs):
     occurrences shuffle once on a 128-bit gram key (two
     independently-seeded xxhash64 halves, 16 bytes, not the ~30-byte
-    gram; collision policy at the digest knob below); the keeper is
+    gram; collision policy at the gram key below); the keeper is
     min(struct(doc_id, pos)) — a
     PARTIAL-AGGREGATABLE min, so a viral boilerplate gram repeated
     in millions of docs collapses to one row per map task before the
@@ -1024,49 +1035,31 @@ def exact_substr_dedup(
     k = _EXSUB_K
     # explode_outer, NOT explode: plain explode makes Catalyst infer
     # size(<gram transform>) > 0 on the generator input — evaluating
-    # the ENTIRE md5 digest pipeline a second time inside the inferred
+    # the ENTIRE gram digest pipeline a second time inside the inferred
     # Filter (and, below the spread exchange, serially). explode_outer
     # infers nothing; the generator-output null filter is not pushable
     # below the Generate. (Same pathology as operators/prefix_join.)
-    # digest knob — per-operator collision POLICY (VERDICT r11 #1):
-    # this is a REMOVAL pass, so a gram-key collision silently deletes
-    # a non-duplicate span. At the engine's design point (100 TB,
-    # 10^11-10^13 distinct grams) a 64-bit key expects n^2/2^65
-    # birthday collisions — hundreds to millions — and, because the
-    # oracle keys on md5, each one is also a cross-engine divergence.
-    # The default is therefore 128-bit: "xxhash128" = struct of two
-    # INDEPENDENTLY-seeded xxhash64 halves (n^2/2^129 ~ 1.5e-13
-    # expected collisions
-    # corpus-wide at 10^13 grams, like md5, but allocation-free and
-    # codegen'd; the r12 sf1 A/B in tools/digest_ab.py reads it at
-    # 3.94 s vs md5 4.20 s vs xxhash64 3.46 s — it keeps ~1/3 of the
-    # 64-bit CPU win at the same 16-byte key width; the other 2/3 was
-    # the 8-byte key a removal pass cannot safely have — and it is
-    # bit-identical to both other arms). Seed independence matters: Spark's xxhash64 CHAINS field
-    # hashes (field i is seeded by the running hash), so
-    # xxhash64(gram, lit(1)) would be a pure function of
-    # xxhash64(gram) and add zero margin — the salt must come FIRST
-    # (xxhash64(lit(1), gram)) to re-seed the whole gram hash.
-    # digest="md5" retains the r10 kernel and digest="xxhash64" the
-    # r11 one for tools/digest_ab.py; the 64-bit key remains the right
-    # default ONLY for collision-tolerant statistics (see
-    # dup_ngram_fraction's twin policy in corpus_signals.py).
+    # Gram key — per-operator collision POLICY (PERF.md §digest): this
+    # is a REMOVAL pass, so a gram-key collision silently deletes a
+    # non-duplicate span. At the engine's design point (100 TB,
+    # 10^11-10^13 distinct grams) a 64-bit key expects n^2/2^65 birthday
+    # collisions — hundreds to millions — and, because the oracle keys
+    # on md5, each one is also a cross-engine divergence. The key is
+    # therefore 128-bit: a struct of two INDEPENDENTLY-seeded xxhash64
+    # halves (n^2/2^129 ~ 1.5e-13 expected collisions corpus-wide at
+    # 10^13 grams, like md5, but allocation-free and codegen'd). Seed
+    # independence matters: Spark's xxhash64 CHAINS field hashes (field
+    # i is seeded by the running hash), so xxhash64(gram, lit(1)) would
+    # be a pure function of xxhash64(gram) and add zero margin — the
+    # salt must come FIRST (xxhash64(lit(1), gram)) to re-seed the whole
+    # gram hash. A 64-bit key is right ONLY for collision-tolerant
+    # statistics (see dup_ngram_fraction in corpus_signals.py).
     # The gram STRING materializes once, inside the generator struct,
     # and the hashes read the already-materialized field AFTER the
     # explode — higher-order-function lambdas get no subexpression
     # elimination, so hashing inside the transform would rebuild the
     # ~30-byte gram once PER HASH (measured: two-seed-inside-lambda
     # read 7.0 s at sf1 vs 5.0 s in this shape).
-    def gram_key(g):
-        if digest == "xxhash128":
-            return F.struct(
-                F.xxhash64(g).alias("h1"),
-                F.xxhash64(F.lit(1), g).alias("h2"),
-            )
-        if digest == "xxhash64":
-            return F.xxhash64(g)
-        return F.unhex(F.md5(g))
-
     occ = (
         d.filter((F.col("n") >= k) & F.col("doc_id").isNotNull())
         .select(
@@ -1085,7 +1078,9 @@ def exact_substr_dedup(
         .select(
             "doc_id",
             F.col("o.p").alias("p"),
-            gram_key(F.col("o.g")).alias("k"),
+            F.struct(
+                F.xxhash64("o.g").alias("h1"), F.xxhash64(F.lit(1), "o.g").alias("h2")
+            ).alias("k"),
         )
     )
     # r16 (guide §2.4 "two operations keyed the same way share one

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.registry import register
 
 _NGRAM = 5
@@ -65,9 +65,7 @@ FROM t LEFT JOIN per_doc p USING (doc_id)
 
 
 @register("dup_ngram_fraction", oracle=_DUP_ORACLE, tags=("L2", "L8", "ext"), bench=True)
-def dup_ngram_fraction(
-    spark: SparkSession, sf_dir: str, digest: str = "xxhash64"
-) -> DataFrame:
+def dup_ngram_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-5-gram fraction per document, in basis points.
 
     A document whose word 5-grams mostly also appear in OTHER
@@ -86,7 +84,7 @@ def dup_ngram_fraction(
     note. The one remaining corpus-scale exchange shuffles the 8-byte
     xxhash64 key of the gram, not the ~40-60-byte gram string (the
     ``docs_dedup_digest`` discipline; collision bound in the
-    digest-knob note below). ``floor`` of a single exact-dividend
+    gram-key note below). ``floor`` of a single exact-dividend
     IEEE division keeps the ratio integer-deterministic across
     engines."""
     docs = load_spread(spark, sf_dir).select(
@@ -99,41 +97,31 @@ def dup_ngram_fraction(
             lambda i: F.concat_ws(" ", F.slice("toks", i + 1, _NGRAM)),
         )
     )
-    # explode_outer + non-nullable digest (r10, same pathology as
+    # explode_outer + non-nullable key (r10, same pathology as
     # operators/prefix_join): plain explode would infer size(grams)>0
     # below the spread exchange (serial gram re-eval in the scan
-    # task), and the nullable unhex made the gram join infer
-    # isnotnull(unhex(md5(...))) — a vacuous filter that computed
-    # every digest TWICE. concat_ws never returns null, so the
-    # coalesce arm is dead; it exists only to make the type
-    # non-nullable.
-    # digest knob — per-operator collision POLICY (VERDICT r11 #1/#2):
-    # xxhash64 (8-byte key, codegen'd, allocation-free) stays the
-    # default HERE because this operator emits a per-doc STATISTIC,
-    # not a removal decision: a 64-bit collision merges two gram
-    # classes and inflates dup_bp of the affected docs by at most one
-    # gram each. Honest bound, at the engine's own design scales: the
-    # birthday expectation is n^2/2^65 colliding PAIRS — ~0.03 at 10^9
-    # distinct grams, ~300 at 10^11, ~3e6 at 10^13 — i.e. at the
-    # 100 TB point a few parts-per-10^7 of gram classes are merged,
-    # which moves dup_bp (a floor to basis points over thousands of
-    # grams per doc) by 0 for virtually every document. That error is
-    # accepted for the 5% CPU cut and half-width exchange key
-    # (tools/digest_ab.py, PERF.md). The SAME key is NOT acceptable
-    # where a collision deletes data — exact_substr_dedup's removal
-    # pass defaults to a 128-bit two-seed key (policy note at its
-    # knob, corpus_ops.py). digest="md5" retains the old kernel for
-    # the A/B tool.
-    gram_key = (
-        F.xxhash64("gram_str")
-        if digest == "xxhash64"
-        else F.coalesce(F.unhex(F.md5("gram_str")), F.lit(b""))
-    )
+    # task), and a nullable key would make Catalyst infer an
+    # isnotnull(<key>) filter that computes every digest TWICE;
+    # xxhash64 is never null.
+    # Gram key — per-operator collision POLICY (PERF.md §digest):
+    # xxhash64 (8-byte key, codegen'd, allocation-free) is right HERE
+    # because this operator emits a per-doc STATISTIC, not a removal
+    # decision: a 64-bit collision merges two gram classes and inflates
+    # dup_bp of the affected docs by at most one gram each. Honest
+    # bound, at the engine's own design scales: the birthday expectation
+    # is n^2/2^65 colliding PAIRS — ~0.03 at 10^9 distinct grams, ~300
+    # at 10^11, ~3e6 at 10^13 — i.e. at the 100 TB point a few
+    # parts-per-10^7 of gram classes are merged, which moves dup_bp (a
+    # floor to basis points over thousands of grams per doc) by 0 for
+    # virtually every document. That error is accepted for the
+    # half-width exchange key. The SAME key is NOT acceptable where a
+    # collision deletes data — exact_substr_dedup's removal pass uses a
+    # 128-bit two-seed key (policy note at its gram key, corpus_ops.py).
     g = (
         docs.filter(n >= _NGRAM)
         .select("doc_id", F.explode_outer(grams).alias("gram_str"))
         .filter(F.col("gram_str").isNotNull())
-        .select("doc_id", gram_key.alias("gram"))
+        .select("doc_id", F.xxhash64("gram_str").alias("gram"))
     )
     # r16 singleton-ownership rewrite (guide §2.3/§2.4): dup_grams ==
     # n_grams - (# grams UNIQUE corpus-wide that this doc owns), so the

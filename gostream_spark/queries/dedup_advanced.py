@@ -22,7 +22,7 @@ from gostream_spark.functions.sketches import (
     simhash_nibbles,
     trigram_shingles,
 )
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.operators import topk_ranked
 from gostream_spark.operators.prefix_join import prefix_filtered_jaccard_pairs
 from gostream_spark.queries.llm_similarity import _duck_cosine

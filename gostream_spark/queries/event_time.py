@@ -894,8 +894,6 @@ def _capped_session_fold(pdf):
     span from the current session's ANCHOR would exceed the 2 h hard
     cap. All time math in integer microseconds — exact on both
     engines."""
-    import pandas as pd
-
     pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
     # normalize to µs regardless of whether Arrow delivered [ns] or [us]
     us = pdf["ts"].astype("datetime64[us]").astype("int64")

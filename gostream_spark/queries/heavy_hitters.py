@@ -62,7 +62,7 @@ _MG_CAPACITY = 2 * _PHI_INV
 
 def _mg_candidates_fn(capacity: int):
     """Build the per-partition Misra-Gries summary closure for a given
-    counter capacity (k = 2/phi). Parameterized so the decade probe
+    counter capacity (k = 2/phi). Parameterized so decade fixtures
     can run the operator at a scale-appropriate phi; the registered
     query uses the default ``_MG_CAPACITY``."""
 
@@ -114,7 +114,7 @@ _misra_gries_candidates = _mg_candidates_fn(_MG_CAPACITY)
 def hh_oracle(phi_inv: int = _PHI_INV) -> str:
     """DuckDB oracle for ``heavy_hitter_tokens`` at a given phi —
     shared between the registered entry (default phi) and the decade
-    probe's scale-parameterized re-check."""
+    fixtures' scale-parameterized run (tools/decade_scope.py)."""
     return f"""
 WITH toks AS (
   SELECT unnest(string_split(text, ' ')) AS token FROM documents

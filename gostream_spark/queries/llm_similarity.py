@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from gostream_spark.functions import cosine_similarity
 from gostream_spark.functions.sketches import trigram_shingles
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.operators import topk_per_group, topk_ranked
 from gostream_spark.registry import register
 

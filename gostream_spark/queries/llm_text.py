@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.operators import keep_first, topk_ranked
 from gostream_spark.registry import register
 
@@ -152,8 +152,9 @@ def top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tfidf_oracle(stopwords: tuple[str, ...] = STOPWORDS) -> str:
     """DuckDB oracle for ``tfidf_top_terms`` for an arbitrary stopword
     tuple — shared between the registered entry (default stopwords)
-    and the decade probe, which passes the salted fixture's manifest
-    stopwords so the filter stays real on the salted vocabulary."""
+    and tools/decade_scope.py, which passes the salted fixture's
+    manifest stopwords so the filter stays real on the salted
+    vocabulary."""
     not_in = ", ".join(f"'{w}'" for w in stopwords)
     return f"""
 WITH tok AS (

@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.operators.multimodal import (
     decode_features,
     decode_features_arrow,

@@ -369,8 +369,9 @@ _BM25_TERMS = ("data", "merge", "stream")
 
 def bm25_oracle(terms: tuple[str, ...] = _BM25_TERMS) -> str:
     """DuckDB oracle for ``bm25_topk`` for an arbitrary term tuple —
-    shared between the registered entry (default terms) and the decade
-    probe, which queries the salted fixture with manifest terms."""
+    shared between the registered entry (default terms) and
+    tools/decade_scope.py, which queries the salted fixture with
+    manifest terms."""
     in_list = ", ".join(f"'{t}'" for t in terms)
     cases = ",\n         ".join(
         f"max(CASE WHEN token = '{t}' THEN sc END) AS s{i + 1}"

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udtf
 from pyspark.sql.udtf import AnalyzeResult
 
-from gostream_spark.io import load_spread, load_table, spread_for_compute
+from gostream_spark.io import load_spread, load_table
 from gostream_spark.registry import register
 
 # --- U1 scalar pandas UDF ----------------------------------------------

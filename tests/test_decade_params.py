@@ -3,13 +3,14 @@
 The salted decade fixture degenerates token-literal and
 frequency-threshold queries, so `bm25_topk`, `tfidf_top_terms`, and
 `heavy_hitter_tokens` grew default-preserving knobs plus oracle
-BUILDERS the probe parameterizes from the fixture manifest. These
-tests pin the contract-freeze half of that change: the builders at
-their defaults must reproduce the REGISTERED oracle text exactly, and
-calling the query functions with explicit default knob values must
-equal the registered two-arg call row-for-row. The parameterized-at-
-scale half is checked live by tools/decade_probe.py's sf1 oracle
-re-check.
+BUILDERS that tools/decade_scope.py parameterizes from the fixture
+manifest. These tests pin the contract-freeze half of that change:
+the builders at their defaults must reproduce the REGISTERED oracle
+text exactly, and calling the query functions with explicit default
+knob values must equal the registered two-arg call row-for-row. The
+parameterized-at-scale half is checked live by `tools/sweep.py` on
+the decade fixture, which exact-compares each scoped call against its
+parameterized oracle (`--root .tmp/decadedata --sf 1`).
 """
 
 from __future__ import annotations
@@ -120,29 +121,86 @@ def test_probe_below_default_matches_two_arg_call(spark, sf_dir):
         assert fn(spark, sf_dir, probe_below=0).count() == 0, fn.__name__
 
 
+def _write_manifest(path, terms=("data_0", "merge_0", "stream_0")):
+    """A manifest shaped like tools/restage_decade.py's (R = 10)."""
+    import json
+
+    from gostream_spark.queries.llm_text import STOPWORDS
+
+    stop = [f"{w}_{k}" for w in STOPWORDS for k in range(10)]
+    (path / "manifest.json").write_text(
+        json.dumps(
+            {
+                "replicas": 10,
+                "salted": True,
+                "tpch_replicated": True,
+                "bm25_terms": list(terms),
+                "stopwords": stop,
+                "phi_inv": 2000,
+            }
+        )
+    )
+    return stop
+
+
 def test_decade_scope_only_fires_on_manifested_fixtures(tmp_path):
     """scoped_overrides is keyed on the restager's manifest.json: the
-    driver-gate fixtures must sweep byte-for-byte unscoped."""
-    import json as _json
-    import os
-    import sys
-
-    sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    driver-gate fixtures must sweep byte-for-byte unscoped, and a
+    decade fixture gets all six (kwargs, oracle) pairs from it."""
+    from gostream_spark.queries.heavy_hitters import hh_oracle
+    from gostream_spark.queries.llm_text import tfidf_oracle
+    from gostream_spark.queries.training_assembly import bm25_oracle
     from tools.decade_scope import scoped_overrides
 
     assert scoped_overrides("/root/testdata/sf0.01") == {}
     assert scoped_overrides(str(tmp_path)) == {}
-    (tmp_path / "manifest.json").write_text(_json.dumps({"replicas": 3}))
+    stop = _write_manifest(tmp_path)
     ov = scoped_overrides(str(tmp_path))
     assert set(ov) == {
+        "bm25_topk",
+        "tfidf_top_terms",
+        "heavy_hitter_tokens",
         "knn_label_disagreement",
         "ann_recall_at_k",
         "graph_triangle_count",
     }
+    # the literal trio: both arms take the manifest's values.
+    terms = ("data_0", "merge_0", "stream_0")
+    assert ov["bm25_topk"] == ({"terms": terms}, bm25_oracle(terms))
+    assert ov["tfidf_top_terms"] == (
+        {"stopwords": tuple(stop)},
+        tfidf_oracle(tuple(stop)),
+    )
+    assert ov["heavy_hitter_tokens"] == ({"phi_inv": 2000}, hh_oracle(2000))
     # knn/ann scope BOTH arms; triangle scopes only the oracle.
     assert ov["knn_label_disagreement"][0] == {"probe_below": 10_000_000}
     assert ov["ann_recall_at_k"][0] == {"probe_below": 10_000_000}
     assert ov["graph_triangle_count"][0] == {}
     assert "l_orderkey < 10000000" in ov["graph_triangle_count"][1]
+
+
+def test_time_queries_rows_ratios_and_decade_kwargs(spark, sf_dir, tmp_path):
+    """tools/time_queries.py in-process: one row per query with a time,
+    rows and scope flag per dir and the ratio of adjacent dirs; on a
+    manifest dir the query runs with the manifest's kwargs (here a
+    retrieval term no document holds, so bm25 returns no rows)."""
+    import os
+
+    from gostream_spark.queries.training_assembly import bm25_topk
+    from tools.time_queries import time_queries, to_markdown
+
+    big = "/root/testdata/sf0.01"
+    for f in os.listdir(big):
+        os.symlink(os.path.join(big, f), tmp_path / f)
+    _write_manifest(tmp_path, terms=("no_such_term_0",))
+    dirs = [sf_dir, str(tmp_path)]
+    (r,) = time_queries(spark, ["bm25_topk"], dirs, trials=1)
+    assert r["name"] == "bm25_topk"
+    assert len(r["seconds"]) == len(r["rows"]) == 2
+    assert all(s > 0 for s in r["seconds"])
+    assert r["ratios"] == [r["seconds"][1] / r["seconds"][0]]
+    assert r["scoped"] == [False, True]
+    assert r["rows"][0] == bm25_topk(spark, sf_dir).count() > 0
+    assert r["rows"][1] == 0 < bm25_topk(spark, big).count()
+    table = to_markdown([r], dirs).splitlines()
+    assert len(table) == 3 and table[2].startswith("| `bm25_topk`* |")

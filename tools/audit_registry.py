@@ -53,7 +53,7 @@ EXPENSIVE_IN_FILTER = (
     "sha2(",
     "xxhash64(",
     "zip_with(",
-    "[^ ]* [^ ]* [^ ]*",  # functions.sketches.trigram_shingles' regex
+    "regexp_extract_all(",  # also regexp_count and trigram_shingles
     "aggregate(",
     "array_sort(",
     "sort_array(",

@@ -29,7 +29,7 @@ Two outputs, both markdown rows for PERF.md:
   so watermarks advance and nothing is late-dropped (see
   restage_decade.py).
 
-Timing protocol matches tools/decade_probe.py: one untimed session
+Timing protocol follows tools/time_queries.py: one untimed session
 warm-up pass at sf0.01 (Python-worker/JIT startup charged to the
 throwaway), then per-(query, sf) a single timed run — streaming
 queries re-execute their whole pipeline per call (fresh checkpoint),

@@ -127,13 +127,13 @@ def main() -> int:
         keep = set(args.only.split(","))
         qs = {n: f for n, f in qs.items() if n in keep}
 
-    # Decade fixtures (restage_decade.py manifests): scope the three
-    # quadratic ground-truth evaluators so the one-box oracle stays
-    # inside its resource caps while the engine arm runs the full
-    # input (VERDICT r15 #2) — probe panels bounded to replica 0 in
-    # both arms (knn/ann), oracle-side replica restriction where the
-    # replication invariant makes it exact (triangle). Empty on plain
-    # fixtures: the driver-gate sweep is unaffected.
+    # Decade fixtures (restage_decade.py manifests): the manifest's
+    # query literals for the salted corpus (bm25/tfidf/heavy hitters),
+    # and scoping of the three quadratic ground-truth evaluators so
+    # the one-box oracle stays inside its resource caps while the
+    # engine arm runs the full input (VERDICT r15 #2) — see
+    # tools/decade_scope.py. Empty on plain fixtures: the driver-gate
+    # sweep is unaffected.
     from tools.decade_scope import scoped_overrides
 
     overrides = scoped_overrides(sf_dir)
@@ -142,7 +142,7 @@ def main() -> int:
             print(
                 f"DECADE-SCOPED {n}: "
                 + (
-                    f"probe panel bounded to replica 0 ({kw}) in both arms"
+                    f"kwargs {sorted(kw)} in both arms"
                     if kw
                     else "oracle restricted to replica 0 (exact by the "
                     "replication invariant); engine arm unscoped"
