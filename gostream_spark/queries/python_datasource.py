@@ -118,16 +118,12 @@ def pysource_stream_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _complete(sink_df: DataFrame) -> bool:
         return sink_df.filter(F.col("n_events") >= full).count() >= 16
 
-    # 16-bucket state keyspace: size the state shuffle to it rather
-    # than the 32-wide batch default — the continuous trigger reruns
-    # the per-partition store floor every micro-batch.
     return run_until(
         agg,
         _complete,
         output_mode="complete",
         timeout_sec=120,
         poll_sec=0.15,
-        state_partitions=4,
     )
 
 

@@ -54,14 +54,6 @@ def streaming_tumbling_counts(
     With the whole fixture available, the final complete-mode table
     must equal the batch group-by — the oracle asserts exactly that.
 
-    state_partitions=8: the state keyspace is day x event_type (a few
-    thousand keys at most), and each state partition costs ~20 ms of
-    per-micro-batch store open/commit (PERF.md floor experiment:
-    32 partitions -> 1.24 s, 8 -> ~0.85 s, 4 -> 0.81 s locally at
-    sf0.1; RocksDB-vs-HDFSBacked was a wash at this state size). At
-    scale, state partitioning follows state cardinality, not the
-    batch shuffle width.
-
     max_files_per_trigger (probe knob, default None = all files in
     one batch): replay a sharded fixture N files per micro-batch so
     tools/streaming_decade_probe.py can observe state accumulating
@@ -69,7 +61,7 @@ def streaming_tumbling_counts(
     everything either way)."""
     ev = file_stream(spark, sf_dir, "events", max_files_per_trigger)
     result = run_available_now(
-        windowed_counts(ev), output_mode="complete", state_partitions=8
+        windowed_counts(ev), output_mode="complete"
     )
     return result.select(
         ts_str("w.start").alias("win_start"), "event_type", "event_cnt"
@@ -101,11 +93,8 @@ def streaming_dedup(
     # unbounded_state: the fixture's event_id keyspace is the bounded
     # replay set, the regime the r12 API guard admits explicitly.
     deduped = dedup_stream(doubled, keys=["event_id"], unbounded_state=True)
-    # State sized to the fixture's dedup keyspace, not the 32-wide
-    # batch default: each state partition pays the per-micro-batch
-    # store open/commit floor (r10 cold audit put this query > 3 s).
     result = run_available_now(
-        deduped, output_mode="append", state_partitions=8
+        deduped, output_mode="append"
     )
     return result.agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -154,21 +143,11 @@ def streaming_stateful_counts(
     one row per (key, update); the latest update per key — i.e. the
     max running count — must equal the batch per-user count.
     max_files_per_trigger: probe replay knob (see
-    streaming_tumbling_counts).
-
-    state_partitions=8 (r11): previously unpinned, so the state
-    shuffle inherited the session's 32 — and 32 concurrent
-    Arrow-Python state tasks oversubscribe a 32-core executor that is
-    also running the JVM side, queuing tasks and inflating both wall
-    and the per-batch summed state metrics (decade curve at 32: commit
-    11–77 s summed, wall 24.2 s; at 8: commit flat 0.4–0.8 s, wall
-    16.4 s on identical input — PERF.md streaming decade). The state
-    keyspace (user_id, 15k keys at 10x) is nowhere near needing 32
-    partitions; per-partition Python update time is unchanged."""
+    streaming_tumbling_counts)."""
     ev = file_stream(spark, sf_dir, "events", max_files_per_trigger)
     updates = running_count_stateful(ev)
     result = run_available_now(
-        updates, output_mode="update", state_partitions=8
+        updates, output_mode="update"
     )
     return result.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
@@ -223,14 +202,7 @@ def streaming_stream_stream_join(
         & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
         & (F.col("c_ts") <= F.col("p_ts")),
     ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
-    # State partitions sized to the join-state keyspace (user_id at
-    # this SF), not the batch shuffle width: a stream-stream join
-    # opens FOUR state stores per partition per micro-batch, so the
-    # session's 32-wide default pays ~16x the fixed store
-    # open/commit floor this tiny state needs (PERF.md r8: 7.6s ->
-    # 3.1s). At real scale the same lever sizes partitions to state
-    # volume/executor memory, not down to 8.
-    return run_available_now(joined, output_mode="append", state_partitions=8)
+    return run_available_now(joined, output_mode="append")
 
 
 # --- S5/S6: foreachBatch parquet sink round-trip ------------------------
@@ -334,11 +306,7 @@ def streaming_session_counts(
         keys=("user_id",),
         aggs=(F.count(F.lit(1)).alias("event_cnt"),),
     )
-    # Session-window state is keyed by user — size the state shuffle
-    # to that keyspace, not the 32-wide batch default (same lever as
-    # the stream-stream joins; the merge pass otherwise pays the
-    # per-partition store floor 4x over).
-    result = run_available_now(sess, output_mode="complete", state_partitions=8)
+    result = run_available_now(sess, output_mode="complete")
     return result.select(
         "user_id",
         ts_str("w.start").alias("session_start"),
@@ -644,16 +612,12 @@ def streaming_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             >= n_users
         )
 
-    # Per-user state keyspace; the continuous trigger re-pays the
-    # per-partition store floor on every 100 ms batch (incl. the
-    # no-data batches that fire the timers), so size it down.
     result = run_until(
         closed,
         _all_closed,
         output_mode="update",
         timeout_sec=120,
         poll_sec=0.15,
-        state_partitions=8,
     )
     return (
         result.filter(F.col("closed") == "timeout")
@@ -729,8 +693,7 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
         F.coalesce("click_id", F.lit(-1)).alias("click_id"),
         F.col("p_user").alias("user_id"),
     )
-    # Same state-partition sizing rationale as the inner variant.
-    return run_available_now(joined, output_mode="append", state_partitions=8)
+    return run_available_now(joined, output_mode="append")
 
 
 # --- T5 within-watermark dedup (bounded state, unlike dropDuplicates) ---
@@ -770,9 +733,8 @@ def streaming_dedup_within_watermark(
         ).withWatermark("ts", "1 hour")
     )
     deduped = doubled.dropDuplicatesWithinWatermark(["event_id"])
-    # Same state sizing rationale as streaming_dedup (r10 cold audit).
     result = run_available_now(
-        deduped, output_mode="append", state_partitions=8
+        deduped, output_mode="append"
     )
     return result.agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -961,11 +923,8 @@ def streaming_session_eventtime_timeout(spark: SparkSession, sf_dir: str) -> Dat
     from gostream_spark.streaming import event_session_stateful
 
     ev = file_stream(spark, sf_dir, "events")
-    # Per-user state keyspace — same sizing lever as the other
-    # stateful queries (timer firing scans every state partition on
-    # the trailing no-data batch too).
     return run_available_now(
-        event_session_stateful(ev), output_mode="append", state_partitions=8
+        event_session_stateful(ev), output_mode="append"
     )
 
 
@@ -1196,8 +1155,7 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
         F.coalesce("click_id", F.lit(-1)).alias("click_id"),
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
     )
-    # Same state-partition sizing rationale as the inner variant.
-    return run_available_now(joined, output_mode="append", state_partitions=8)
+    return run_available_now(joined, output_mode="append")
 
 
 # --- L1/T8 ext: streaming CDC materialization (latest state per key) ----

@@ -17,7 +17,7 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "gostream_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
+    shuffle_partitions: int = 32,
 ) -> SparkSession:
     """Build (or reuse) the engine's SparkSession.
 
@@ -52,8 +52,6 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

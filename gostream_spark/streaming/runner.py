@@ -22,6 +22,11 @@ if it holds an earlier run's offsets and state, and never removed.
 The ``sink-*`` parquet directories (``_sink_dir``) back the
 DataFrames the foreachBatch runners return, so they stay until the
 interpreter exits.
+
+Every stream runs its stateful operators at ``STATE_PARTITIONS``
+(unless a caller passes another width), whatever the session's
+``spark.sql.shuffle.partitions`` is: the reason for the number is
+kept at the constant.
 """
 
 from __future__ import annotations
@@ -164,12 +169,38 @@ def _poll_state_guard(q, max_heap_bytes: int, warned: set) -> None:
         pass
 
 
+# The state width of every stream. Spark fixes a stateful query's
+# state partitions from spark.sql.shuffle.partitions at its first
+# micro-batch (the value goes into the offset log, and a restart
+# keeps it); AQE never coalesces them, and each state partition pays
+# a fixed store open/commit on every micro-batch. So the width is a
+# per-batch cost, and it follows the state keyspace, not the batch
+# shuffle width of the session. Measured on this engine:
+# - r7 (PERF.md "Streaming fixed-overhead floor"): about 20 ms per
+#   partition per batch; streaming_tumbling_counts at sf0.1 1.24 s
+#   at 32 partitions, 0.94 s at 8.
+# - r8 (PERF.md "Stream-stream join & continuous-trigger state
+#   sizing"): a stream-stream join opens four stores per partition;
+#   at sf0.01 the joins fell from ~7.5 s at 32 to ~3 s at 8.
+# - r11 (PERF.md streaming decade): applyInPandasWithState at 32
+#   oversubscribed a 32-core host (wall 24.2 s against 16.4 s at 8).
+# - r17 (PERF.md "4-vs-8 state partitions"): 4 and 8 are equal at
+#   sf0.1 and sf1, and 16 and 32 lose at both.
+# - One width for every stream (4 vCPUs, sf0.1, best of 2, session
+#   at 32 vs 8): the 17 stateful streams that used to inherit the
+#   session's width took 54.0 s together at 32 and 28.7 s at 8
+#   (each 1.5-2.7x); stateless foreachBatch streams run the same at
+#   either width; pysource_stream_counts, once pinned to 4, runs a
+#   median 4.0 s at 8 against 4.3 s at 4.
+# A fresh two-scale A/B is what may move this number.
+STATE_PARTITIONS = 8
+
 # Guards the [conf-pin -> start -> first-batch-commit] window so
 # CONCURRENT streaming queries in one session each consume their OWN
-# state_partitions pin. spark.sql.shuffle.partitions is session-global
-# and a stateful query resolves it during batch-0 planning (recording
-# it in the offset log for every later batch and restart) — without
-# the lock, query B's pin could land between query A's set and A's
+# width. spark.sql.shuffle.partitions is session-global and a
+# stateful query resolves it during batch-0 planning (recording it in
+# the offset log for every later batch and restart) — without the
+# lock, query B's pin could land between query A's set and A's
 # batch-0 plan. The lock serializes only startup; continuous-trigger
 # queries overlap freely from batch 1 on
 # (test_runner_concurrent_queries). Caveat: for availableNow
@@ -183,31 +214,19 @@ def _poll_state_guard(q, max_heap_bytes: int, warned: set) -> None:
 _pin_lock = threading.Lock()
 
 
-def _start_with_pin(spark, state_partitions: int | None, start_fn):
-    """Start a streaming query under the state-partition pin protocol:
-    serialize [set conf (pinned only), start, wait for the first
+def _start_with_pin(spark, state_partitions: int, start_fn):
+    """Start a streaming query at ``state_partitions`` state
+    partitions: serialize [set conf, start, wait for the first
     progress event (batch 0 committed, partition count durably in the
     offset log) or early termination], restoring the session conf
-    before releasing. Returns the started query.
-
-    UNPINNED starts take the lock too (r9 advice): batch-0 planning
-    reads the session-global spark.sql.shuffle.partitions, so an
-    unpinned query started concurrently with a pinned one could
-    otherwise plan batch 0 while the conf holds the OTHER query's pin
-    and durably record the wrong partition count in its offset log.
-    Holding the lock until the first progress event keeps every
-    query's batch-0 plan inside its own conf window; queries overlap
-    freely from batch 1 on. Caveat (documented, accepted): the 120 s
-    bounded wait can release the lock before a pathologically slow
-    batch 0 plans — at that point the window is no longer guaranteed,
-    but a batch 0 slower than 120 s has already failed the latency
-    bar this runner is sized for."""
+    before releasing. Returns the started query. Caveat (documented,
+    accepted): the 120 s bounded wait can release the lock before a
+    pathologically slow batch 0 plans — at that point the window is
+    no longer guaranteed, but a batch 0 slower than 120 s has already
+    failed the latency bar this runner is sized for."""
     with _pin_lock:
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions", str(state_partitions)
-            )
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
         try:
             q = start_fn()
             # Bounded wait: availableNow on an empty source can finish
@@ -263,15 +282,16 @@ def _run_stream(
     sink,
     until=None,
     timeout_sec: float = 300,
-    state_partitions: int | None = None,
+    state_partitions: int = STATE_PARTITIONS,
     poll_sec: float = 0.25,
     trigger_ms: int = 100,
     checkpoint: str | None = None,
 ) -> None:
     """The one stream lifecycle. ``sink(writer) -> writer`` sets up the
     sink on ``sdf.writeStream``; this adds the checkpoint and the
-    trigger, starts the query under ``_start_with_pin``, waits, and
-    always captures progress and stops the query.
+    trigger, starts the query under ``_start_with_pin`` at
+    ``state_partitions`` state partitions, waits, and always captures
+    progress and stops the query.
 
     Without ``checkpoint`` the run gets a fresh ``.tmp/ckpt-*``
     directory that is removed on every exit path, failures included.
@@ -369,7 +389,7 @@ def run_available_now(
     sdf: DataFrame,
     output_mode: str = "append",
     timeout_sec: int = 300,
-    state_partitions: int | None = None,
+    state_partitions: int = STATE_PARTITIONS,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion into a memory sink (S4)
     and return the sink's contents as a batch DataFrame.
@@ -381,17 +401,10 @@ def run_available_now(
     currently-available input, possibly across several micro-batches,
     then stops.
 
-    state_partitions sizes the stateful shuffle for THIS query (state
-    partitions are pinned from spark.sql.shuffle.partitions at the
-    first micro-batch — AQE never coalesces them, unlike batch
-    shuffles, so the session-wide batch setting of 32 over-partitions
-    tiny state): each state partition pays a fixed per-micro-batch
-    store open/commit cost, measured locally at ~20 ms each (PERF.md
-    "streaming fixed-overhead floor"). Callers whose state keyspace is
-    small (e.g. day x event_type windows) should pass a small value;
-    at real scale this is the standard sizing decision — state
-    partitions follow state cardinality/size, not the batch shuffle
-    width. Fresh checkpoint per run, so re-pinning is always safe.
+    ``state_partitions`` is the query's state width: by default
+    ``STATE_PARTITIONS``, whose comment keeps the measurements behind
+    it. Fresh checkpoint per run, so the width is always the one
+    given here.
 
     Like every stream, the run polls the state-memory guard: one
     RuntimeWarning if state passes ``STATE_MEMORY_GUARD_THRESHOLD``
@@ -420,7 +433,7 @@ def run_until(
     timeout_sec: int = 120,
     poll_sec: float = 0.25,
     trigger_ms: int = 100,
-    state_partitions: int | None = None,
+    state_partitions: int = STATE_PARTITIONS,
 ) -> DataFrame:
     """Drive a streaming DataFrame with a continuous processing-time
     trigger until ``predicate(sink_df) -> bool`` holds, then stop and
@@ -438,8 +451,7 @@ def run_until(
     Raises TimeoutError if the predicate is not satisfied within
     ``timeout_sec``.
 
-    ``state_partitions`` has the same semantics, sizing rationale, and
-    startup-lock concurrency safety as ``run_available_now``'s — and
+    ``state_partitions`` is as in ``run_available_now`` — and
     matters MORE here: the continuous trigger runs many more
     micro-batches, each paying the per-partition store floor.
     """

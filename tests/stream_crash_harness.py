@@ -35,8 +35,10 @@ Scenarios (each builds only its pipeline):
 Usage: python stream_crash_harness.py SCENARIO {crash|recover|clean}
        STORE PARTITIONS PATH...
 (tests call ``launch``). STORE is ``hdfs`` or ``rocksdb``; every
-process of one test must agree on it. PATHs are the scenario's
-arguments: ``STAGE OUT CKPT`` (stateful, ss_join, schema_*),
+process of one test must agree on it. PARTITIONS is the session's
+shuffle width and the state width each stream asks the runner for; a
+resumed checkpoint keeps the width it was started with. PATHs are the
+scenario's arguments: ``STAGE OUT CKPT`` (stateful, ss_join, schema_*),
 ``STAGE MV CKPT`` (matview), ``OUT CKPT ROWS`` (jsonl),
 ``STAGE OUT MARKERS`` (retry).
 Exit codes: crash exits nonzero (the halted JVM tears the client
@@ -106,6 +108,13 @@ def _session(store: str, partitions: str, master: str):
     return builder.getOrCreate()
 
 
+def _run(sdf, sink, **run) -> None:
+    """``_run_stream`` at the session's width (PARTITIONS) instead of
+    the runner's own."""
+    width = int(sdf.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    _run_stream(sdf, sink, state_partitions=width, **run)
+
+
 def _halt(spark) -> None:
     # Hard driver kill: halt() skips ALL JVM shutdown hooks, so nothing
     # stops the query cleanly or finalizes the in-flight batch.
@@ -147,7 +156,7 @@ def _halt_after_commit(spark, out: str, crash: bool, output_mode: str):
 
 def _stateful(spark, crash, stage, out, ckpt):
     sdf = _staged(spark, stage, "event_id long, user_id long")
-    _run_stream(
+    _run(
         running_count_stateful(sdf),
         _halt_after_commit(spark, out, crash, "update"),
         checkpoint=ckpt,
@@ -181,7 +190,7 @@ def _ss_join(spark, crash, stage, out, ckpt):
         F.coalesce("click_id", F.lit(-1)).alias("click_id"),
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),
     )
-    _run_stream(
+    _run(
         joined, _halt_after_commit(spark, out, crash, "append"), checkpoint=ckpt
     )
 
@@ -195,7 +204,7 @@ def _matview(spark, crash, stage, mv_root, ckpt):
             _halt(spark)
 
     sdf = _staged(spark, stage, "event_id long, event_type string, cents long")
-    _run_stream(sdf, lambda w: w.foreachBatch(sink), checkpoint=ckpt)
+    _run(sdf, lambda w: w.foreachBatch(sink), checkpoint=ckpt)
 
 
 def _jsonl(spark, crash, out, ckpt, rows):
@@ -216,7 +225,7 @@ def _jsonl(spark, crash, out, ckpt, rows):
             return False
         return sum(1 for _ in open_shards(out)) >= int(rows)
 
-    _run_stream(
+    _run(
         stream,
         lambda w: w.format("gostream_jsonl").option("path", out),
         until=until,
@@ -252,7 +261,7 @@ def _schema(extended: bool):
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        _run_stream(
+        _run(
             res, _halt_after_commit(spark, out, crash, "update"), checkpoint=ckpt
         )
 

@@ -373,7 +373,9 @@ def test_no_driver_side_antipatterns_in_package():
     stop predicate, which its docstring marks as test scaffolding
     outside the streaming plan — the BSP convergence check left the
     list in r17, see allowed_count_sites note), and streams started or
-    awaited only in streaming/runner.py — in the package AND in tests/,
+    awaited only in streaming/runner.py — in the package, tests/ AND
+    tools/ — with no ``state_partitions`` keyword in the package
+    outside streaming/runner.py (one state width, chosen there),
     matched on code tokens (string literals and comments, this
     test's own patterns included, do not count)."""
     import os
@@ -405,9 +407,11 @@ def test_no_driver_side_antipatterns_in_package():
                 bad.append((rel, ".count()"))
     # One stream lifecycle: every start/wait/stop goes through
     # streaming/runner.py (progress capture, state guard, startup lock,
-    # checkpoint cleanup) — the crash/restart tests included.
+    # state width, checkpoint cleanup) — the crash/restart tests and
+    # the probes included. The state width is the runner's too: no
+    # query in the package picks its own.
     runner = os.path.join(pkg, "streaming", "runner.py")
-    for top in (pkg, os.path.join(repo, "tests")):
+    for top in (pkg, os.path.join(repo, "tests"), os.path.join(repo, "tools")):
         for root, _dirs, files in os.walk(top):
             for fn in files:
                 path = os.path.join(root, fn)
@@ -418,9 +422,10 @@ def test_no_driver_side_antipatterns_in_package():
                         t for t in tokenize.generate_tokens(f.readline)
                         if t.type not in (tokenize.STRING, tokenize.COMMENT, tokenize.NL)
                     ]
+                pins = (("state_partitions", "="),) if top == pkg else ()
                 for a, b in zip(code, code[1:]):
                     if (a.string, b.string) in (
-                        (".", "writeStream"), ("awaitTermination", "(")
+                        (".", "writeStream"), ("awaitTermination", "("), *pins
                     ):
                         bad.append((os.path.relpath(path, repo), a.start[0]))
     assert not bad, bad

@@ -1083,6 +1083,31 @@ def test_runner_concurrent_queries(spark, sf_dir):
     assert pins_seen == [2, 4, 8], json.dumps(pins_seen)
 
 
+def test_stream_state_width_is_the_runners_not_the_sessions(spark, sf_dir):
+    """A registered stateful query that names no width runs every
+    state operator at runner.STATE_PARTITIONS, whatever the session's
+    spark.sql.shuffle.partitions reads, and leaves the session's value
+    as it found it."""
+    from gostream_spark.registry import get_query
+    from gostream_spark.streaming import runner
+
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    runner.RECENT_PROGRESS.clear()
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "3")
+        get_query("streaming_sliding_counts").fn(spark, sf_dir)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    widths = [
+        op["numShufflePartitions"]
+        for stream in runner.RECENT_PROGRESS
+        for b in stream["batches"]
+        for op in b.get("stateOperators") or []
+    ]
+    assert widths and set(widths) == {runner.STATE_PARTITIONS}, widths
+
+
 def test_state_schema_evolution_is_refused_then_replayed(spark, tmp_path, sf_dir):
     """Pin what Spark does when a stateful query redeploys with a
     CHANGED state schema against an existing checkpoint (VERDICT r8
@@ -1191,16 +1216,17 @@ def test_matview_survives_whole_driver_kill(spark, tmp_path, sf_dir):
 def test_stateful_restart_rescale_keeps_checkpoint_state_partitions(
     spark, tmp_path, sf_dir
 ):
-    """A redeploy that changes spark.sql.shuffle.partitions must NOT
-    change a recovering stateful query's state partitioning: Spark
-    pins the value in the checkpoint's offset-log conf at batch 0 and
-    restores it on every restart (the property the runner's
-    state_partitions pin relies on — runner.py documents it; this
-    test makes it a pinned fact instead of an assertion). A crash run
-    at 4 shuffle partitions halt()s mid-stream, then the recovery
-    driver starts with 9 — results must equal the batch ground truth
-    AND the checkpoint's state directory must still hold exactly
-    partitions 0..3, with no partition-4+ store ever created. The pin
+    """A redeploy that changes the state width must NOT change a
+    recovering stateful query's state partitioning: Spark pins the
+    value in the checkpoint's offset-log conf at batch 0 and restores
+    it on every restart (the property the runner's state width relies
+    on — runner.py documents it; this test makes it a pinned fact
+    instead of an assertion). A crash run at 4 partitions (session
+    and runner width) halt()s mid-stream, then the recovery driver
+    starts with 9 and asks the runner for 9 — results must equal the
+    batch ground truth AND the checkpoint's state directory must
+    still hold exactly partitions 0..3, with no partition-4+ store
+    ever created: the offset log beats the runner's own pin. The pin
     lives in offset-log metadata, so one provider (HDFS-backed
     default) suffices."""
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").select(

@@ -88,46 +88,38 @@ def main() -> None:
     # per-stream marginal cost.
     import shutil
     import tempfile
-    import uuid
 
     from gostream_spark.pysource import SCHEMA, ensure_registered
+    from gostream_spark.streaming.runner import _run_stream
 
     ensure_registered(spark)
     spark.read.format("gostream_synth").schema(SCHEMA).option(
         "rows", 16
     ).load().count()
     _wout = tempfile.mkdtemp(prefix="gs-cold-warm-")
-    _wq = (
-        spark.readStream.format("gostream_synth")
-        .schema(SCHEMA)
-        .option("rows", 16)
-        .option("batch", 16)
-        .load()
-        .writeStream.format("gostream_jsonl")
-        .option("path", _wout)
-        .option(
-            "checkpointLocation", os.path.join(_wout, f"ckpt-{uuid.uuid4().hex}")
+    # A failed warm-up (ADVICE r12) is reported, not fatal: it would
+    # otherwise skew every audited timing this warm-up exists to clean
+    # up without a word.
+    try:
+        _run_stream(
+            spark.readStream.format("gostream_synth")
+            .schema(SCHEMA)
+            .option("rows", 16)
+            .option("batch", 16)
+            .load(),
+            lambda w: w.format("gostream_jsonl").option("path", _wout),
+            until=lambda: any(f.startswith("_batch") for f in os.listdir(_wout)),
+            timeout_sec=60,
+            poll_sec=0.05,
         )
-        .trigger(processingTime="100 milliseconds")
-        .start()
-    )
-    # Break on warm-query failure too (ADVICE r12): a sink error would
-    # otherwise burn the whole 60 s deadline silently and skew every
-    # audited timing this warm-up exists to clean up.
-    _deadline = time.time() + 60
-    while time.time() < _deadline and not any(
-        f.startswith("_batch") for f in os.listdir(_wout)
-    ):
-        if _wq.exception() is not None or not _wq.isActive:
-            print(
-                "cold_audit WARNING: warm-up stream died before its "
-                f"first batch: {_wq.exception()}",
-                file=sys.stderr,
-            )
-            break
-        time.sleep(0.05)
-    _wq.stop()
-    shutil.rmtree(_wout, ignore_errors=True)
+    except Exception as e:  # noqa: BLE001
+        print(
+            "cold_audit WARNING: warm-up stream did not commit a batch: "
+            f"{type(e).__name__}: {e}",
+            file=sys.stderr,
+        )
+    finally:
+        shutil.rmtree(_wout, ignore_errors=True)
     times: dict[str, float] = {}
     for n in names:
         t0 = time.perf_counter()

@@ -66,18 +66,12 @@ def _gc_ms(spark) -> int:
     return sum(beans.get(i).getCollectionTime() for i in range(beans.size()))
 
 
-class _StallTimeout(TimeoutError):
-    """Stream still running at the probe deadline — or dead mid-replay
-    (see _run_dedup_noop's except clause); either way it carries the
-    partial per-batch progress so a failed arm still reports its
-    curve (n_batches, state rows, first_warn_batch)."""
-
-    def __init__(self, msg: str, progress: list[dict]):
-        super().__init__(msg)
-        self.progress = progress
+def _op_total(progress: dict, field: str) -> int:
+    """One batch's ``field`` summed over its state operators."""
+    return sum(o.get(field, 0) for o in progress.get("stateOperators") or [])
 
 
-def _run_dedup_noop(spark, sf_dir: str, mpt: int | None) -> list[dict]:
+def _run_dedup_noop(spark, sf_dir: str, mpt: int | None) -> float:
     """The probe pipeline: streaming_dedup's exact state shape (stream
     unioned with itself -> dropDuplicates(event_id), state rows =
     distinct event ids) but driven into a streaming NOOP sink instead
@@ -85,43 +79,31 @@ def _run_dedup_noop(spark, sf_dir: str, mpt: int | None) -> list[dict]:
     every deduped row on the driver (~4M rows at sf4 — GBs of heap
     that BOTH providers pay equally), which at a small -Xmx would OOM
     the arm on sink memory and mask the state-store crossover this
-    probe exists to measure. State-partition pin 8 matches the
-    registered query (session conf is pinned into the offset log at
-    the first batch; one query per child process, so no lock needed).
-    Returns per-batch progress dicts."""
-    import json as _json
+    probe exists to measure. The stream runs through the runner's one
+    lifecycle, at its state width like the registered query, so the
+    per-batch progress of this run — also the partial curve of a
+    stall or a mid-replay death — is the last RECENT_PROGRESS entry.
+    Returns the checkpoint's size in MiB."""
+    import shutil
     import tempfile
 
     from gostream_spark.streaming.ops import dedup_stream
+    from gostream_spark.streaming.runner import RECENT_PROGRESS, _run_stream
     from gostream_spark.streaming.source import file_stream
 
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     ev = file_stream(spark, sf_dir, "events", mpt)
     doubled = ev.union(file_stream(spark, sf_dir, "events", mpt))
     dd = dedup_stream(doubled, keys=["event_id"], unbounded_state=True)
     ckpt = tempfile.mkdtemp(prefix="gs-capacity-ckpt-")
-    q = (
-        dd.writeStream.format("noop")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
+    RECENT_PROGRESS.clear()
     try:
-        if not q.awaitTermination(2100):
-            # Keep the per-batch curve: the r12 sf4/1300m stall showed
-            # batches committing at full speed right up to the cliff,
-            # and that reading had to be reconstructed from checkpoint
-            # offset mtimes because the progress list was lost here.
-            partial = [_json.loads(p.json) for p in q.recentProgress]
-            raise _StallTimeout(
-                "probe stream still running after 2100s", partial
-            )
-        out = [_json.loads(p.json) for p in q.recentProgress]
+        _run_stream(
+            dd, lambda w: w.format("noop"), timeout_sec=2100, checkpoint=ckpt
+        )
         # Disk-budget reading (r13): du of the checkpoint tree (state
-        # snapshots + RocksDB changelog + offsets/commits) before the
-        # finally-block rmtree — the `spark.local.dir`/checkpoint
-        # space a production flip must budget alongside RAM. Rides on
-        # the function attribute (last_ckpt_mib) read by child().
+        # snapshots + RocksDB changelog + offsets/commits) — the
+        # `spark.local.dir`/checkpoint space a production flip must
+        # budget alongside RAM.
         total = 0
         for root, _dirs, files in os.walk(ckpt):
             for f in files:
@@ -129,40 +111,10 @@ def _run_dedup_noop(spark, sf_dir: str, mpt: int | None) -> list[dict]:
                     total += os.path.getsize(os.path.join(root, f))
                 except OSError:
                     pass
-        _run_dedup_noop.last_ckpt_mib = round(total / 1048576, 1)
-        return out
-    except _StallTimeout:
-        raise
-    except Exception as e:  # noqa: BLE001
-        # A mid-replay death (StreamingQueryException from a task OOM
-        # — observed 1-in-8 on the r13 cliff-arm trials) must carry
-        # its partial curve too, or the arm reports outcome=error with
-        # n_batches/first_warn_batch lost (exactly the data that shows
-        # whether the guard warned before the death). Re-raise as
-        # _StallTimeout so the child's handler extracts the tail the
-        # same way; the message keeps the original exception type.
-        try:
-            partial = [_json.loads(p.json) for p in q.recentProgress]
-        except Exception:  # noqa: BLE001 — gateway may be dead
-            raise e from None
-        raise _StallTimeout(
-            f"stream died mid-replay: {type(e).__name__}: "
-            f"{str(e)[:200]}",
-            partial,
-        ) from e
+        return round(total / 1048576, 1)
     finally:
-        # In the mid-replay-death path the gateway may already be
-        # dead; an unguarded stop() raising here would REPLACE the
-        # in-flight _StallTimeout carrying the partial per-batch
-        # curve — the very data the recovery path preserves.
-        try:
-            q.stop()
-        except Exception:  # noqa: BLE001
-            pass
         # RocksDB changelog checkpointing writes GBs of SST/changelog
         # per sf4 arm; 16 arms of leaked mkdtemp dirs is real disk.
-        import shutil
-
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
@@ -211,113 +163,69 @@ def child(sf_dir: str, provider: str, warmup_dir: str) -> None:
             "true",
         )
     _run_dedup_noop(spark, warmup_dir, None)  # JIT warm-up
-    rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
-    gc0, t0 = _gc_ms(spark), time.perf_counter()
-    out: dict = {
-        "provider": provider,
-        "max_heap_mib": int(rt.maxMemory() / 1048576),
-    }
-    try:
-        progress = _run_dedup_noop(spark, sf_dir, 1)
-        wall = time.perf_counter() - t0
-        # Guard lead time (r13): evaluate the runtime guard's pure
-        # core on each batch's progress and report the first batch
-        # it would warn at — turns "the 0.5x flip rule warns before
-        # the ~0.7x cliff" from an inference into a per-arm reading.
-        from gostream_spark.streaming.runner import (
-            state_pressure_warning,
-        )
+    from gostream_spark.streaming.runner import (
+        RECENT_PROGRESS,
+        state_pressure_warning,
+    )
 
-        first_warn = next(
-            (
-                b.get("batchId")
-                for b in progress
-                if state_pressure_warning(b, rt.maxMemory())
-            ),
-            None,
-        )
+    rt = spark.sparkContext._jvm.java.lang.Runtime.getRuntime()
+    max_heap = int(rt.maxMemory())
+    gc0, t0 = _gc_ms(spark), time.perf_counter()
+    out: dict = {"provider": provider, "max_heap_mib": max_heap // 1048576}
+    try:
+        ckpt_mib = _run_dedup_noop(spark, sf_dir, 1)
+        out.update(outcome="ok", ckpt_mib=ckpt_mib)
+    except Exception as e:  # noqa: BLE001 — OOM arms die many ways
+        out.update(outcome="error", error=f"{type(e).__name__}: {str(e)[:300]}")
+    out["wall_s"] = round(time.perf_counter() - t0, 2)
+    # _gc_ms is a Py4J round-trip; if the JVM is already dead (the
+    # OOM case this probe exists to catch) it raises, and the
+    # CAPACITY_JSON line must still be printed.
+    try:
+        out["gc_ms"] = _gc_ms(spark) - gc0
+    except Exception:  # noqa: BLE001
+        out["gc_ms"] = 0
+    out.update(_jvm_mem_mib(spark))
+    # The run's per-batch curve, partial after a stall or a death:
+    # the r12 sf4/1300m stall committed batches at full speed right
+    # up to the cliff, and the tail shows whether the guard warned
+    # before the death.
+    progress = RECENT_PROGRESS[-1]["batches"] if RECENT_PROGRESS else []
+    if progress:
         batches = [
             {
-                "add": (b.get("durationMs") or {}).get("addBatch", 0),
-                "commit": sum(
-                    o.get("commitTimeMs", 0)
-                    for o in (b.get("stateOperators") or [])
-                ),
-                "rows": sum(
-                    o.get("numRowsTotal", 0)
-                    for o in (b.get("stateOperators") or [])
-                ),
-                "bytes": sum(
-                    o.get("memoryUsedBytes", 0)
-                    for o in (b.get("stateOperators") or [])
-                ),
+                "batch": b.get("batchId"),
+                "add_ms": (b.get("durationMs") or {}).get("addBatch", 0),
+                "commit": _op_total(b, "commitTimeMs"),
+                "rows": _op_total(b, "numRowsTotal"),
+                "bytes": _op_total(b, "memoryUsedBytes"),
             }
             for b in progress
         ]
         out.update(
-            outcome="ok",
-            wall_s=round(wall, 2),
-            gc_ms=_gc_ms(spark) - gc0,
-            add_batch_ms=sum(b["add"] for b in batches),
+            add_batch_ms=sum(b["add_ms"] for b in batches),
             commit_ms=sum(b["commit"] for b in batches),
-            state_rows=max((b["rows"] for b in batches), default=0),
-            state_mib=round(
-                max((b["bytes"] for b in batches), default=0) / 1048576, 1
-            ),
+            state_rows=max(b["rows"] for b in batches),
+            state_mib=round(max(b["bytes"] for b in batches) / 1048576, 1),
             n_batches=len(batches),
-            first_warn_batch=first_warn,
-            ckpt_mib=getattr(_run_dedup_noop, "last_ckpt_mib", None),
-            **_jvm_mem_mib(spark),
+            # Guard lead time (r13): the first batch at which the
+            # runtime guard's pure core would warn — turns "the 0.5x
+            # flip rule warns before the ~0.7x cliff" from an
+            # inference into a per-arm reading.
+            first_warn_batch=next(
+                (
+                    b.get("batchId")
+                    for b in progress
+                    if state_pressure_warning(b, max_heap)
+                ),
+                None,
+            ),
         )
-    except Exception as e:  # noqa: BLE001 — OOM arms die many ways
-        # _gc_ms is a Py4J round-trip; if the JVM is already dead (the
-        # OOM case this probe exists to catch) it raises INSIDE this
-        # handler and the CAPACITY_JSON line is lost, downgrading a
-        # classified error to a bare 'died' row. Never let it.
-        try:
-            gc_delta = _gc_ms(spark) - gc0
-        except Exception:  # noqa: BLE001
-            gc_delta = 0
-        out.update(
-            outcome="error",
-            wall_s=round(time.perf_counter() - t0, 2),
-            gc_ms=gc_delta,
-            error=f"{type(e).__name__}: {str(e)[:300]}",
-            **_jvm_mem_mib(spark),
-        )
-        if isinstance(e, _StallTimeout) and e.progress:
-            tail = [
-                {
-                    "batch": b.get("batchId"),
-                    "add_ms": (b.get("durationMs") or {}).get("addBatch", 0),
-                    "rows": sum(
-                        o.get("numRowsTotal", 0)
-                        for o in (b.get("stateOperators") or [])
-                    ),
-                }
-                for b in e.progress
+        if out["outcome"] != "ok":
+            out["batch_tail"] = [
+                {k: b[k] for k in ("batch", "add_ms", "rows")}
+                for b in batches[-8:]
             ]
-            try:
-                from gostream_spark.streaming.runner import (
-                    state_pressure_warning,
-                )
-
-                fw = next(
-                    (
-                        b.get("batchId")
-                        for b in e.progress
-                        if state_pressure_warning(b, rt.maxMemory())
-                    ),
-                    None,
-                )
-            except Exception:  # noqa: BLE001
-                fw = None
-            out.update(
-                n_batches=len(e.progress),
-                state_rows=max((b["rows"] for b in tail), default=0),
-                batch_tail=tail[-8:],
-                first_warn_batch=fw,
-            )
     print("CAPACITY_JSON " + json.dumps(out), flush=True)
 
 

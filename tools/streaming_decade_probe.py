@@ -55,10 +55,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF01 = "/root/testdata/sf0.1"
 SF1 = os.path.join(REPO, ".tmp", "decadedata", "sf1")
 
-# The stateful-streaming family with a real state store: tumbling agg
-# (T1), dedup (T5), applyInPandasWithState (T6), session windows (T3),
-# stream-stream join (J10). All five take the max_files_per_trigger
-# replay knob.
+# The stateful-streaming family with a real state store: tumbling and
+# sliding windows (T1, T2), dedup and dedup within the watermark (T5),
+# applyInPandasWithState (T6), session windows (T3) and the
+# stream-stream join (J10). All seven take the max_files_per_trigger
+# replay knob and run at the runner's STATE_PARTITIONS.
 PROBE_QUERIES = [
     "streaming_tumbling_counts",
     "streaming_sliding_counts",
