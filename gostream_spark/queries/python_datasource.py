@@ -135,18 +135,6 @@ FROM events GROUP BY event_type
 """
 
 
-def _sink_dir(sf_dir: str, tag: str) -> str:
-    import hashlib
-    import os
-
-    h = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-    )
-    return os.path.join(root, f"pysink-{tag}-{h}")
-
-
 @register("pysink_batch_roundtrip", oracle=_SINK_BATCH_ORACLE, tags=("S5", "ext"))
 def pysink_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch write through the custom Python DataSourceWriter
@@ -157,10 +145,10 @@ def pysink_batch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from gostream_spark.io import load_table
+    from gostream_spark.streaming.runner import _sink_dir
 
     ensure_registered(spark)
-    out = _sink_dir(sf_dir, "batch")
-    os.makedirs(out, exist_ok=True)
+    out = _sink_dir()
     (
         load_table(spark, sf_dir, "events")
         .select("event_id", "user_id", "event_type")
@@ -210,16 +198,11 @@ def pysink_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer commit hook — each a fresh interpreter importing pyspark),
     which ARE the contract under test; a long-running production
     stream amortizes them to zero."""
-    import os
-    import shutil
-
     from gostream_spark.pysource import SCHEMA
-    from gostream_spark.streaming.runner import _run_stream
+    from gostream_spark.streaming.runner import _run_stream, _sink_dir
 
     ensure_registered(spark)
-    out = _sink_dir(sf_dir, "stream")
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
+    out = _sink_dir()
     stream = (
         spark.readStream.format("gostream_synth")
         .schema(SCHEMA)

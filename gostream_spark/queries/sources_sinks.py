@@ -104,22 +104,11 @@ _EVENT_COLS = ("event_id", "user_id", "event_type")
 _EVENT_DDL = "event_id BIGINT, user_id BIGINT, event_type STRING"
 
 
-def _roundtrip_dir(sf_dir: str, fmt: str) -> str:
-    import hashlib
-    import os
-
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".tmp",
-    )
-    return os.path.join(root, f"src-{fmt}-{tag}")
-
-
 def _file_source_agg(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
     from gostream_spark.io import load_table
+    from gostream_spark.streaming.runner import _sink_dir
 
-    path = _roundtrip_dir(sf_dir, fmt)
+    path = _sink_dir()
     subset = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
     writer = subset.write.mode("overwrite")
     if fmt == "csv":
@@ -186,8 +175,9 @@ def partitioned_sink_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune → aggregate roundtrip end to end against the unpartitioned
     oracle)."""
     from gostream_spark.io import load_table
+    from gostream_spark.streaming.runner import _sink_dir
 
-    path = _roundtrip_dir(sf_dir, "part")
+    path = _sink_dir()
     docs = load_table(spark, sf_dir, "documents")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
     return (
@@ -283,9 +273,10 @@ def parquet_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame
     pin the merged schema explicitly after the first read instead of
     re-merging every query."""
     from gostream_spark.io import load_table
+    from gostream_spark.streaming.runner import _sink_dir
 
     docs = load_table(spark, sf_dir, "documents")
-    path = _roundtrip_dir(sf_dir, "evolve")
+    path = _sink_dir()
     v1 = docs.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source", "n_chars")
     v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id", "source", "n_chars", "lang"

@@ -385,11 +385,9 @@ def streaming_jsonl_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset is staged to .tmp as JSONL once per run, then consumed via
     readStream.json → per-type counts → complete-mode memory sink;
     equals the batch aggregate over the same rows."""
-    import os
+    from gostream_spark.streaming.runner import _sink_dir
 
-    from gostream_spark.queries.sources_sinks import _roundtrip_dir
-
-    path = _roundtrip_dir(sf_dir, "streamjson")
+    path = _sink_dir()
     subset = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     subset.write.mode("overwrite").json(path)
     sdf = (
@@ -439,9 +437,9 @@ def streaming_csv_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicit schema, maxFilesPerTrigger batching) — the
     log-shipping/ingest-edge twin of `streaming_jsonl_source`;
     equals the batch aggregate over the same rows."""
-    from gostream_spark.queries.sources_sinks import _roundtrip_dir
+    from gostream_spark.streaming.runner import _sink_dir
 
-    path = _roundtrip_dir(sf_dir, "streamcsv")
+    path = _sink_dir()
     subset = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     subset.write.mode("overwrite").csv(path)
     sdf = (
@@ -819,6 +817,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB corpus scale, so the per-batch join is a broadcast — the
     stream side never shuffles. Final sink contents = the batch
     decontamination's clean set, asserted by the oracle."""
+    from gostream_spark.queries.corpus_ops import _word_ngrams
     from gostream_spark.streaming.runner import _sink_dir
 
     import shutil
@@ -826,7 +825,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("source") == "src0")
-        .select(F.explode(_grams4(F.split("text", " "))).alias("g"))
+        .select(F.explode(_word_ngrams(F.split("text", " "), 4)).alias("g"))
         .distinct()
     )
     out = _sink_dir()
@@ -834,7 +833,7 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         cand = batch_df.filter(F.col("source") != "src0")
         grams = cand.select(
-            "doc_id", F.explode(_grams4(F.split("text", " "))).alias("g")
+            "doc_id", F.explode(_word_ngrams(F.split("text", " "), 4)).alias("g")
         )
         contaminated = (
             grams.join(F.broadcast(bench), "g", "left_semi")
@@ -853,18 +852,6 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     shutil.rmtree(out, ignore_errors=True)
     return result
-
-
-def _grams4(toks):
-    """Word 4-grams of a token array column (empty below 4 tokens)."""
-    n = F.size(toks)
-    return F.when(
-        n >= 4,
-        F.transform(
-            F.sequence(F.lit(0), n - 4),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, 4)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 # --- S2+T4+T6: EventTimeTimeout watermark-closed sessions ---------------

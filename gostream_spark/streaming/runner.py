@@ -19,9 +19,9 @@ collide, and the fresh checkpoint is removed however the run ends.
 The one exception is a caller-owned checkpoint passed to
 ``_run_stream`` (the crash/restart tests): that directory is resumed
 if it holds an earlier run's offsets and state, and never removed.
-The ``sink-*`` parquet directories (``_sink_dir``) back the
-DataFrames the foreachBatch runners return, so they stay until the
-interpreter exits.
+The ``sink-*`` directories (``_sink_dir``) back the DataFrames the
+foreachBatch runners and the file round-trip queries return, so they
+stay until the interpreter exits; each call gets a fresh one.
 
 Every stream runs its stateful operators at ``STATE_PARTITIONS``
 (unless a caller passes another width), whatever the session's
@@ -251,10 +251,11 @@ def _scratch(kind: str) -> str:
 
 
 def _sink_dir() -> str:
-    """A fresh parquet sink directory, removed at interpreter exit: the
-    foreachBatch runners and the streaming queries return DataFrames
-    that read it lazily, so it cannot go earlier. ``_sweep_stale``
-    removes those of a killed process."""
+    """A fresh sink directory, removed at interpreter exit: the
+    foreachBatch runners, the streaming queries and the file
+    round-trip queries return DataFrames that read it lazily, so it
+    cannot go earlier. ``_sweep_stale`` removes those of a killed
+    process."""
     path = _scratch("sink")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path

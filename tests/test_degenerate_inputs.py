@@ -1,32 +1,21 @@
-"""Degenerate-input parity: the generator-expression queries
-(sequence/slice over size-derived ranges) must agree with their
-DuckDB oracles on PATHOLOGICAL documents — empty text, sub-shingle
-text, zero-byte payloads — where Spark's sequence() would otherwise
-descend or throw. The production fixtures never contain these sizes;
-a regenerated fixture or a real corpus will."""
+"""Degenerate-input parity: the queries must agree with their DuckDB
+oracles on PATHOLOGICAL inputs — empty text, sub-shingle text,
+zero-byte payloads, tied timestamps, NULL values, zero-norm vectors,
+orders without lineitems — where Spark's sequence() would otherwise
+descend or throw and ANSI division would fail. The production fixtures
+never contain these shapes; a regenerated fixture or a real corpus
+will. The fixtures are staged by ``tools.degenerate_probe.stage`` and
+every case checks through ``tools.oracle.compare``."""
 
 from __future__ import annotations
 
-import os
 import shutil
-import uuid
 
-import duckdb
 import pytest
 
 from gostream_spark.registry import get_query
-
-TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-
-_DEGENERATE_DOCS = [
-    # (doc_id, text, lang, source, n_chars)
-    (1, "", "en", "src1", 0),                       # empty
-    (2, "a", "en", "src1", 1),                      # single char
-    (3, "abcdefg", "en", "src2", 7),                # one short of a hash window
-    (4, "abcdefgh", "en", "src2", 8),               # exactly one hash window
-    (5, "one two", "de", "src3", 7),                # 2 tokens < 3-shingle
-    (6, "alpha bravo charlie delta echo", "en", "src3", 30),  # normal
-]
+from tools.degenerate_probe import stage
+from tools.oracle import compare, oracle_con
 
 QUERIES = [
     # generator-expression queries (sequence/slice over size-derived
@@ -91,55 +80,25 @@ QUERIES = [
 
 @pytest.fixture(scope="module")
 def degenerate_dir(spark):
-    d = os.path.join(TMP, f"degen-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    df = spark.createDataFrame(
-        _DEGENERATE_DOCS,
-        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
-    )
-    sub = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-    df.coalesce(1).write.mode("overwrite").parquet(sub)
-    part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(sub, part), os.path.join(d, "documents.parquet"))
-    shutil.rmtree(sub, ignore_errors=True)
+    """The full degenerate fixture (tools/degenerate_probe.py)."""
+    d = stage(spark)
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _check(spark, d, name):
+    q = get_query(name)
+    con = oracle_con(d)
+    try:
+        compare(q.fn(spark, d), q.oracle, con)
+    finally:
+        con.close()
+
+
 @pytest.mark.parametrize("name", QUERIES)
 def test_degenerate_docs_match_oracle(spark, degenerate_dir, name):
-    q = get_query(name)
-    got = sorted(tuple(r) for r in q.fn(spark, degenerate_dir).collect())
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{degenerate_dir}/documents.parquet')"
-    )
-    want = sorted(tuple(r) for r in con.execute(q.oracle).fetchall())
-    assert got == want, f"{name}: {got[:5]} != {want[:5]}"
+    _check(spark, degenerate_dir, name)
 
-
-_DEGENERATE_EVENTS = [
-    # (event_id, ts, user_id, event_type, value, props)
-    (1, "2024-01-05 12:00:00", 100, "click", 1.5, '{"k":1}'),     # lone event
-    (2, "2024-01-05 12:00:00", 101, "click", 2.0, '{"k":2}'),     # tied ts...
-    (3, "2024-01-05 12:00:00", 101, "view", 3.0, '{"k":3}'),      # ...same user
-    (4, "2024-01-05 12:00:00", 101, "purchase", 4.0, "{}"),
-    (5, "2024-01-06 12:00:00", 102, "click", None, None),          # NULL value
-    (6, "2024-01-06 13:00:00", 102, "view", 5.0, '{"k":4}'),
-    (7, "2024-01-07 12:00:00", 103, "click", 0.0, "{}"),
-    (8, "2024-01-07 12:00:01", 103, "click", -1.0, "{}"),
-    (9, "2024-01-07 12:00:02", 103, "click", -1.0, "{}"),
-]
-
-_DEGENERATE_EMBEDDINGS = [
-    (0, [1.0, 0.0, 0.0, 0.0], 0),       # the conventional query vector
-    (10, [0.0, 0.0, 0.0, 0.0], 1),      # ZERO vector (norm 0)
-    (20, [1.0, 0.0, 0.0, 0.0], 2),      # identical to the query
-    (30, [-1.0, 0.0, 0.0, 0.0], 0),     # antipodal
-    (40, [0.5, 0.5, 0.5, 0.5], 1),
-    (50, [1e-30, 0.0, 0.0, 0.0], 2),    # tiny norm
-]
 
 EVENT_QUERIES = [
     "session_window", "tumbling_window", "sliding_window",
@@ -194,60 +153,20 @@ EMB_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def degenerate_events_dir(spark):
-    from datetime import datetime
-
-    d = os.path.join(TMP, f"degen-ev-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    rows = [
-        (i, datetime.strptime(t, "%Y-%m-%d %H:%M:%S"), u, et, v, p)
-        for i, t, u, et, v, p in _DEGENERATE_EVENTS
-    ]
-    edf = spark.createDataFrame(
-        rows,
-        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING",
-    )
-    embdf = spark.createDataFrame(
-        _DEGENERATE_EMBEDDINGS, "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
-    )
-    for name, df in [("events", edf), ("embeddings", embdf)]:
-        sub = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-        shutil.move(os.path.join(sub, part), os.path.join(d, f"{name}.parquet"))
-        shutil.rmtree(sub, ignore_errors=True)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def _check(spark, d, name, tables):
-    q = get_query(name)
-    got = [tuple(map(str, r)) for r in q.fn(spark, d).collect()]
-    con = duckdb.connect()
-    for t in tables:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')"
-        )
-    want = [tuple(map(str, r)) for r in con.execute(q.oracle).fetchall()]
-    assert sorted(got) == sorted(want), f"{name}: {sorted(got)[:4]} != {sorted(want)[:4]}"
-
-
 @pytest.mark.parametrize("name", EVENT_QUERIES)
-def test_degenerate_events_match_oracle(spark, degenerate_events_dir, name):
+def test_degenerate_events_match_oracle(spark, degenerate_dir, name):
     """Tied timestamps, NULL values, lone-event users, negative and
     repeated values — the shapes real event streams contain that the
     generated fixtures don't."""
-    _check(spark, degenerate_events_dir, name, ["events"])
+    _check(spark, degenerate_dir, name)
 
 
 @pytest.mark.parametrize("name", EMB_QUERIES)
-def test_degenerate_embeddings_match_oracle(spark, degenerate_events_dir, name):
+def test_degenerate_embeddings_match_oracle(spark, degenerate_dir, name):
     """Zero-norm, antipodal, identical and denormal vectors through
     every cosine query — parity depends on try_divide matching
     DuckDB's division-by-zero -> NULL."""
-    _check(spark, degenerate_events_dir, name, ["embeddings"])
+    _check(spark, degenerate_dir, name)
 
 
 # --- star-schema degenerate shapes (r7, found by tools/degenerate_probe) --
@@ -265,48 +184,12 @@ STAR_QUERIES = [
 ]
 
 
-@pytest.fixture(scope="module")
-def degenerate_star_dir(spark):
-    from tools.degenerate_probe import stage
-
-    d = stage(spark)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
-
-
 @pytest.mark.parametrize("name", STAR_QUERIES)
-def test_degenerate_star_match_oracle(spark, degenerate_star_dir, name):
+def test_degenerate_star_match_oracle(spark, degenerate_dir, name):
     """Orders without lineitems, 100% discounts (zero revenue sums),
     zero/negative balances, multi-space part names — the relational
-    shapes the benign driver fixtures never produce. Comparator is the
-    probe's parity-canonical one (NULL == NaN, pandas-coerced integral
-    floats == ints)."""
-    from tools.degenerate_probe import _canon
-
-    q = get_query(name)
-    sdf = q.fn(spark, degenerate_star_dir)
-    got = sorted(
-        tuple(_canon(v) for v in r)
-        for r in sdf.select(*sorted(sdf.columns)).collect()
-    )
-    con = duckdb.connect()
-    try:
-        for t in (
-            "region nation customer supplier part orders lineitem "
-            "events documents embeddings".split()
-        ):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * "
-                f"FROM read_parquet('{degenerate_star_dir}/{t}.parquet')"
-            )
-        ddf = con.execute(q.oracle).fetchdf()
-        want = sorted(
-            tuple(_canon(v) for v in row)
-            for row in ddf[sorted(ddf.columns)].itertuples(index=False)
-        )
-    finally:
-        con.close()
-    assert got == want, f"{name}: {got[:4]} != {want[:4]}"
+    shapes the benign driver fixtures never produce."""
+    _check(spark, degenerate_dir, name)
 
 
 # --- NULL-group-key shapes (r8, found by self-review) --------------------
@@ -346,65 +229,47 @@ NULLKEY_EMB_QUERIES = [
 
 @pytest.fixture(scope="module")
 def degenerate_nullkey_dir(spark):
-    from datetime import datetime
-
-    d = os.path.join(TMP, f"degen-null-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    ts = datetime(2024, 1, 5, 12, 0, 0)
-    docs = spark.createDataFrame(
-        [
+    ts = "2024-01-05 12:00:00"
+    d = stage(spark, {
+        "documents": [
             (1, "alpha beta alpha", "en", None, 16),   # NULL source, real text
             (2, None, "en", "src1", 0),                # NULL text, real source
             (3, None, "en", None, 0),                  # both NULL
             (4, "alpha beta alpha", "en", "src1", 16), # same tokens as doc 1
             (5, "gamma delta", "de", "src2", 11),
         ],
-        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
-    )
-    events = spark.createDataFrame(
-        [
+        "events": [
             (1, ts, 100, None, 1.5, "{}"),    # NULL event_type group...
             (2, ts, 101, None, 2.5, "{}"),    # ...with two users
             (3, ts, None, "nu", 3.0, "{}"),   # all-NULL user_id group
             (4, ts, None, "nu", None, "{}"),  # ...and a NULL value
             (5, ts, 102, "click", 1.0, "{}"),
         ],
-        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, "
-        "value DOUBLE, props STRING",
-    )
-    emb = spark.createDataFrame(
-        [
+        "embeddings": [
             (1, [1.0, 0.0, 0.0, 0.0], 0),
             (2, None, 0),                      # NULL embedding
             (3, [0.5, None, 0.25, 0.0], 1),    # NULL element
             (4, [], 1),                        # empty array
             (5, [1.0, 0.0, 0.0, 0.0], 2),      # identical to vec 1
         ],
-        "vec_id LONG, embedding ARRAY<FLOAT>, label INT",
-    )
-    for name, df in [("documents", docs), ("events", events), ("embeddings", emb)]:
-        sub = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
-        part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-        shutil.move(os.path.join(sub, part), os.path.join(d, f"{name}.parquet"))
-        shutil.rmtree(sub, ignore_errors=True)
+    })
     yield d
     shutil.rmtree(d, ignore_errors=True)
 
 
 @pytest.mark.parametrize("name", NULLKEY_DOC_QUERIES)
 def test_nullkey_docs_match_oracle(spark, degenerate_nullkey_dir, name):
-    _check(spark, degenerate_nullkey_dir, name, ["documents"])
+    _check(spark, degenerate_nullkey_dir, name)
 
 
 @pytest.mark.parametrize("name", NULLKEY_EVENT_QUERIES)
 def test_nullkey_events_match_oracle(spark, degenerate_nullkey_dir, name):
-    _check(spark, degenerate_nullkey_dir, name, ["events"])
+    _check(spark, degenerate_nullkey_dir, name)
 
 
 @pytest.mark.parametrize("name", NULLKEY_EMB_QUERIES)
 def test_nullkey_embeddings_match_oracle(spark, degenerate_nullkey_dir, name):
-    _check(spark, degenerate_nullkey_dir, name, ["embeddings"])
+    _check(spark, degenerate_nullkey_dir, name)
 
 
 def test_kmeans_all_malformed_and_null_vec_ids(spark):
@@ -415,34 +280,19 @@ def test_kmeans_all_malformed_and_null_vec_ids(spark):
     against the literal-1 oracle; (b) NULL vec_ids with good
     embeddings -> the assignment window collapses them into one key,
     so the partition check must count keys null-safely."""
-    for rows, n_vec, n_lbl in [
+    for rows in [
         # (a) all-malformed: NULL and empty embeddings only
-        ([(1, None, 0), (2, [], 1), (3, None, None)], 3, 2),
+        [(1, None, 0), (2, [], 1), (3, None, None)],
         # (b) two NULL vec_ids + one real, all embeddings good
-        (
-            [
-                (None, [1.0, 0.0, 0.0, 0.0], 0),
-                (None, [0.0, 1.0, 0.0, 0.0], 0),
-                (7, [0.0, 0.0, 1.0, 0.0], 1),
-            ],
-            3,
-            2,
-        ),
+        [
+            (None, [1.0, 0.0, 0.0, 0.0], 0),
+            (None, [0.0, 1.0, 0.0, 0.0], 0),
+            (7, [0.0, 0.0, 1.0, 0.0], 1),
+        ],
     ]:
-        d = os.path.join(TMP, f"degen-kmeans-{uuid.uuid4().hex[:8]}")
-        os.makedirs(d, exist_ok=True)
+        d = stage(spark, {"embeddings": rows})
         try:
-            emb = spark.createDataFrame(
-                rows, "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
-            )
-            sub = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-            emb.coalesce(1).write.mode("overwrite").parquet(sub)
-            part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-            shutil.move(
-                os.path.join(sub, part), os.path.join(d, "embeddings.parquet")
-            )
-            shutil.rmtree(sub, ignore_errors=True)
-            _check(spark, d, "kmeans_refined_clusters", ["embeddings"])
+            _check(spark, d, "kmeans_refined_clusters")
         finally:
             shutil.rmtree(d, ignore_errors=True)
 
@@ -455,29 +305,15 @@ def test_exact_substr_dedup_null_doc_id_sits_out(spark):
     their grams must neither claim keepership nor be cut. Here the
     NULL-id doc shares its whole text with docs 1 and 2: doc 1 stays
     the keeper, doc 2 is fully cut, the NULL-id doc is untouched."""
-    import os
-    import shutil
-    import uuid
-
-    d = os.path.join(TMP, f"degen-exsub-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
     text = "a b c d e f"
-    docs = spark.createDataFrame(
-        [
-            (1, text, "en", "s", 11),
-            (None, text, "en", "s", 11),
-            (2, text, "en", "s", 11),
-            (3, "x y z", "en", "s", 5),
-        ],
-        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
-    )
-    stage = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-    docs.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(stage, part), os.path.join(d, "documents.parquet"))
-    shutil.rmtree(stage, ignore_errors=True)
+    d = stage(spark, {"documents": [
+        (1, text, "en", "s", 11),
+        (None, text, "en", "s", 11),
+        (2, text, "en", "s", 11),
+        (3, "x y z", "en", "s", 5),
+    ]})
     try:
-        _check(spark, d, "exact_substr_dedup", ["documents"])
+        _check(spark, d, "exact_substr_dedup")
         from gostream_spark.queries.corpus_ops import exact_substr_dedup
 
         rows = {
@@ -499,29 +335,19 @@ def test_agg_first_last_collect_tied_balance_extremum(spark):
     a tied c_acctbal pair, so this is a live hazard, not a
     hypothetical; the fold must make both engines pick the higher
     custkey on max and the lower on min."""
-    import os
-    import shutil
-    import uuid
-
-    d = os.path.join(TMP, f"degen-tiedbal-{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    cust = spark.createDataFrame(
-        [
+    d = stage(
+        spark,
+        {"customer": [
             (1, "alice", 10, "SEG", 500.0),
             (2, "bob", 11, "SEG", 500.0),     # tied max; custkey 2 wins
             (3, "carol", 12, "SEG", -10.0),
             (4, "dave", 13, "SEG", -10.0),    # tied min; custkey 3 wins min
-        ],
-        "c_custkey LONG, c_name STRING, c_nationkey LONG, "
-        "c_mktsegment STRING, c_acctbal DOUBLE",
+        ]},
+        {"customer": "c_custkey LONG, c_name STRING, c_nationkey LONG, "
+         "c_mktsegment STRING, c_acctbal DOUBLE"},
     )
-    stage = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-    cust.coalesce(1).write.mode("overwrite").parquet(stage)
-    part = [f for f in os.listdir(stage) if f.endswith(".parquet")][0]
-    shutil.move(os.path.join(stage, part), os.path.join(d, "customer.parquet"))
-    shutil.rmtree(stage, ignore_errors=True)
     try:
-        _check(spark, d, "agg_first_last_collect", ["customer"])
+        _check(spark, d, "agg_first_last_collect")
         from gostream_spark.queries.aggregation import agg_first_last_collect
 
         (row,) = agg_first_last_collect(spark, d).collect()

@@ -181,3 +181,26 @@ def test_restarted_session_infers_again(sf_dir):
     assert done.returncode == 0, done.stderr[-3000:]
     line = [ln for ln in done.stdout.splitlines() if ln.startswith("JOBS ")][-1]
     assert line.split()[1:] == ["1", "0", "1"]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "csv_source_agg",
+        "jsonl_source_agg",
+        "orc_source_agg",
+        "partitioned_sink_pruned_read",
+        "parquet_schema_evolution_read",
+        "pysink_batch_roundtrip",
+    ],
+)
+def test_roundtrip_query_built_twice_keeps_first_result(spark, sf_dir, name):
+    """Each file round-trip query writes into its own fresh directory:
+    building the query again must not overwrite the files the first
+    (lazily read) result still lists."""
+    from gostream_spark.registry import get_query
+
+    q = get_query(name)
+    first = q.fn(spark, sf_dir)
+    q.fn(spark, sf_dir)
+    assert first.count() > 0

@@ -6,13 +6,13 @@ from __future__ import annotations
 import pytest
 
 from gostream_spark.registry import all_queries
-from tests.parity import compare
+from tools.oracle import compare
 
 _QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(_QUERIES))
-def test_query_parity(spark, sf_dir, name):
+def test_query_parity(spark, sf_dir, oracle, name):
     q = _QUERIES[name]
     df = q.fn(spark, sf_dir)
     if q.oracle is None:
@@ -22,4 +22,17 @@ def test_query_parity(spark, sf_dir, name):
         assert df.count() > 0
         assert len(df.columns) > 0
     else:
-        compare(df, q.oracle, sf_dir)
+        compare(df, q.oracle, oracle)
+
+
+def test_compare_accepts_two_empty_results_of_different_int_types(spark):
+    """Both sides empty agree whatever their column types: an empty
+    Spark ``bigint`` column against an empty DuckDB ``INTEGER`` one."""
+    import duckdb
+
+    con = duckdb.connect()
+    try:
+        sdf = spark.createDataFrame([], "n BIGINT")
+        assert compare(sdf, "SELECT 1::INTEGER AS n WHERE false", con) == 0
+    finally:
+        con.close()

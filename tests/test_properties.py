@@ -431,6 +431,25 @@ def test_no_driver_side_antipatterns_in_package():
     assert not bad, bad
 
 
+def test_oracle_views_built_only_in_tools_oracle():
+    """One oracle harness: within tests/ and tools/, DuckDB views over
+    a fixture are created only by ``tools.oracle.oracle_con``, so every
+    Spark-vs-oracle check reads the same tables the same way."""
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pat = re.compile(r"CREATE\s+VIEW", re.I)
+    hits = []
+    for top in ("tests", "tools"):
+        for root, _dirs, files in os.walk(os.path.join(repo, top)):
+            for fn in files:
+                path = os.path.join(root, fn)
+                if fn.endswith(".py") and pat.search(open(path).read()):
+                    hits.append(os.path.relpath(path, repo))
+    assert hits == [os.path.join("tools", "oracle.py")], hits
+
+
 def test_results_invariant_under_shuffle_partitioning(spark, sf_dir):
     """The determinism discipline's end-to-end claim: rerunning a
     query with a different shuffle-partition count (different partial

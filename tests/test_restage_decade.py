@@ -189,14 +189,10 @@ def test_triangle_oracle_replica_scoping_exact_on_replicated_fixture(staged):
     identical rows."""
     sys.path.insert(0, REPO)
     from gostream_spark.queries.statistics_ops import triangle_oracle
+    from tools.oracle import oracle_con
     from tools.restage_decade import ID_OFFSET
 
-    con = duckdb.connect()
-    for t in ("lineitem", "part"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{staged}/{t}.parquet/*.parquet')"
-        )
+    con = oracle_con(staged)
     full = sorted(map(tuple, con.execute(triangle_oracle()).fetchall()))
     scoped = sorted(
         map(tuple, con.execute(triangle_oracle(ID_OFFSET)).fetchall())

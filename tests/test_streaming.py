@@ -1458,14 +1458,14 @@ def test_state_memory_guard_warns_once_per_query():
         "pysink_stream_roundtrip",
     ],
 )
-def test_registered_streams_record_progress(spark, sf_dir, name):
+def test_registered_streams_record_progress(spark, sf_dir, oracle, name):
     """Streams the query modules run go through the runner's one
     lifecycle, so each lands in RECENT_PROGRESS (the per-query
     monitoring record bench.py summarizes) with its batches, and its
     output still equals the batch oracle."""
     from gostream_spark.registry import get_query
     from gostream_spark.streaming.runner import RECENT_PROGRESS
-    from tests.parity import compare
+    from tools.oracle import compare
 
     q = get_query(name)
     RECENT_PROGRESS.clear()
@@ -1473,4 +1473,4 @@ def test_registered_streams_record_progress(spark, sf_dir, name):
     assert any(stream["batches"] for stream in RECENT_PROGRESS), list(
         RECENT_PROGRESS
     )
-    compare(df, q.oracle, sf_dir)
+    compare(df, q.oracle, oracle)

@@ -1,15 +1,15 @@
-"""Shared driver-style value canonicalization for the comparator
-tools (sweep.py, degenerate_probe.py).
+"""Driver-style value canonicalization for perfbench's output digests
+(perfbench/workloads.py), its one user; the committed digests in
+perfbench/expected.json depend on it byte for byte.
 
-This is tests/parity.py's ``_canon_value`` minus strictness pandas
-breaks: DuckDB results arrive via ``fetchdf``, where a BIGINT column
-holding a NULL is coerced to float64 — so Spark's 3 (int) strings as
-'3' while the oracle's same value strings as '3.0', and NULL itself
-as nan vs None. Normalize both: NULL-ish -> <NULL>, integral floats
--> int repr. Real fractional differences still compare exact
-(shortest round-trip repr, normalized through the builtin float so
-numpy scalars — 'np.float64(0.5)' under NumPy >= 2 — compare equal
-to Spark's plain floats).
+DuckDB results arrive via ``fetchdf``, where a BIGINT column holding a
+NULL is coerced to float64 — so Spark's 3 (int) strings as '3' while
+the oracle's same value strings as '3.0', and NULL itself as nan vs
+None. Normalize both: NULL-ish -> <NULL>, integral floats -> int repr.
+Real fractional differences still compare exact (shortest round-trip
+repr, normalized through the builtin float so numpy scalars —
+'np.float64(0.5)' under NumPy >= 2 — compare equal to Spark's plain
+floats). The oracle check itself is ``tools.oracle.compare``.
 """
 
 from __future__ import annotations

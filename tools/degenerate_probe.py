@@ -1,13 +1,10 @@
-#!/usr/bin/env python
-"""Degenerate-fixture probe: run EVERY registered query (batch AND
-streaming/pysource/pysink, since r8) against pathological versions of
-all ten tables and compare to its DuckDB oracle with the driver-style
-comparator (tools/canon.py — shared with sweep.py, zero manual
-NULL-vs-NaN adjudication).
+"""Degenerate fixture: pathological versions of all ten tables, and
+``stage``, the one writer of rows as single-file parquet tables for
+the degenerate sweep and tests.
 
 The production fixtures are statistically benign (every order has
 lineitems, every part sells, no 100% discounts, no zero-norm vectors,
-no NULL payloads). This probe is where the other shapes live:
+no NULL payloads). This fixture is where the other shapes live:
 
   - orders with NO lineitems / customers with no orders / parts never
     ordered / suppliers with no sales (unmatched keys through every
@@ -18,10 +15,9 @@ no NULL payloads). This probe is where the other shapes live:
   - empty/sub-shingle documents, NULL event payloads, tied event
     timestamps, zero-norm embeddings
 
-Run:  python tools/degenerate_probe.py [--only a,b] [--keep]
-Exit 0 iff every query with an oracle matches (rows-only queries are
-run for non-crash only). Findings go to stdout; promote them into
-tests/test_degenerate_inputs.py once fixed.
+Run every registered query (batch and streaming) on it against its
+DuckDB oracle with ``python tools/sweep.py --degenerate``; promote
+findings into tests/test_degenerate_inputs.py once fixed.
 
 This found (r7): MMR crashing on zero-norm vectors, the dim-stats
 oracle hardcoding the fixture's 64 dims, and NULL JSON payloads
@@ -30,20 +26,14 @@ silently diverging between engines in dead-letter routing.
 
 from __future__ import annotations
 
-import argparse
 import os
 import shutil
-import sys
 import uuid
 from datetime import datetime
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.canon import canon_value as _canon  # noqa: E402
+from pyspark.sql.types import TimestampType
 
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-
-_TS = datetime.strptime
 
 REGION = [(0, "AMERICA"), (1, "EMPTYREG")]
 NATION = [(0, "ALPHA", 0), (1, "BRAVO", 0), (2, "ORPHAN", 1)]
@@ -79,31 +69,33 @@ LINEITEM = [
     (1002, 300, 200, 2, 1.0, 10.0, 0.0, 0.0, "N", "O", "1996-06-20 00:00:00"),
 ]
 EVENTS = [
-    (1, "2024-01-05 12:00:00", 100, "click", 1.5, '{"k":1}'),
-    (2, "2024-01-05 12:00:00", 101, "click", 2.0, '{"k":2}'),
-    (3, "2024-01-05 12:00:00", 101, "view", 3.0, '{"k":3}'),
+    # (event_id, ts, user_id, event_type, value, props)
+    (1, "2024-01-05 12:00:00", 100, "click", 1.5, '{"k":1}'),  # lone event
+    (2, "2024-01-05 12:00:00", 101, "click", 2.0, '{"k":2}'),  # tied ts...
+    (3, "2024-01-05 12:00:00", 101, "view", 3.0, '{"k":3}'),  # ...same user
     (4, "2024-01-05 12:00:00", 101, "purchase", 4.0, "{}"),
-    (5, "2024-01-06 12:00:00", 102, "click", None, None),
+    (5, "2024-01-06 12:00:00", 102, "click", None, None),  # NULL value, payload
     (6, "2024-01-06 13:00:00", 102, "view", 5.0, '{"k":4}'),
     (7, "2024-01-07 12:00:00", 103, "click", 0.0, "{}"),
     (8, "2024-01-07 12:00:01", 103, "click", -1.0, "{}"),
     (9, "2024-01-07 12:00:02", 103, "click", -1.0, "{}"),
 ]
 DOCUMENTS = [
-    (1, "", "en", "src1", 0),
-    (2, "a", "en", "src1", 1),
-    (3, "abcdefg", "en", "src2", 7),
-    (4, "abcdefgh", "en", "src2", 8),
-    (5, "one two", "de", "src3", 7),
-    (6, "alpha bravo charlie delta echo", "en", "src3", 30),
+    # (doc_id, text, lang, source, n_chars)
+    (1, "", "en", "src1", 0),  # empty
+    (2, "a", "en", "src1", 1),  # single char
+    (3, "abcdefg", "en", "src2", 7),  # one short of a hash window
+    (4, "abcdefgh", "en", "src2", 8),  # exactly one hash window
+    (5, "one two", "de", "src3", 7),  # 2 tokens < 3-shingle
+    (6, "alpha bravo charlie delta echo", "en", "src3", 30),  # normal
 ]
 EMBEDDINGS = [
-    (0, [1.0, 0.0, 0.0, 0.0], 0),
+    (0, [1.0, 0.0, 0.0, 0.0], 0),  # the conventional query vector
     (10, [0.0, 0.0, 0.0, 0.0], 1),  # zero norm
-    (20, [1.0, 0.0, 0.0, 0.0], 2),
-    (30, [-1.0, 0.0, 0.0, 0.0], 0),
+    (20, [1.0, 0.0, 0.0, 0.0], 2),  # identical to the query
+    (30, [-1.0, 0.0, 0.0, 0.0], 0),  # antipodal
     (40, [0.5, 0.5, 0.5, 0.5], 1),
-    (50, [1e-30, 0.0, 0.0, 0.0], 2),
+    (50, [1e-30, 0.0, 0.0, 0.0], 2),  # tiny norm
 ]
 
 SCHEMAS = {
@@ -125,113 +117,39 @@ SCHEMAS = {
     "documents": "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
     "embeddings": "vec_id LONG, embedding ARRAY<FLOAT>, label INT",
 }
+FIXTURE = {
+    "region": REGION, "nation": NATION, "customer": CUSTOMER,
+    "supplier": SUPPLIER, "part": PART, "orders": ORDERS,
+    "lineitem": LINEITEM, "events": EVENTS, "documents": DOCUMENTS,
+    "embeddings": EMBEDDINGS,
+}
 
-_TS_COLS = {"orders": [4], "lineitem": [10], "events": [1]}
 
-
-def stage(spark) -> str:
-    d = os.path.join(TMP, f"degen-all-{uuid.uuid4().hex[:8]}")
+def stage(spark, tables: dict | None = None, schemas: dict = SCHEMAS) -> str:
+    """Write each table's rows as a single-file parquet table into a
+    fresh ``.tmp/degen-*`` directory and return it; the caller removes
+    it. ``tables`` maps a table name to its rows (default: the full
+    degenerate fixture above) and ``schemas`` a table name to its DDL.
+    A timestamp column may hold ``"%Y-%m-%d %H:%M:%S"`` strings."""
+    d = os.path.join(TMP, f"degen-{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
-    data = {
-        "region": REGION, "nation": NATION, "customer": CUSTOMER,
-        "supplier": SUPPLIER, "part": PART, "orders": ORDERS,
-        "lineitem": LINEITEM, "events": EVENTS, "documents": DOCUMENTS,
-        "embeddings": EMBEDDINGS,
-    }
-    for t, rows in data.items():
+    for t, rows in (tables or FIXTURE).items():
+        schema = spark.createDataFrame([], schemas[t]).schema
+        ts = {
+            i for i, f in enumerate(schema.fields)
+            if isinstance(f.dataType, TimestampType)
+        }
         conv = [
             tuple(
-                _TS(v, "%Y-%m-%d %H:%M:%S") if i in _TS_COLS.get(t, []) else v
+                datetime.strptime(v, "%Y-%m-%d %H:%M:%S")
+                if i in ts and isinstance(v, str) else v
                 for i, v in enumerate(r)
             )
             for r in rows
         ]
-        df = spark.createDataFrame(conv, SCHEMAS[t])
         sub = os.path.join(TMP, f"stage-{uuid.uuid4().hex[:8]}")
-        df.coalesce(1).write.mode("overwrite").parquet(sub)
+        spark.createDataFrame(conv, schema).coalesce(1).write.parquet(sub)
         part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
         shutil.move(os.path.join(sub, part), os.path.join(d, f"{t}.parquet"))
         shutil.rmtree(sub, ignore_errors=True)
     return d
-
-
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--only", help="comma-separated query names")
-    ap.add_argument("--keep", action="store_true", help="keep the staged dir")
-    opts = ap.parse_args()
-
-    import duckdb
-
-    from gostream_spark.registry import all_queries
-    from gostream_spark.session import get_spark
-
-    spark = get_spark(app_name="degenerate_probe")
-    spark.sparkContext.setLogLevel("ERROR")
-    d = stage(spark)
-    print(f"staged degenerate fixture at {d}", flush=True)
-
-    qs = all_queries()
-    # The streaming/pysink/pysource families are INCLUDED: they read
-    # the same staged tables through file_stream / the Python data
-    # source, and since r8 the shared canon_value comparator settles
-    # the NULL-vs-NaN differences that used to need hand adjudication
-    # — one command covers the full registry on degenerate fixtures.
-    names = (
-        [n.strip() for n in opts.only.split(",") if n.strip()]
-        if opts.only
-        else sorted(qs)
-    )
-    bad, n_ok, n_rows_only = [], 0, 0
-    for name in names:
-        q = qs[name]
-        try:
-            sdf = q.fn(spark, d)
-            got = sorted(
-                tuple(_canon(v) for v in r)
-                for r in sdf.select(*sorted(sdf.columns)).collect()
-            )
-        except Exception as ex:  # noqa: BLE001 — classify every failure
-            first = next((l for l in str(ex).splitlines() if l.strip()), "")
-            bad.append(name)
-            print(f"CRASH {name}: {first[:160]}", flush=True)
-            continue
-        if not q.oracle:
-            n_rows_only += 1
-            continue
-        con = duckdb.connect()
-        try:
-            for t in SCHEMAS:
-                con.execute(
-                    f"CREATE VIEW {t} AS SELECT * "
-                    f"FROM read_parquet('{d}/{t}.parquet')"
-                )
-            ddf = con.execute(q.oracle).fetchdf()
-            want = sorted(
-                tuple(_canon(v) for v in row)
-                for row in ddf[sorted(ddf.columns)].itertuples(index=False)
-            )
-        finally:
-            con.close()
-        if got != want:
-            bad.append(name)
-            only_got = [r for r in got if r not in set(want)]
-            only_want = [r for r in want if r not in set(got)]
-            print(
-                f"MISMATCH {name} (spark {len(got)} rows, oracle {len(want)}):\n"
-                f"  spark-only  {only_got[:6]}\n  oracle-only {only_want[:6]}",
-                flush=True,
-            )
-        else:
-            n_ok += 1
-    if not opts.keep:
-        shutil.rmtree(d, ignore_errors=True)
-    print(
-        f"degenerate probe: {n_ok} matched, {n_rows_only} rows-only ran, "
-        f"FAILURES: {', '.join(bad) if bad else 'none'}"
-    )
-    sys.exit(1 if bad else 0)
-
-
-if __name__ == "__main__":
-    main()

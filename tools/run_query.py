@@ -51,15 +51,9 @@ def main() -> int:
     df.show(args.rows, truncate=False)
     print(f"({df.count()} rows total)")
     if args.oracle and q.oracle:
-        import duckdb
+        from tools.oracle import oracle_con
 
-        from gostream_spark.io import TABLES, table_path
-
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')"
-            )
+        con = oracle_con(sf_dir)
         print("oracle (DuckDB):")
         print(con.execute(q.oracle).fetchdf().head(args.rows).to_string())
     return 0

@@ -259,11 +259,11 @@ def main() -> None:
     heaps = [h.strip() for h in opts.heaps.split(",") if h.strip()]
     providers = [p.strip() for p in opts.providers.split(",") if p.strip()]
     print(
-        "| fixture | heap | provider | outcome | wall | gc s | addBatch s "
-        "| commit s | state rows | state MiB | rss MiB | rss peak "
-        "| heap comm | heap used | warn@ |"
+        "| fixture | heap | provider | outcome | wall | batches | gc s "
+        "| addBatch s | commit s | state rows | state MiB | ckpt MiB "
+        "| rss MiB | rss peak | heap comm | heap used | warn@ |"
     )
-    print("|---|---|---|---|---|---|---|---|---|---|---|---|---|---|---|")
+    print("|---" * 17 + "|")
     for label, sf_dir in FIXTURES:
         if not os.path.isdir(sf_dir):
             continue
@@ -310,11 +310,13 @@ def main() -> None:
                 cells = (
                     f"| {label} | {heap} | {provider} | {r['outcome']} "
                     f"| {r.get('wall_s', '-')}s "
+                    f"| {r.get('n_batches', '-')} "
                     f"| {r.get('gc_ms', 0) / 1000:.1f} "
                     f"| {r.get('add_batch_ms', 0) / 1000:.1f} "
                     f"| {r.get('commit_ms', 0) / 1000:.1f} "
                     f"| {r.get('state_rows', '-')} "
                     f"| {r.get('state_mib', '-')} "
+                    f"| {r.get('ckpt_mib', '-')} "
                     f"| {r.get('rss_mib', '-')} "
                     f"| {r.get('rss_peak_mib', '-')} "
                     f"| {r.get('heap_committed_mib', '-')} "

@@ -1,27 +1,29 @@
 #!/usr/bin/env python
 """Driver-contract sweep: run EVERY registered query on Spark and its
-DuckDB oracle side by side, compare stringified sorted rows, and
-report failures. This is the one-command local replica of the
-driver's correctness gate (the stricter exact form lives in
-tests/parity.py; this one mirrors the driver's gate recipe).
+DuckDB oracle side by side, compare them exactly through
+``tools.oracle.compare`` (the same check tier-1's test_parity uses),
+and report failures. This is the one-command local replica of the
+driver's correctness gate.
 
     python tools/sweep.py                 # sf0.01 (the driver's gate scale)
     python tools/sweep.py --sf 0.1        # 10x stress sweep
     python tools/sweep.py --only a,b,c    # subset
+    python tools/sweep.py --degenerate    # pathological fixture
+                                          # (tools/degenerate_probe.py)
 """
 
 from __future__ import annotations
 
 import argparse
 import os
+import shutil
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
-from gostream_spark.io import TABLES  # noqa: E402  (canonical fixture list)
-from tools.canon import canon_value  # noqa: E402  (driver-style comparator)
+from tools.oracle import compare, oracle_con  # noqa: E402
 
 
 def _sweep_stale_duckdb_spill() -> None:
@@ -51,6 +53,14 @@ def main() -> int:
     ap.add_argument("--sf", default="0.01")
     ap.add_argument("--only", default=None, help="comma-separated query names")
     ap.add_argument("--root", default="/root/testdata")
+    ap.add_argument(
+        "--degenerate",
+        action="store_true",
+        help="sweep the staged degenerate fixture (empty joins, zero "
+        "denominators, ties, NULL payloads, zero-norm vectors: "
+        "tools/degenerate_probe.py) instead of --root/--sf; the "
+        "staged directory is removed afterwards",
+    )
     ap.add_argument(
         "--partitions",
         default="8",
@@ -94,11 +104,8 @@ def main() -> int:
         "stays usable for the engine arm.",
     )
     args = ap.parse_args()
-    sf_dir = f"{args.root}/sf{args.sf}"
 
     from pyspark.sql import SparkSession
-
-    from gostream_spark import registry
 
     # Driver-gate session shape (local[4], pinnable shuffle width) —
     # but with an explicit driver heap: the PySpark default is 1g,
@@ -122,6 +129,22 @@ def main() -> int:
             "spark.sql.files.maxPartitionBytes", args.max_partition_bytes
         )
     spark = builder.getOrCreate()
+    if args.degenerate:
+        from tools.degenerate_probe import stage
+
+        sf_dir, label = stage(spark), "degenerate"
+    else:
+        sf_dir, label = f"{args.root}/sf{args.sf}", f"sf{args.sf}"
+    try:
+        return _sweep(spark, sf_dir, label, args)
+    finally:
+        if args.degenerate:
+            shutil.rmtree(sf_dir, ignore_errors=True)
+
+
+def _sweep(spark, sf_dir: str, label: str, args) -> int:
+    from gostream_spark import registry
+
     qs, oracles = registry.queries(), registry.oracle_sql()
     if args.only:
         keep = set(args.only.split(","))
@@ -149,20 +172,12 @@ def main() -> int:
                 )
             )
 
-    con = duckdb.connect()
+    con = oracle_con(sf_dir)
     if args.duckdb_mem:
         con.execute(f"SET memory_limit='{args.duckdb_mem}'")
     if args.duckdb_temp:
         con.execute(
             f"SET max_temp_directory_size='{args.duckdb_temp}'"
-        )
-    for t in TABLES:
-        # A table may be a single file OR a sharded directory (the
-        # restage_sharded.py determinism axis) — glob the latter.
-        path = f"{sf_dir}/{t}.parquet"
-        src = f"{path}/*.parquet" if os.path.isdir(path) else path
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{src}')"
         )
 
     # vacuous: exact checks where engine and oracle both return no
@@ -172,71 +187,67 @@ def main() -> int:
         try:
             kw, scoped_sql = overrides.get(name, ({}, None))
             sdf = fn(spark, sf_dir, **kw)
-            got = sorted(
-                tuple(canon_value(v) for v in r)
-                for r in sdf.select(*sorted(sdf.columns)).collect()
-            )
-            if name in oracles:
-                try:
-                    ddf = con.execute(scoped_sql or oracles[name]).fetchdf()
-                except duckdb.OutOfMemoryException:
-                    # The ORACLE, not the engine, is resource-bound at
-                    # this SF: the Spark result above computed fine but
-                    # has nothing to compare against. Distinct category
-                    # and distinct exit code — NOT silently dropped,
-                    # NOT conflated with an engine failure.
-                    oracle_oom.append(name)
-                    print(
-                        f"ORACLE-OOM {name}: oracle exceeded the DuckDB "
-                        f"memory cap ({args.duckdb_mem}) — engine result "
-                        "uncompared at this SF"
-                    )
-                    continue
-                except duckdb.IOException as e:
-                    # Disk twin of the memory cap (r15: the sf3
-                    # ann_recall_at_k / graph_triangle_count oracles
-                    # spilled .tmp/duckdb_temp_* until the device
-                    # filled). Only the ENOSPC spill-exhaustion
-                    # signature is resource-bound; any other IO error
-                    # (missing fixture, corrupt parquet) stays a
-                    # failure. Note (ADVICE r15): hitting the
-                    # max_temp_directory_size cap itself surfaces as
-                    # OutOfMemoryException ("failed to offload data
-                    # block..."), caught by the handler above — there
-                    # is no IOException substring for it.
-                    if "No space left" in str(e):
-                        oracle_oom.append(name)
-                        print(
-                            f"ORACLE-DISK {name}: oracle spill exhausted "
-                            f"temp disk (cap {args.duckdb_temp or 'none'})"
-                            " — engine result uncompared at this SF"
-                        )
-                        continue
-                    raise
-                want = sorted(
-                    tuple(canon_value(v) for v in row)
-                    for row in ddf[sorted(ddf.columns)].itertuples(index=False)
-                )
-                n_exact += 1
-                if got != want:
-                    bad.append(name)
-                    print(f"FAIL {name}: spark={len(got)} rows, oracle={len(want)} rows")
-                elif not got:
-                    vacuous.append(name)
-            else:
+            if name not in oracles:
                 n_rows += 1
-                if not got:
+                if not sdf.collect():
                     bad.append(f"{name} (empty rows-only)")
+                continue
+            try:
+                # compare() materializes the Spark side before it runs
+                # the oracle, so a resource-bound oracle below always
+                # follows an engine result that computed fine.
+                n = compare(sdf, scoped_sql or oracles[name], con)
+            except AssertionError as e:
+                n = None
+                bad.append(name)
+                print(f"FAIL {name}: {e}")
+            except duckdb.OutOfMemoryException:
+                # The ORACLE, not the engine, is resource-bound at
+                # this SF: the Spark result computed fine but has
+                # nothing to compare against. Distinct category and
+                # distinct exit code — NOT silently dropped, NOT
+                # conflated with an engine failure.
+                oracle_oom.append(name)
+                print(
+                    f"ORACLE-OOM {name}: oracle exceeded the DuckDB "
+                    f"memory cap ({args.duckdb_mem}) — engine result "
+                    "uncompared at this SF"
+                )
+                continue
+            except duckdb.IOException as e:
+                # Disk twin of the memory cap (r15: the sf3
+                # ann_recall_at_k / graph_triangle_count oracles
+                # spilled .tmp/duckdb_temp_* until the device filled).
+                # Only the ENOSPC spill-exhaustion signature is
+                # resource-bound; any other IO error (missing fixture,
+                # corrupt parquet) stays a failure. Note (ADVICE r15):
+                # hitting the max_temp_directory_size cap itself
+                # surfaces as OutOfMemoryException ("failed to offload
+                # data block..."), caught by the handler above — there
+                # is no IOException substring for it.
+                if "No space left" not in str(e):
+                    raise
+                oracle_oom.append(name)
+                print(
+                    f"ORACLE-DISK {name}: oracle spill exhausted temp "
+                    f"disk (cap {args.duckdb_temp or 'none'}) — engine "
+                    "result uncompared at this SF"
+                )
+                continue
+            n_exact += 1
+            if n == 0:
+                vacuous.append(name)
         except Exception as e:  # surface, keep sweeping
             bad.append(f"{name} ({type(e).__name__})")
             print(f"ERROR {name}: {e}")
+    con.close()
     oom_note = (
         f", oracle-resource-bound (uncompared): {oracle_oom}"
         if oracle_oom
         else ""
     )
     print(
-        f"sweep sf{args.sf}: {n_exact} exact-checked ({len(vacuous)} both "
+        f"sweep {label}: {n_exact} exact-checked ({len(vacuous)} both "
         f"empty: {sorted(vacuous)}), {n_rows} rows-only, "
         f"FAILURES: {bad or 'none'}{oom_note}"
     )
