@@ -7,7 +7,8 @@ them first-class registry rows with their own oracles:
 - ``memory_source_agg`` builds its input with the engine's
   ``memory_source`` (the reference's test-spout analogue) and
   aggregates it; the oracle recreates the same literal rows with a
-  DuckDB ``VALUES`` list, so the check is exact and independent of the
+  DuckDB ``VALUES`` list (cast to DOUBLE, as DuckDB types decimal
+  literals DECIMAL), so the check is exact and independent of the
   parquet fixtures.
 - ``streaming_memory_sink`` runs a real Structured Streaming pipeline
   into the in-memory table sink (Spark's collect/console-style sink
@@ -42,10 +43,10 @@ SELECT device,
        round(avg(reading), 4) AS mean,
        round(min(reading), 2) AS lo,
        round(max(reading), 2) AS hi
-FROM (VALUES
+FROM (SELECT device, reading::DOUBLE AS reading FROM (VALUES
   ('sensor-a', 10.5), ('sensor-a', 11.0), ('sensor-a', 9.5),
   ('sensor-b', 100.0), ('sensor-b', 101.5), ('sensor-c', 7.25)
-) AS t(device, reading)
+) AS v(device, reading)) AS t
 GROUP BY device
 """
 

@@ -338,13 +338,11 @@ def test_agg_first_last_collect_tied_balance_extremum(spark):
     d = stage(
         spark,
         {"customer": [
-            (1, "alice", 10, "SEG", 500.0),
-            (2, "bob", 11, "SEG", 500.0),     # tied max; custkey 2 wins
-            (3, "carol", 12, "SEG", -10.0),
-            (4, "dave", 13, "SEG", -10.0),    # tied min; custkey 3 wins min
+            (1, "alice", 10, 500.0, "SEG"),
+            (2, "bob", 11, 500.0, "SEG"),     # tied max; custkey 2 wins
+            (3, "carol", 12, -10.0, "SEG"),
+            (4, "dave", 13, -10.0, "SEG"),    # tied min; custkey 3 wins min
         ]},
-        {"customer": "c_custkey LONG, c_name STRING, c_nationkey LONG, "
-         "c_mktsegment STRING, c_acctbal DOUBLE"},
     )
     try:
         _check(spark, d, "agg_first_last_collect")

@@ -125,16 +125,16 @@ FIXTURE = {
 }
 
 
-def stage(spark, tables: dict | None = None, schemas: dict = SCHEMAS) -> str:
+def stage(spark, tables: dict | None = None) -> str:
     """Write each table's rows as a single-file parquet table into a
     fresh ``.tmp/degen-*`` directory and return it; the caller removes
     it. ``tables`` maps a table name to its rows (default: the full
-    degenerate fixture above) and ``schemas`` a table name to its DDL.
+    degenerate fixture above), each written with its ``SCHEMAS`` DDL.
     A timestamp column may hold ``"%Y-%m-%d %H:%M:%S"`` strings."""
     d = os.path.join(TMP, f"degen-{uuid.uuid4().hex[:8]}")
     os.makedirs(d, exist_ok=True)
     for t, rows in (tables or FIXTURE).items():
-        schema = spark.createDataFrame([], schemas[t]).schema
+        schema = spark.createDataFrame([], SCHEMAS[t]).schema
         ts = {
             i for i, f in enumerate(schema.fields)
             if isinstance(f.dataType, TimestampType)

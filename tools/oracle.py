@@ -13,12 +13,11 @@ through this module.
 
 from __future__ import annotations
 
-import math
 import os
 from collections import Counter
 
 import duckdb
-import pandas as pd
+from pyspark.sql import Row
 
 from gostream_spark.io import TABLES, table_path
 
@@ -39,34 +38,47 @@ def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 
 def _canon_value(v) -> str:
+    """One value as an exact string: NULL and NaN stay distinct, so
+    do int 3 and float 3.0. Arrays canonicalize element-wise; a Spark
+    struct (Row) and a DuckDB struct (dict) both canonicalize as their
+    field-to-value mapping, as do maps."""
     if v is None:
         return "<NULL>"
     if isinstance(v, float):
-        if math.isnan(v):
-            return "<NULL>"
-        # repr(float(v)): shortest round-trip repr, normalized through
-        # the builtin so numpy.float64 (NumPy >= 2 reprs as
-        # 'np.float64(0.5)') compares exact against Spark's plain float.
-        return repr(float(v))
-    if isinstance(v, bytes):
-        return v.hex()
+        return repr(v)
+    if isinstance(v, (bytes, bytearray)):
+        return bytes(v).hex()
+    if isinstance(v, Row):
+        v = v.asDict()
+    if isinstance(v, dict):
+        return "{" + ", ".join(sorted(
+            f"{_canon_value(k)}: {_canon_value(x)}" for k, x in v.items()
+        )) + "}"
+    if isinstance(v, (list, tuple)):
+        return "[" + ", ".join(map(_canon_value, v)) + "]"
     return str(v)
 
 
-def _canon(df: pd.DataFrame) -> tuple[list, list]:
+def _canon(cols: list, rows: list) -> tuple[list, list]:
     """Column names sorted, and the rows as sorted tuples of canonical
     value strings in that column order."""
-    cols = sorted(df.columns)
-    return cols, sorted(zip(*(df[c].map(_canon_value) for c in cols)))
+    order = sorted(range(len(cols)), key=cols.__getitem__)
+    return (
+        [cols[i] for i in order],
+        sorted(tuple(_canon_value(r[i]) for i in order) for r in rows),
+    )
 
 
 def compare(spark_df, oracle_sql: str, con: duckdb.DuckDBPyConnection) -> int:
     """Assert the Spark result and the DuckDB oracle agree exactly;
-    return the row count. Both sides are read through pandas, so a
-    nullable integer column is float64 on each. The rows compare as
-    lists, so two empty results agree whatever their column types."""
-    got_cols, got = _canon(spark_df.toPandas())
-    want_cols, want = _canon(con.execute(oracle_sql).fetchdf())
+    return the row count. Both sides are read as Python rows
+    (``collect()`` and ``fetchall()``), with no pandas coercion, so a
+    NULL never passes for a NaN nor an int for a float. The rows
+    compare as lists, so two empty results agree whatever their
+    column types."""
+    got_cols, got = _canon(spark_df.columns, spark_df.collect())
+    cur = con.execute(oracle_sql)
+    want_cols, want = _canon([d[0] for d in cur.description], cur.fetchall())
     if got_cols != want_cols:
         raise AssertionError(
             f"schema mismatch: spark={got_cols} duckdb={want_cols}"
