@@ -35,6 +35,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL for every SQL-expressible query (others are
-    omitted → driver records rows-only checks)."""
+    """DuckDB oracle SQL for every registered query."""
     return registry.oracle_sql()

@@ -45,11 +45,11 @@ def trigram_shingles(text: Column) -> Column:
     return F.regexp_extract_all(text, F.lit(_TRIGRAM_RE), F.lit(1))
 
 
-def _hexval(tok: Column, p: int) -> Column:
-    """Hex digit of md5(token) at position p+1, as a double 0..15."""
-    return (
-        F.instr(F.lit(_HEXDIGITS), F.substring(F.md5(tok), p + 1, 1)) - 1
-    ).cast("double")
+def md5_hex_digit(s: Column, pos: int) -> Column:
+    """Hex digit ``pos`` (1-based) of md5(s) as an integer 0..15: the
+    cheapest cross-engine-exact uniform hash bucket (identical
+    lowercase-hex md5 in Spark and DuckDB)."""
+    return F.instr(F.lit(_HEXDIGITS), F.substring(F.md5(s), pos, 1)) - 1
 
 
 def simhash_nibbles(md5s: Column) -> Column:

@@ -15,11 +15,11 @@ What IS cached is table metadata, in one per-session memo
 (``_TABLE_META``) owned by this module. Reading parquet without a
 schema makes Spark infer it, and inference launches a Spark job that
 reads a footer — on every load of the same file. The memo keeps, per
-table path, the inferred schema (``table_schema``, used by
-``load_table`` and ``streaming.source.file_stream``) and the
-``spread_for_compute`` decision. Its key is the live SparkSession
-(a restarted session infers again) and the path; an entry is valid
-only while its stamp matches:
+table path, the inferred schema (``table_schema``, read through
+``read_table`` by ``load_table`` and ``streaming.source.file_stream``)
+and the ``spread_for_compute`` decision. Its key is the live
+SparkSession (a restarted session infers again) and the path; an entry
+is valid only while its stamp matches:
 
 - a fingerprint of the path's current file set, read through the
   Hadoop FileSystem API so ``s3a://`` and ``hdfs://`` paths work: a
@@ -81,11 +81,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     full nanosecond precision; all hash-compared outputs are formatted
     at second precision so the truncation is invisible.
     """
+    return read_table(
+        spark,
+        sf_dir,
+        name,
+        lambda path, _status, schema: spark.read.schema(schema).parquet(path),
+    )
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str, scan) -> DataFrame:
+    """The table prelude of the batch reader (``load_table``) and the
+    streaming one (``streaming.source.file_stream``): check the name,
+    align the session conf, look up the table's path, its status and
+    its memoized schema, build the DataFrame with ``scan(path, status,
+    schema)``, and turn a nanos ``events.ts`` into microsecond
+    timestamps (see ``load_table``)."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    # see ensure_session_conf: engine must work under any caller session
     ensure_session_conf(spark, events=name == "events")
     path = table_path(sf_dir, name)
-    df = spark.read.schema(table_schema(spark, path, path_status(spark, path))).parquet(path)
+    status = path_status(spark, path)
+    df = scan(path, status, table_schema(spark, path, status))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

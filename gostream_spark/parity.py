@@ -41,10 +41,6 @@ def dec2(c: Column | str) -> Column:
     return _col(c).cast("decimal(18,2)")
 
 
-def dec4(c: Column | str) -> Column:
-    return _col(c).cast("decimal(18,4)")
-
-
 def money_sum(c: Column | str, alias: str, scale: int = 2) -> Column:
     """Exact decimal sum, rounded, surfaced as DOUBLE.
 
@@ -67,8 +63,3 @@ def exact_avg(c: Column | str, alias: str, scale: int = 2) -> Column:
 def ts_str(c: Column | str) -> Column:
     """Second-precision string form of a timestamp (both engines floor)."""
     return F.date_format(_col(c), TS_FMT_SPARK)
-
-
-def duck_ts_str(expr: str) -> str:
-    """DuckDB twin of ``ts_str`` for use inside oracle SQL strings."""
-    return f"strftime({expr}, '{TS_FMT_DUCK}')"

@@ -172,6 +172,20 @@ class _FileCommit(WriterCommitMessage):
         self.staged, self.rows = staged, rows
 
 
+def _stage_shard(self, iterator) -> _FileCommit:
+    """``write`` of both JSONL writers: stream one task's rows to a
+    fresh shard under ``self.staging`` and return it as the task's
+    commit message."""
+    os.makedirs(self.staging, exist_ok=True)
+    staged = os.path.join(self.staging, f"shard-{uuid.uuid4().hex}.jsonl")
+    n = 0
+    with open(staged, "w") as f:
+        for row in iterator:
+            f.write(json.dumps(row.asDict(), default=str, sort_keys=True) + "\n")
+            n += 1
+    return _FileCommit(staged, n)
+
+
 class _JsonlWriter(DataSourceWriter):
     """Two-phase-commit JSONL sink: each task streams its partition to
     a staged shard (``_staging/``), returns the path as its commit
@@ -187,15 +201,7 @@ class _JsonlWriter(DataSourceWriter):
         self.staging = os.path.join(self.path, "_staging")
         self.overwrite = overwrite
 
-    def write(self, iterator) -> _FileCommit:
-        os.makedirs(self.staging, exist_ok=True)
-        staged = os.path.join(self.staging, f"shard-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(), default=str, sort_keys=True) + "\n")
-                n += 1
-        return _FileCommit(staged, n)
+    write = _stage_shard
 
     def commit(self, messages) -> None:
         if self.overwrite:
@@ -224,15 +230,7 @@ class _JsonlStreamWriter(DataSourceStreamWriter):
         self.path = options["path"]
         self.staging = os.path.join(self.path, "_staging")
 
-    def write(self, iterator) -> _FileCommit:
-        os.makedirs(self.staging, exist_ok=True)
-        staged = os.path.join(self.staging, f"shard-{uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(staged, "w") as f:
-            for row in iterator:
-                f.write(json.dumps(row.asDict(), default=str, sort_keys=True) + "\n")
-                n += 1
-        return _FileCommit(staged, n)
+    write = _stage_shard
 
     def commit(self, messages, batchId: int) -> None:
         marker = os.path.join(self.path, f"_batch-{batchId}.manifest")

@@ -32,19 +32,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.functions.sketches import top_token_run_max
+from gostream_spark.functions.sketches import md5_hex_digit, top_token_run_max
 from gostream_spark.io import load_spread, load_table
 from gostream_spark.registry import register
-
-_HEXDIGITS = "0123456789abcdef"
-
-
-def _hexval1(s: Column) -> Column:
-    """First hex digit of md5(s) as an integer 0..15 — the cheapest
-    cross-engine-exact uniform hash bucket (identical lowercase-hex
-    md5 in Spark and DuckDB)."""
-    return F.instr(F.lit(_HEXDIGITS), F.substring(F.md5(s), 1, 1)) - 1
-
 
 def _word_ngrams(toks: Column, n: int) -> Column:
     """Word n-grams of a token array as space-joined strings (empty
@@ -193,7 +183,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_below = (
         F.when(src_num < 5, F.lit(16)).when(src_num < 15, F.lit(8)).otherwise(F.lit(2))
     )
-    hv = _hexval1(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source")))
+    hv = md5_hex_digit(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source")), 1)
     return (
         docs.filter(hv < keep_below)
         .groupBy("source")
@@ -239,7 +229,7 @@ def corpus_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = F.md5(F.col("doc_id").cast("string"))
     keyed = docs.select(
         "doc_id",
-        (_hexval1(F.col("doc_id").cast("string")) % _SHARDS).alias("shard"),
+        (md5_hex_digit(F.col("doc_id").cast("string"), 1) % _SHARDS).alias("shard"),
         key.alias("ord_key"),
     )
     w = Window.partitionBy("shard").orderBy("ord_key", "doc_id")
@@ -460,7 +450,7 @@ def training_mix_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep_below = (
         F.when(src_num < 5, F.lit(16)).when(src_num < 15, F.lit(8)).otherwise(F.lit(2))
     )
-    hv = _hexval1(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source")))
+    hv = md5_hex_digit(F.concat(F.col("doc_id").cast("string"), F.lit(":"), F.col("source")), 1)
     sampled = clean.filter(hv < keep_below)
 
     w = (
@@ -570,17 +560,8 @@ def sample_temperature_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src_tokens",
         F.expr("10000 * tmin div src_tokens").alias("rate_bp"),
     )
-    hexpos = lambda p, w: (
-        F.instr(
-            F.lit(_HEXDIGITS),
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("@"), F.col("source"))),
-                p,
-                1,
-            ),
-        )
-        - 1
-    ) * w
+    key = F.concat(F.col("doc_id").cast("string"), F.lit("@"), F.col("source"))
+    hexpos = lambda p, w: md5_hex_digit(key, p) * w
     hv = hexpos(1, 4096) + hexpos(2, 256) + hexpos(3, 16) + hexpos(4, 1)
     hashed = sized.join(F.broadcast(rates), "source").withColumn("hv", hv)
     kept = F.col("hv") < F.expr("rate_bp * 65536 div 10000")

@@ -16,6 +16,12 @@ from pyspark.sql import functions as F
 
 from gostream_spark.io import load_table
 from gostream_spark.parity import TS_FMT_DUCK, ts_str
+# A streaming twin of a batch query shares its oracle: both must
+# give the same answer on the same input.
+from gostream_spark.queries.allocation_ops import _LINDLEY_ORACLE
+from gostream_spark.queries.event_time import _COUNT_WIN_ORACLE, _T3_ORACLE
+from gostream_spark.queries.joins import _J10_ORACLE
+from gostream_spark.queries.windows import _CDC_ORACLE
 from gostream_spark.registry import register
 from gostream_spark.streaming import (
     dedup_stream,
@@ -154,17 +160,8 @@ def streaming_stateful_counts(
 
 # --- J10 for real: watermarked stream-stream join -----------------------
 
-_SS_JOIN_ORACLE = """
-SELECT p.event_id AS purchase_id, c.event_id AS click_id, p.user_id
-FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-JOIN (SELECT * FROM events WHERE event_type = 'click') c
-  ON p.user_id = c.user_id
- AND c.ts >= p.ts - INTERVAL 1 HOUR
- AND c.ts <= p.ts
-"""
 
-
-@register("streaming_stream_stream_join", oracle=_SS_JOIN_ORACLE, tags=("S2", "J10", "T4"))
+@register("streaming_stream_stream_join", oracle=_J10_ORACLE, tags=("S2", "J10", "T4"))
 def streaming_stream_stream_join(
     spark: SparkSession,
     sf_dir: str,
@@ -272,15 +269,7 @@ def streaming_sliding_counts(
 # --- T3 streaming: session windows --------------------------------------
 
 
-def _t3_oracle() -> str:
-    # Share the batch T3 lag-gap sessionization oracle verbatim: the
-    # streaming twin must produce the identical session set.
-    from gostream_spark.queries.event_time import _T3_ORACLE
-
-    return _T3_ORACLE
-
-
-@register("streaming_session_counts", oracle=_t3_oracle(), tags=("S2", "T3", "T4", "T7"))
+@register("streaming_session_counts", oracle=_T3_ORACLE, tags=("S2", "T3", "T4", "T7"))
 def streaming_session_counts(
     spark: SparkSession,
     sf_dir: str,
@@ -742,28 +731,10 @@ def streaming_dedup_within_watermark(
 
 # --- T6: Storm-style count windows as a real stream ---------------------
 
-_COUNT_WIN_STREAM_ORACLE = """
-WITH ordered AS (
-  SELECT user_id, ts, coalesce(value, 0) AS value,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) - 1 AS rn
-  FROM events
-)
-SELECT user_id,
-       rn // 5 AS win_no,
-       count(*) AS n_events,
-       strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS win_start,
-       strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS win_end,
-       round(CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE) / 100.0, 2)
-         AS sum_value
-FROM ordered
-GROUP BY user_id, rn // 5
-HAVING count(*) = 5
-"""
-
 
 @register(
     "streaming_count_window_stateful",
-    oracle=_COUNT_WIN_STREAM_ORACLE,
+    oracle=_COUNT_WIN_ORACLE,
     tags=("S2", "T6", "T8"),
 )
 def streaming_count_window_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -820,8 +791,6 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gostream_spark.queries.corpus_ops import _word_ngrams
     from gostream_spark.streaming.runner import _sink_dir
 
-    import shutil
-
     bench = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("source") == "src0")
@@ -844,14 +813,11 @@ def streaming_decontaminate_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
         clean.select("doc_id", "source").write.mode("append").parquet(out)
 
     run_foreach_batch(file_stream(spark, sf_dir, "documents"), write_batch)
-    result = (
+    return (
         spark.read.parquet(out)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("clean_docs"))
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(out, ignore_errors=True)
-    return result
 
 
 # --- S2+T4+T6: EventTimeTimeout watermark-closed sessions ---------------
@@ -971,8 +937,6 @@ def streaming_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is materialized once (parquet, bucketed by band_hash) instead of
     recomputed per batch, and the join shuffles only band-key matches,
     never all-pairs."""
-    import shutil
-
     from gostream_spark.queries.llm_similarity import minhash_md5_band_table
 
     static_bands = (
@@ -987,56 +951,19 @@ def streaming_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "corpus_doc"
     )
     sess, out = run_foreach_batch_parquet(joined)
-    result = (
+    return (
         sess.read.parquet(out)
         .groupBy("doc_id")
         .agg(F.countDistinct("corpus_doc").alias("n_candidates"))
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(out, ignore_errors=True)
-    return result
 
 
 # --- T6: literal Lindley fold in state vs the batch closed form ---------
 
-_LINDLEY_STREAM_ORACLE = """
-WITH d AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN event_type IN ('purchase', 'signup')
-              THEN CAST(round(value * 100) AS BIGINT)
-              ELSE -CAST(round(value * 100) AS BIGINT) END AS delta
-  FROM events WHERE value IS NOT NULL
-), s AS (
-  SELECT user_id, ts, event_id, delta,
-         CAST(SUM(delta) OVER w AS BIGINT) AS cum
-  FROM d
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-), m AS (
-  SELECT user_id, ts, event_id, delta, cum,
-         CAST(MIN(cum) OVER w AS BIGINT) AS runmin
-  FROM s
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-), c AS (
-  SELECT user_id, delta, cum,
-         cum - least(0, runmin) AS bal,
-         CASE WHEN cum < least(0, COALESCE(
-                lag(runmin) OVER (PARTITION BY user_id ORDER BY ts, event_id),
-                0)) THEN 1 ELSE 0 END AS clamped
-  FROM m
-)
-SELECT user_id,
-       CAST(SUM(delta) - least(0, MIN(cum)) AS BIGINT) AS final_balance,
-       CAST(MAX(bal) AS BIGINT) AS max_balance,
-       CAST(SUM(clamped) AS BIGINT) AS n_clamped
-FROM c GROUP BY user_id
-"""
-
 
 @register(
     "streaming_lindley_stateful",
-    oracle=_LINDLEY_STREAM_ORACLE,
+    oracle=_LINDLEY_ORACLE,
     tags=("S2", "T6", "T8"),
 )
 def streaming_lindley_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1147,25 +1074,10 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
 
 # --- L1/T8 ext: streaming CDC materialization (latest state per key) ----
 
-_CDC_STREAM_ORACLE = """
-WITH ranked AS (
-  SELECT user_id, event_type, ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS value_cents,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events)
-SELECT user_id,
-       event_type AS state,
-       value_cents,
-       strftime(ts, '%Y-%m-%d %H:%M:%S') AS updated_at
-FROM ranked
-WHERE rn = 1 AND event_type <> 'error'
-"""
-
 
 @register(
     "streaming_cdc_latest_state",
-    oracle=_CDC_STREAM_ORACLE,
+    oracle=_CDC_ORACLE,
     tags=("S2", "T8", "L1", "A6", "ext"),
 )
 def streaming_cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -44,19 +44,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gostream_spark.functions import cosine_similarity
+from gostream_spark.functions.sketches import md5_hex_digit
 from gostream_spark.io import load_table
 from gostream_spark.queries.llm_similarity import _duck_cosine
 from gostream_spark.operators import keep_first, topk_ranked
 from gostream_spark.registry import register
-
-_HEXDIGITS = "0123456789abcdef"
-
-
-def _hexval(s: Column, pos: int) -> Column:
-    """Hex digit ``pos`` (1-based) of md5(s) as an integer 0..15 —
-    identical lowercase-hex md5 in Spark and DuckDB."""
-    return F.instr(F.lit(_HEXDIGITS), F.substring(F.md5(s), pos, 1)) - 1
-
 
 # --- leakage-safe train/val/test split ----------------------------------
 
@@ -97,7 +89,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate-cluster representative's digest (see
     `neardup_cluster_components`) and broadcast it back."""
     docs = load_table(spark, sf_dir, "documents")
-    hv = _hexval(F.col("text"), 1) * 16 + _hexval(F.col("text"), 2)
+    hv = md5_hex_digit(F.col("text"), 1) * 16 + md5_hex_digit(F.col("text"), 2)
     split = (
         F.when(hv < _TRAIN_BELOW, "train")
         .when(hv < _VAL_BELOW, "val")
@@ -574,7 +566,7 @@ def cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_toks")
     )
     ckey = F.col("cluster").cast("string")
-    hv = _hexval(ckey, 1) * 16 + _hexval(ckey, 2)
+    hv = md5_hex_digit(ckey, 1) * 16 + md5_hex_digit(ckey, 2)
     split = (
         F.when(hv < _TRAIN_BELOW, "train")
         .when(hv < _VAL_BELOW, "val")

@@ -2,12 +2,12 @@
 the driver contract (``__spark_entry__.py``).
 
 Every implemented operator from SURVEY.md §2 registers here as a named
-query (a ``(spark, sf_dir) -> DataFrame`` callable) plus, when the
-semantics are SQL-expressible, a DuckDB oracle SQL string. The driver
-compares the two at sf=0.01 with an order-insensitive value hash, so
-registered pairs MUST agree bit-for-bit: alias every computed column
-identically, route money aggregates through exact DECIMAL arithmetic,
-and format timestamps to strings (see ``gostream_spark.parity``).
+query (a ``(spark, sf_dir) -> DataFrame`` callable) plus its DuckDB
+oracle SQL string, which registration requires. The driver compares
+the two at sf=0.01 with an order-insensitive value hash, so registered
+pairs MUST agree bit-for-bit: alias every computed column identically,
+route money aggregates through exact DECIMAL arithmetic, and format
+timestamps to strings (see ``gostream_spark.parity``).
 """
 
 from __future__ import annotations
@@ -24,7 +24,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QueryDef:
     name: str
     fn: QueryFn
-    oracle: str | None = None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str  # DuckDB SQL the result must equal exactly
     doc: str = ""
     tags: tuple[str, ...] = field(default_factory=tuple)
     bench: bool = False  # include in bench.py's headline set
@@ -35,7 +35,7 @@ _REGISTRY: dict[str, QueryDef] = {}
 
 def register(
     name: str,
-    oracle: str | None = None,
+    oracle: str,
     doc: str = "",
     tags: tuple[str, ...] = (),
     bench: bool = False,
@@ -72,5 +72,5 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """Driver-contract shape: name -> DuckDB SQL (only SQL-expressible ones)."""
-    return {n: q.oracle for n, q in all_queries().items() if q.oracle is not None}
+    """Driver-contract shape: name -> DuckDB SQL."""
+    return {n: q.oracle for n, q in all_queries().items()}

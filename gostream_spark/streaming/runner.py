@@ -5,11 +5,12 @@ Every stream the engine runs goes through ONE lifecycle,
 (``availableNow`` to process everything currently available and stop
 — the deterministic harness that makes streaming results collectable
 and oracle-checkable — or a processing-time trigger bounded by an
-observed-output predicate), start under the startup lock, a bounded
-wait that polls the state-memory guard, then progress capture, stop
-and removal of a fresh checkpoint. The public runners differ only in
-their sink: ``run_available_now``/``run_until`` write an in-memory
-table (S4) and return its contents; ``run_foreach_batch`` hands each
+observed-output predicate), a start that pins the state width for
+the length of ``start()`` only, one bounded wait that polls the
+state-memory guard, then progress capture, stop and removal of a
+fresh checkpoint. The public runners differ only in their sink:
+``run_available_now``/``run_until`` write an in-memory table (S4)
+and return its contents; ``run_foreach_batch`` hands each
 micro-batch to a function, and ``run_foreach_batch_parquet``/
 ``run_foreach_batch_split`` are foreachBatch→parquet writers (S5/S6).
 
@@ -20,8 +21,11 @@ The one exception is a caller-owned checkpoint passed to
 ``_run_stream`` (the crash/restart tests): that directory is resumed
 if it holds an earlier run's offsets and state, and never removed.
 The ``sink-*`` directories (``_sink_dir``) back the DataFrames the
-foreachBatch runners and the file round-trip queries return, so they
-stay until the interpreter exits; each call gets a fresh one.
+foreachBatch runners, the file-sink streaming queries and the file
+round-trip queries return, so they stay until the interpreter exits;
+each call gets a fresh one. Both kinds of scratch directory carry
+their owner's pid, and ``_sweep_stale`` removes only those whose
+owner is gone.
 
 Every stream runs its stateful operators at ``STATE_PARTITIONS``
 (unless a caller passes another width), whatever the session's
@@ -170,10 +174,10 @@ def _poll_state_guard(q, max_heap_bytes: int, warned: set) -> None:
 
 
 # The state width of every stream. Spark fixes a stateful query's
-# state partitions from spark.sql.shuffle.partitions at its first
-# micro-batch (the value goes into the offset log, and a restart
-# keeps it); AQE never coalesces them, and each state partition pays
-# a fixed store open/commit on every micro-batch. So the width is a
+# state partitions from spark.sql.shuffle.partitions when it starts
+# (the value goes into the offset log, and a restart keeps it); AQE
+# never coalesces them, and each state partition pays a fixed store
+# open/commit on every micro-batch. So the width is a
 # per-batch cost, and it follows the state keyspace, not the batch
 # shuffle width of the session. Measured on this engine:
 # - r7 (PERF.md "Streaming fixed-overhead floor"): about 20 ms per
@@ -195,57 +199,25 @@ def _poll_state_guard(q, max_heap_bytes: int, warned: set) -> None:
 # A fresh two-scale A/B is what may move this number.
 STATE_PARTITIONS = 8
 
-# Guards the [conf-pin -> start -> first-batch-commit] window so
-# CONCURRENT streaming queries in one session each consume their OWN
-# width. spark.sql.shuffle.partitions is session-global and a
-# stateful query resolves it during batch-0 planning (recording it in
-# the offset log for every later batch and restart) — without the
-# lock, query B's pin could land between query A's set and A's
-# batch-0 plan. The lock serializes only startup; continuous-trigger
-# queries overlap freely from batch 1 on
-# (test_runner_concurrent_queries). Caveat: for availableNow
-# SINGLE-batch queries, lastProgress only appears after the query's
-# only batch commits, so the lock is held for that query's entire run
-# (bounded by the 120 s wait) and concurrent availableNow starts are
-# effectively serialized — accepted, since every registered
-# availableNow query commits its batch in well under the bound and
-# correctness (each batch-0 plan inside its own conf window) is what
-# the lock exists for.
+# Spark (4.1) fixes a stream's spark.sql.shuffle.partitions inside
+# start(): the StreamExecution constructor, which start() runs,
+# clones the session (sparkSessionForStream =
+# sparkSession.cloneSession()), and every batch plans in that clone
+# and records the width in the offset log. So the width needs the
+# session-global conf only across start(). The lock keeps concurrent
+# streams in one session from setting it inside each other's
+# [set -> start() -> restore] window (test_runner_concurrent_queries);
+# their batches overlap freely (test_stream_startups_overlap).
 _pin_lock = threading.Lock()
 
 
-def _start_with_pin(spark, state_partitions: int, start_fn):
-    """Start a streaming query at ``state_partitions`` state
-    partitions: serialize [set conf, start, wait for the first
-    progress event (batch 0 committed, partition count durably in the
-    offset log) or early termination], restoring the session conf
-    before releasing. Returns the started query. Caveat (documented,
-    accepted): the 120 s bounded wait can release the lock before a
-    pathologically slow batch 0 plans — at that point the window is
-    no longer guaranteed, but a batch 0 slower than 120 s has already
-    failed the latency bar this runner is sized for."""
-    with _pin_lock:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
-            q = start_fn()
-            # Bounded wait: availableNow on an empty source can finish
-            # with no progress event; a failed query deactivates.
-            deadline = time.time() + 120
-            while (
-                q.lastProgress is None
-                and q.isActive
-                and time.time() < deadline
-            ):
-                time.sleep(0.05)
-            return q
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
 def _scratch(kind: str) -> str:
+    """A fresh ``<kind>-<pid>-<hex>`` directory under ``.tmp/``; the
+    pid names the process that owns it (see ``_sweep_stale``)."""
     _sweep_stale()
-    path = os.path.join(_TMP_ROOT, f"{kind}-{uuid.uuid4().hex[:12]}")
+    path = os.path.join(
+        _TMP_ROOT, f"{kind}-{os.getpid()}-{uuid.uuid4().hex[:12]}"
+    )
     os.makedirs(path, exist_ok=True)
     return path
 
@@ -264,16 +236,31 @@ def _sink_dir() -> str:
 _STALE_AGE_SEC = 6 * 3600
 
 
+def _stale(entry: str) -> bool:
+    """Whether the scratch dir ``entry`` has no owner left: its pid
+    names no process, or, for a name without a pid, it is over 6 h
+    old. A live owner may still read its sinks lazily, however old."""
+    pid, sep, _ = entry.partition("-")[2].partition("-")
+    if sep and pid.isdigit():
+        try:
+            os.kill(int(pid), 0)
+        except ProcessLookupError:
+            return True
+        except OSError:  # alive, but another user's
+            pass
+        return False
+    return time.time() - os.path.getmtime(
+        os.path.join(_TMP_ROOT, entry)
+    ) > _STALE_AGE_SEC
+
+
 def _sweep_stale() -> None:
-    """Best-effort removal of scratch dirs older than 6h, left by
-    processes that were killed before they could remove their own."""
+    """Best-effort removal of the scratch dirs of processes that were
+    killed before they could remove their own."""
     try:
         for entry in os.listdir(_TMP_ROOT):
-            if not entry.startswith(("ckpt-", "sink-")):
-                continue
-            p = os.path.join(_TMP_ROOT, entry)
-            if time.time() - os.path.getmtime(p) > _STALE_AGE_SEC:
-                shutil.rmtree(p, ignore_errors=True)
+            if entry.startswith(("ckpt-", "sink-")) and _stale(entry):
+                shutil.rmtree(os.path.join(_TMP_ROOT, entry), ignore_errors=True)
     except OSError:
         pass
 
@@ -290,9 +277,10 @@ def _run_stream(
 ) -> None:
     """The one stream lifecycle. ``sink(writer) -> writer`` sets up the
     sink on ``sdf.writeStream``; this adds the checkpoint and the
-    trigger, starts the query under ``_start_with_pin`` at
-    ``state_partitions`` state partitions, waits, and always captures
-    progress and stops the query.
+    trigger, starts the query at ``state_partitions`` state partitions
+    (the session conf is set and restored across ``start()`` under
+    ``_pin_lock``), waits, and always captures progress and stops the
+    query.
 
     Without ``checkpoint`` the run gets a fresh ``.tmp/ckpt-*``
     directory that is removed on every exit path, failures included.
@@ -305,15 +293,16 @@ def _run_stream(
     ends when the query terminates. With ``until`` (a no-argument
     predicate over the sink) the trigger is ``processingTime`` every
     ``trigger_ms`` and the wait ends when ``until()`` holds, checked
-    every ``poll_sec``. Either way the wait runs in bounded slices so
-    the state-memory guard sees each committed batch's progress while
-    the query is still running (the cliff gives no latency
-    early-warning — the gauge has to be read before the stalling
-    commit, not after termination), a failed query re-raises its
-    exception, and ``TimeoutError`` is raised after ``timeout_sec``
-    rather than returning a partial sink. Each availableNow slice is
-    clamped to the remaining deadline so a ``timeout_sec`` < 2 is
-    honored (ADVICE r13)."""
+    every ``poll_sec`` from right after ``start()``, so a predicate
+    must read False on an empty sink. Either way this is the one
+    wait, and it runs in bounded slices so the state-memory guard
+    sees each committed batch's progress while the query is still
+    running (the cliff gives no latency early-warning — the gauge has
+    to be read before the stalling commit, not after termination), a
+    failed query re-raises its exception, and ``TimeoutError`` is
+    raised after ``timeout_sec`` rather than returning a partial
+    sink. Each availableNow slice is clamped to the remaining
+    deadline so a ``timeout_sec`` < 2 is honored (ADVICE r13)."""
     spark = sdf.sparkSession
     ckpt = checkpoint or _scratch("ckpt")
     trigger = (
@@ -323,14 +312,18 @@ def _run_stream(
     )
     q = None
     try:
-        q = _start_with_pin(
-            spark,
-            state_partitions,
-            lambda: sink(sdf.writeStream)
-            .option("checkpointLocation", ckpt)
-            .trigger(**trigger)
-            .start(),
-        )
+        with _pin_lock:
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+            try:
+                q = (
+                    sink(sdf.writeStream)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(**trigger)
+                    .start()
+                )
+            finally:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
         max_heap = _max_heap_bytes(spark)
         warned: set = set()
         deadline = time.time() + timeout_sec
@@ -412,12 +405,12 @@ def run_available_now(
     (0.5x) of the JVM heap — the measured provider-flip point (see
     the guard's module comment). Advisory only; never fails the run.
 
-    Concurrency-safe: the pin is applied under ``_start_with_pin``'s
-    startup lock — held from conf-set until the query's first batch
-    commits (when the value is durably in the offset log) — so N
-    queries with different pins can run concurrently in one session
-    and each consumes its own (proven by
-    tests/test_streaming.py::test_runner_concurrent_queries).
+    Concurrency-safe: Spark fixes the width when ``start()`` clones
+    the session, and ``_pin_lock`` is held from conf-set to
+    conf-restore around that call, so N queries with different pins
+    can run concurrently in one session, each consumes its own
+    (tests/test_streaming.py::test_runner_concurrent_queries), and
+    their batches overlap (test_stream_startups_overlap).
     """
     return _run_to_memory(
         sdf,

@@ -49,16 +49,13 @@ def test_entry_returns_rows(spark, sf_dir):
 def test_registry_hygiene():
     """Catalog-wide invariants: every query is documented; every
     oracle references only fixture tables (no typo'd or phantom
-    views); every streaming query is tagged S2; and NO query is
-    rows-only — round 8 converted the last nine sketch/iterative
-    cases to exact-checkable guarantee shapes (exact columns +
-    verdict columns the oracle asserts equal 1)."""
+    views); every query maps to a SURVEY row. That every query has an
+    oracle is ``registry.register``'s own rule."""
     import re
 
     from gostream_spark.io import TABLES
     from gostream_spark.registry import all_queries
 
-    rows_only_allowed: set[str] = set()
     table_re = re.compile(r"\b(?:FROM|JOIN)\s+([a-z_][a-z0-9_]*)", re.I)
     known = set(TABLES)
     # Coverage-frame invariant (VERDICT r13 #2): every registered
@@ -75,20 +72,28 @@ def test_registry_hygiene():
             f"{name} maps to zero SURVEY rows (tags={q.tags}); add a "
             "row tag like ('L8', 'ext')"
         )
-        if q.oracle is None:
-            assert name in rows_only_allowed, f"unexpected rows-only query {name}"
-        else:
-            for t in table_re.findall(q.oracle):
-                # CTE names shadow tables legitimately; only flag
-                # identifiers that are neither fixtures nor defined
-                # as CTEs/aliases in the same oracle
-                if t in known:
-                    continue
-                assert re.search(
-                    rf"\b{t}\b\s+AS\s+(?:MATERIALIZED\s*)?\(|\)\s*(?:AS\s+)?{t}\b|\b{t}\(",
-                    q.oracle,
-                    re.I,
-                ) or t in ("unnest",), f"{name}: unknown table {t!r} in oracle"
+        for t in table_re.findall(q.oracle):
+            # CTE names shadow tables legitimately; only flag
+            # identifiers that are neither fixtures nor defined as
+            # CTEs/aliases in the same oracle
+            if t in known:
+                continue
+            assert re.search(
+                rf"\b{t}\b\s+AS\s+(?:MATERIALIZED\s*)?\(|\)\s*(?:AS\s+)?{t}\b|\b{t}\(",
+                q.oracle,
+                re.I,
+            ) or t in ("unnest",), f"{name}: unknown table {t!r} in oracle"
+
+
+def test_register_refuses_a_query_without_an_oracle():
+    """Every query is checked exactly against its DuckDB oracle, so
+    registering one without an oracle fails."""
+    import pytest
+
+    from gostream_spark.registry import register
+
+    with pytest.raises(TypeError):
+        register("no_oracle")
 
 
 def test_every_query_returns_atomic_columns(spark, sf_dir):

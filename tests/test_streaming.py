@@ -744,6 +744,29 @@ def test_failed_stream_removes_its_checkpoint(spark, sf_dir):
     assert ckpts() - before == set()
 
 
+def test_scratch_sweep_spares_live_owners(tmp_path, monkeypatch):
+    """``_sweep_stale`` removes a scratch directory once the process
+    named in it is gone, and never one whose owner is alive, however
+    old: that owner may still read its sink lazily."""
+    import subprocess
+    import sys
+
+    from gostream_spark.streaming import runner
+
+    monkeypatch.setattr(runner, "_TMP_ROOT", str(tmp_path))
+    live = tmp_path / f"sink-{os.getpid()}-x"
+    live.mkdir()
+    seven_hours_ago = time.time() - 7 * 3600
+    os.utime(live, (seven_hours_ago, seven_hours_ago))
+    exited = subprocess.Popen([sys.executable, "-c", ""])
+    exited.wait()
+    dead = tmp_path / f"ckpt-{exited.pid}-x"
+    dead.mkdir()
+    runner._sweep_stale()
+    assert live.exists()
+    assert not dead.exists()
+
+
 def test_task_retry_mid_batch_is_exactly_once(spark, tmp_path, sf_dir):
     """Task-level failure inside a micro-batch: under local[2,2] (one
     retry per task) a Python UDF in the stream's projection fails
@@ -1021,10 +1044,11 @@ def test_runner_concurrent_queries(spark, sf_dir):
     N streaming queries driven CONCURRENTLY through run_available_now
     in ONE session, with DIFFERENT state_partitions pins, must (a)
     produce results identical to their sequential runs and (b) each
-    consume its own pin — the startup lock holds the session-global
-    spark.sql.shuffle.partitions from conf-set until the query's
-    first batch commits, so another thread's pin can never land
-    inside that window. Pin consumption is asserted from each
+    consume its own pin — start() clones the session, which fixes
+    the width, and the runner's lock holds the session-global
+    spark.sql.shuffle.partitions from conf-set to conf-restore
+    around that call, so another thread's pin can never land inside
+    that window. Pin consumption is asserted from each
     query's recorded StreamingQueryProgress state-operator partition
     count, not just from results (results are partition-count
     invariant; the pin is the part the race could corrupt)."""
@@ -1081,6 +1105,35 @@ def test_runner_concurrent_queries(spark, sf_dir):
         if b.get("stateOperators")
     )
     assert pins_seen == [2, 4, 8], json.dumps(pins_seen)
+
+
+def test_stream_startups_overlap(spark, sf_dir):
+    """The runner's width lock is held only across ``start()``, so a
+    stream in its first batch does not keep another stream from
+    starting: stream A's batch waits for stream B's batch, and B
+    starts only once A is inside its batch."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from gostream_spark.streaming import runner
+    from gostream_spark.streaming.source import file_stream
+
+    a_in_batch, b_ran, a_saw_b = threading.Event(), threading.Event(), []
+
+    def a_batch(batch_df, batch_id):
+        a_in_batch.set()
+        a_saw_b.append(b_ran.wait(30))
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        a = pool.submit(
+            runner.run_foreach_batch, file_stream(spark, sf_dir, "events"), a_batch
+        )
+        assert a_in_batch.wait(120), "stream A never reached its batch"
+        runner.run_foreach_batch(
+            file_stream(spark, sf_dir, "events"), lambda df, i: b_ran.set()
+        )
+        a.result(timeout=120)
+    assert a_saw_b and all(a_saw_b), a_saw_b
 
 
 def test_stream_state_width_is_the_runners_not_the_sessions(spark, sf_dir):

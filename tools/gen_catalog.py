@@ -1,7 +1,7 @@
 #!/usr/bin/env python
-"""Generate CATALOG.md: every registered query with its check type,
-tags, and first docstring sentence — the browsable index of the
-engine's capabilities (COVERAGE.md maps rows; this maps QUERIES).
+"""Generate CATALOG.md: every registered query with its tags and
+first docstring sentence — the browsable index of the engine's
+capabilities (COVERAGE.md maps rows; this maps QUERIES).
 
     python tools/gen_catalog.py > CATALOG.md
 """
@@ -39,15 +39,13 @@ def main() -> None:
 
     print("# CATALOG — every registered query")
     print()
-    print("Generated by `python tools/gen_catalog.py`. 'exact' = DuckDB")
-    print("oracle hash comparison; 'rows-only' = invariant-tested instead")
-    print(f"(see tests/test_rows_only.py). {len(qs)} queries.")
+    print("Generated by `python tools/gen_catalog.py`. Every query is")
+    print(f"checked exactly against its DuckDB oracle. {len(qs)} queries.")
     for mod in sorted(by_module):
         print(f"\n## {mod}\n")
         for q in sorted(by_module[mod], key=lambda q: q.name):
-            kind = "exact" if q.oracle is not None else "rows-only"
             tags = ",".join(q.tags)
-            print(f"- **`{q.name}`** ({kind}; {tags}) — {first_sentence(q.doc)}")
+            print(f"- **`{q.name}`** ({tags}) — {first_sentence(q.doc)}")
 
 
 if __name__ == "__main__":

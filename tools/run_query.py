@@ -33,8 +33,7 @@ def main() -> int:
     qs = all_queries()
     if args.list_all or not args.name:
         for n, q in sorted(qs.items()):
-            kind = "exact" if q.oracle else "rows-only"
-            print(f"{n:40s} [{','.join(q.tags)}] ({kind})")
+            print(f"{n:40s} [{','.join(q.tags)}]")
         return 0
     if args.name not in qs:
         print(f"unknown query {args.name!r}; --list shows the catalog")
@@ -50,7 +49,7 @@ def main() -> int:
         df.explain("formatted")
     df.show(args.rows, truncate=False)
     print(f"({df.count()} rows total)")
-    if args.oracle and q.oracle:
+    if args.oracle:
         from tools.oracle import oracle_con
 
         con = oracle_con(sf_dir)
