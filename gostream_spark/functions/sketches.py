@@ -163,10 +163,14 @@ def bottomk_sketch(items: Column, k: int) -> Column:
     (merge + re-take k smallest) — the reason the sketch composes
     distributively at 100 TB. Hashes are deduped before the take so
     the KMV merge law holds on MULTISET inputs too (pinned by
-    tests/test_properties.py::test_bottomk_sketch_merges_distributively);
-    callers passing already-distinct shingles are unaffected."""
+    tests/test_properties.py::test_bottomk_sketch_merges_distributively),
+    so callers need not dedupe the items first. ``sort_array`` rather
+    than ``array_sort``: md5 hashes are never NULL, so the two orders
+    agree, and ``array_sort``'s default comparator evaluates a lambda
+    on every comparison (its interpreted sort was the top executor
+    frame of ``neardup_cluster_components``' sketch stage)."""
     return F.slice(
-        F.array_sort(
+        F.sort_array(
             F.array_distinct(
                 F.transform(items, lambda s: F.substring(F.md5(s), 1, 15))
             )

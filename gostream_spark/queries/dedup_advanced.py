@@ -239,7 +239,9 @@ def _bottomk_band_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     PageRank-centrality queries."""
     docs = load_spread(spark, sf_dir)
     n = F.size(F.split("text", " "))
-    shingles = F.array_distinct(trigram_shingles(F.col("text")))
+    # No array_distinct over the shingles: the sketch dedupes their
+    # hashes, which gives the same sketch.
+    shingles = trigram_shingles(F.col("text"))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     m = bottomk_sketch(F.col("sh"), 8)
     sig = with_sh.select("doc_id", m.alias("m"))

@@ -551,7 +551,7 @@ def minhash_bottomk_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles = F.array_distinct(trigram_shingles(F.col("text")))
     with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
     mins = F.slice(
-        F.array_sort(
+        F.sort_array(
             F.transform(F.col("sh"), lambda s: F.substring(F.md5(s), 1, 15))
         ),
         1,

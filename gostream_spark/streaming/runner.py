@@ -5,10 +5,12 @@ Every stream the engine runs goes through ONE lifecycle,
 (``availableNow`` to process everything currently available and stop
 — the deterministic harness that makes streaming results collectable
 and oracle-checkable — or a processing-time trigger bounded by an
-observed-output predicate), a start that pins the state width for
-the length of ``start()`` only, one bounded wait that polls the
-state-memory guard, then progress capture, stop and removal of a
-fresh checkpoint. The public runners differ only in their sink:
+observed-output predicate), a start that pins the state width and,
+on a local checkpoint, Spark's FileSystem checkpoint manager (whose
+renames fork no ``readlink``: ``_LOCAL_CHECKPOINT_MANAGER``) for the
+length of ``start()`` only (``_start_pins``), one bounded wait that
+polls the state-memory guard, then progress capture, stop and removal
+of a fresh checkpoint. The public runners differ only in their sink:
 ``run_available_now``/``run_until`` write an in-memory table (S4)
 and return its contents; ``run_foreach_batch`` hands each
 micro-batch to a function, and ``run_foreach_batch_parquet``/
@@ -25,7 +27,8 @@ foreachBatch runners, the file-sink streaming queries and the file
 round-trip queries return, so they stay until the interpreter exits;
 each call gets a fresh one. Both kinds of scratch directory carry
 their owner's pid, and ``_sweep_stale`` removes only those whose
-owner is gone.
+owner is gone; it also removes the pid-less ``pysink-*`` and
+``src-*`` directories older versions left, once they are 6 h old.
 
 Every stream runs its stateful operators at ``STATE_PARTITIONS``
 (unless a caller passes another width), whatever the session's
@@ -45,6 +48,7 @@ import threading
 import time
 import uuid
 import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -210,6 +214,36 @@ STATE_PARTITIONS = 8
 # their batches overlap freely (test_stream_startups_overlap).
 _pin_lock = threading.Lock()
 
+# The checkpoint file manager of a stream whose checkpoint is a local
+# path. Spark's default there, FileContextBasedCheckpointFileManager,
+# renames each state delta and log file through
+# AbstractFileSystem.rename, which calls
+# RawLocalFileSystem.getFileLinkStatus twice, and without the
+# native-hadoop library each call forks a `readlink` process. This
+# manager's 2-argument FileSystem.rename is a plain POSIX rename. On
+# a catch-up drain of 81 files at 8 state partitions (4 vCPUs) the
+# drain forked 176 `readlink` of its 237 processes, and its summed
+# state commitTimeMs fell from 1021 to 77 ms (PERF.md "State commit:
+# FileContext rename forks"). Both managers write the same checkpoint
+# files, checksums included, so a checkpoint resumes under either.
+# HDFS and object stores keep Spark's default.
+_LOCAL_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _start_pins(checkpoint: str, state_partitions: int) -> dict[str, str]:
+    """The session confs a stream's ``start()`` runs under: its state
+    width, and on a local checkpoint (no URI scheme, or ``file``) the
+    FileSystem checkpoint manager."""
+    pins = {"spark.sql.shuffle.partitions": str(state_partitions)}
+    if urlparse(checkpoint).scheme in ("", "file"):
+        pins["spark.sql.streaming.checkpointFileManagerClass"] = (
+            _LOCAL_CHECKPOINT_MANAGER
+        )
+    return pins
+
 
 def _scratch(kind: str) -> str:
     """A fresh ``<kind>-<pid>-<hex>`` directory under ``.tmp/``; the
@@ -256,10 +290,13 @@ def _stale(entry: str) -> bool:
 
 def _sweep_stale() -> None:
     """Best-effort removal of the scratch dirs of processes that were
-    killed before they could remove their own."""
+    killed before they could remove their own, and of the pid-less
+    legacy ones past ``_STALE_AGE_SEC``."""
     try:
         for entry in os.listdir(_TMP_ROOT):
-            if entry.startswith(("ckpt-", "sink-")) and _stale(entry):
+            # pysink-/src-: pid-less per-sf_dir sinks of older versions;
+            # nothing writes them any more, so they go by age.
+            if entry.startswith(("ckpt-", "sink-", "pysink-", "src-")) and _stale(entry):
                 shutil.rmtree(os.path.join(_TMP_ROOT, entry), ignore_errors=True)
     except OSError:
         pass
@@ -277,10 +314,12 @@ def _run_stream(
 ) -> None:
     """The one stream lifecycle. ``sink(writer) -> writer`` sets up the
     sink on ``sdf.writeStream``; this adds the checkpoint and the
-    trigger, starts the query at ``state_partitions`` state partitions
-    (the session conf is set and restored across ``start()`` under
-    ``_pin_lock``), waits, and always captures progress and stops the
-    query.
+    trigger, starts the query under ``_start_pins`` (its
+    ``state_partitions`` state partitions and, on a local checkpoint,
+    the FileSystem checkpoint manager: the session confs are set
+    across ``start()`` under ``_pin_lock``, then restored, or unset if
+    they were unset), waits, and always captures progress and stops
+    the query.
 
     Without ``checkpoint`` the run gets a fresh ``.tmp/ckpt-*``
     directory that is removed on every exit path, failures included.
@@ -313,8 +352,10 @@ def _run_stream(
     q = None
     try:
         with _pin_lock:
-            prev = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+            pins = _start_pins(ckpt, state_partitions)
+            prev = {key: spark.conf.get(key, None) for key in pins}
+            for key, value in pins.items():
+                spark.conf.set(key, value)
             try:
                 q = (
                     sink(sdf.writeStream)
@@ -323,7 +364,11 @@ def _run_stream(
                     .start()
                 )
             finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
+                for key, value in prev.items():
+                    if value is None:
+                        spark.conf.unset(key)
+                    else:
+                        spark.conf.set(key, value)
         max_heap = _max_heap_bytes(spark)
         warned: set = set()
         deadline = time.time() + timeout_sec

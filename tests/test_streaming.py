@@ -767,6 +767,91 @@ def test_scratch_sweep_spares_live_owners(tmp_path, monkeypatch):
     assert not dead.exists()
 
 
+def test_scratch_sweep_removes_old_legacy_sinks(tmp_path, monkeypatch):
+    """The pid-less ``pysink-*`` and ``src-*`` directories older
+    versions wrote are removed once they are over 6 h old, and kept
+    while younger."""
+    from gostream_spark.streaming import runner
+
+    monkeypatch.setattr(runner, "_TMP_ROOT", str(tmp_path))
+    seven_hours_ago = time.time() - 7 * 3600
+    old = [tmp_path / "pysink-stream-a1e8d12c", tmp_path / "src-csv-a1e8d12c"]
+    young = [tmp_path / "pysink-batch-cfc1c0f8", tmp_path / "src-part-cfc1c0f8"]
+    for d in old + young:
+        d.mkdir()
+    for d in old:
+        os.utime(d, (seven_hours_ago, seven_hours_ago))
+    runner._sweep_stale()
+    assert not any(d.exists() for d in old)
+    assert all(d.exists() for d in young)
+
+
+def test_start_pins_local_checkpoints_only():
+    """A local checkpoint (a path, or a ``file:`` URI) starts under the
+    FileSystem checkpoint manager; an HDFS or object-store checkpoint
+    keeps Spark's default. Every stream pins its state width."""
+    from gostream_spark.streaming import runner
+
+    width = {"spark.sql.shuffle.partitions": "8"}
+    local = {
+        **width,
+        "spark.sql.streaming.checkpointFileManagerClass": (
+            runner._LOCAL_CHECKPOINT_MANAGER
+        ),
+    }
+    for path in ("/data/ckpt", "rel/ckpt", "file:///data/ckpt"):
+        assert runner._start_pins(path, 8) == local, path
+    for path in ("hdfs://nn/x", "s3a://b/x"):
+        assert runner._start_pins(path, 8) == width, path
+
+
+def test_local_stream_commits_through_filesystem_manager(spark, sf_dir, tmp_path):
+    """A running stream on a local checkpoint gets the FileSystem
+    checkpoint manager from its cloned session, and ``_run_stream``
+    leaves the session's own confs as it found them: the manager conf
+    unset when it was unset, and its value when it was set."""
+    from gostream_spark.streaming import runner
+    from gostream_spark.streaming.source import file_stream
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    spark_default = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    jvm = spark.sparkContext._jvm
+    managers = []
+
+    def record(batch_df, batch_id):
+        # The manager Spark builds for a checkpoint in the batch's
+        # session, the stream's clone of the caller's.
+        jss = batch_df.sparkSession._jsparkSession
+        mgr = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            jss.sessionState().newHadoopConf(),
+        )
+        managers.append(mgr.getClass().getName())
+
+    width = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.unset(key)
+    try:
+        for before in (None, spark_default):
+            if before is not None:
+                spark.conf.set(key, before)
+            managers.clear()
+            runner._run_stream(
+                file_stream(spark, sf_dir, "events").select("event_id"),
+                lambda w: w.foreachBatch(record),
+                state_partitions=3,
+            )
+            assert managers and set(managers) == {
+                runner._LOCAL_CHECKPOINT_MANAGER
+            }, managers
+            assert spark.conf.get(key, None) == before
+            assert spark.conf.get("spark.sql.shuffle.partitions") == width
+    finally:
+        spark.conf.unset(key)
+
+
 def test_task_retry_mid_batch_is_exactly_once(spark, tmp_path, sf_dir):
     """Task-level failure inside a micro-batch: under local[2,2] (one
     retry per task) a Python UDF in the stream's projection fails
