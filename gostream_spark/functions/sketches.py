@@ -1,6 +1,10 @@
 """Sketch expression builders (SURVEY.md §2.8 L2): the word-trigram
 shingles and the md5-derived SimHash / MinHash constructions shared
-by the dedup queries and the property tests.
+by the dedup queries and the property tests, and
+``minhash_band_table``, the one md5 MinHash-LSH banding kernel: every
+md5 band table in the engine (the k-hash and bottom-k band queries,
+the streaming near-dup join, the near-dup candidate graph) comes from
+it.
 
 The shingles come from one regex over the text column. The sketch
 builders are pure Column expressions (JVM-side, no UDFs) over an
@@ -20,7 +24,9 @@ deployed for web near-dup detection in Manku et al., WWW 2007.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _HEXDIGITS = "0123456789abcdef"
@@ -142,17 +148,17 @@ def minhash_khash_sig(items: Column, k: int) -> Column:
     Estimator: Jaccard(A, B) ≈ fraction of equal components. Costs k
     hash passes over the items — the bottom-k sketch below gets the
     same estimate family from ONE pass."""
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    items,
-                    lambda s, i=i: F.substring(F.md5(F.concat(s, F.lit(f"#{i}"))), 1, 15),
-                )
-            )
-            for i in range(k)
-        ]
-    )
+
+    def component(i: int) -> Column:
+        # The seed is bound by this closure, never by a lambda default:
+        # ``F.transform`` passes the element index to a two-parameter
+        # lambda, which would overwrite the seed.
+        salt = F.lit(f"#{i}")
+        return F.array_min(
+            F.transform(items, lambda s: F.substring(F.md5(F.concat(s, salt)), 1, 15))
+        )
+
+    return F.array(*[component(i) for i in range(k)])
 
 
 def bottomk_sketch(items: Column, k: int) -> Column:
@@ -251,3 +257,55 @@ def simhash64_from_xxhashes(hashes: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc.bitwiseOR(x),
     )
+
+
+def minhash_band_table(
+    docs: DataFrame, signature: Callable[[Column, int], Column]
+) -> DataFrame:
+    """The one md5 MinHash-LSH banding kernel: one row per (doc_id,
+    band_id, band_hash) of a documents DataFrame (``doc_id``, ``text``;
+    batch or streaming). Docs with at least 3 tokens get their word
+    trigram shingles, the 8-value ``signature(shingles, 8)``
+    (``minhash_khash_sig`` or ``bottomk_sketch``) and 4 bands of 2
+    rows, band b = md5(m[2b+1] || m[2b+2]). A doc whose signature has
+    fewer than 8 values (a bottom-k sketch of < 8 distinct shingles)
+    gets no bands. Row-local (no shuffle); callers group or join on
+    the band keys. The shingles keep their repeats: ``array_min`` does
+    not see them and ``bottomk_sketch`` dedupes its hashes."""
+    n = F.size(F.split("text", " "))
+    # The shingles get their own projection: the k-hash signature
+    # reads them k times, and CollapseProject does not inline a
+    # non-cheap alias read more than once, so the regex runs once.
+    with_sh = docs.filter(n >= 3).select(
+        "doc_id", trigram_shingles(F.col("text")).alias("sh")
+    )
+    sig = with_sh.select("doc_id", signature(F.col("sh"), 8).alias("m"))
+    # A short signature is excluded through NULL bands, not a
+    # ``size(m) >= 8`` filter: Catalyst would alias-substitute such a
+    # filter and push it below the caller's spread_for_compute
+    # exchange, re-evaluating the whole shingle+signature pipeline
+    # serially in the scan task, and again above it. ``try_element_at``
+    # past the end of a short signature yields NULL, and the m[8]
+    # guard nulls EVERY band of it (without the guard a 3-shingle doc
+    # would still land in band 0, while the oracles exclude the whole
+    # doc). The NOT NULL predicate reads the stack() generator's
+    # output, which Catalyst cannot push below the Generate, so the
+    # signature is evaluated once, after the exchange (plan-audited in
+    # tests/test_plans.py).
+
+    def m(i: int) -> Column:
+        return F.try_element_at("m", F.lit(i))
+
+    bands = sig.select(
+        "doc_id",
+        *[
+            F.when(
+                m(8).isNotNull(), F.md5(F.concat(m(2 * b + 1), m(2 * b + 2)))
+            ).alias(f"band{b}")
+            for b in range(4)
+        ],
+    )
+    return bands.selectExpr(
+        "doc_id",
+        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (band_id, band_hash)",
+    ).filter(F.col("band_hash").isNotNull())

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from gostream_spark.functions import cosine_similarity
 from gostream_spark.functions.sketches import (
     bottomk_sketch,
+    minhash_band_table,
     simhash_from_nibbles,
     simhash_nibbles,
     trigram_shingles,
@@ -237,44 +238,7 @@ def _bottomk_band_star_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges per (band, band_hash) bucket (hub = min doc_id; linear in
     bucket size, never all-pairs). Used by the cluster-closure and
     PageRank-centrality queries."""
-    docs = load_spread(spark, sf_dir)
-    n = F.size(F.split("text", " "))
-    # No array_distinct over the shingles: the sketch dedupes their
-    # hashes, which gives the same sketch.
-    shingles = trigram_shingles(F.col("text"))
-    with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
-    m = bottomk_sketch(F.col("sh"), 8)
-    sig = with_sh.select("doc_id", m.alias("m"))
-    # Docs with < 8 distinct shingles are excluded via NULL bands, not
-    # a ``size(sh) >= 8`` filter: that filter would be
-    # alias-substituted below the spread_for_compute exchange and
-    # re-evaluate the whole shingle+sketch pipeline serially in the
-    # scan task (the r10 registry audit found it duplicated in every
-    # consumer branch). Same mechanism as ``minhash_bottomk_bands``
-    # (llm_similarity.py): try_element_at past a short sketch yields
-    # NULL -> md5/concat propagate it, the m[8] guard nulls EVERY
-    # band of a short sketch, and the NOT NULL predicate references
-    # the stack() GENERATOR's output, which cannot be pushed below
-    # the Generate.
-    bands = sig.select(
-        "doc_id",
-        *[
-            F.when(
-                F.try_element_at("m", F.lit(8)).isNotNull(),
-                F.md5(
-                    F.concat(
-                        F.try_element_at("m", F.lit(2 * b + 1)),
-                        F.try_element_at("m", F.lit(2 * b + 2)),
-                    )
-                ),
-            ).alias(f"band{b}")
-            for b in range(4)
-        ],
-    )
-    stacked = bands.selectExpr(
-        "doc_id",
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (band_id, band_hash)",
-    ).filter(F.col("band_hash").isNotNull())
+    stacked = minhash_band_table(load_spread(spark, sf_dir), bottomk_sketch)
     hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_hash"))
     return (
         stacked.withColumn("hub", hub)

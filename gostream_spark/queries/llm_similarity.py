@@ -24,7 +24,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gostream_spark.functions import cosine_similarity
-from gostream_spark.functions.sketches import trigram_shingles
+from gostream_spark.functions.sketches import (
+    bottomk_sketch,
+    minhash_band_table,
+    minhash_khash_sig,
+    trigram_shingles,
+)
 from gostream_spark.io import load_spread, load_table
 from gostream_spark.operators import topk_per_group, topk_ranked
 from gostream_spark.registry import register
@@ -440,39 +445,18 @@ FROM buckets GROUP BY band_id
 """
 
 
-def _minhash_md5_sig(sh_col: Column, i: int) -> Column:
-    """One md5-MinHash component: lexicographic min over shingles of
-    the first 15 hex digits of md5(shingle + seed). Fixed-width
-    lowercase-hex strings compare identically in Spark and DuckDB, so
-    (unlike the xxhash64 variant above) this signature is exactly
-    reproducible cross-engine."""
-    return F.array_min(
-        F.transform(sh_col, lambda s: F.substring(F.md5(F.concat(s, F.lit(f"#{i}"))), 1, 15))
+def _bucket_stats(bands: DataFrame) -> DataFrame:
+    """Per-band LSH bucket statistics of a band table: bucket count,
+    largest bucket and candidate pairs (sum of C(size, 2))."""
+    buckets = bands.groupBy("band_id", "band_hash").agg(
+        F.count(F.lit(1)).alias("bucket_size")
     )
-
-
-def minhash_md5_band_table(docs: DataFrame) -> DataFrame:
-    """Shared md5-MinHash LSH banding: word-trigram shingles →
-    MinHash(k=8) signature → 4 bands of 2 rows, stacked to one row per
-    (doc_id, band_id, band_hash). Row-local (no shuffle); callers add
-    their own groupBy/join over the band keys. Cross-engine exact —
-    the DuckDB twins recompute the identical signature."""
-    n = F.size(F.split("text", " "))
-    shingles = F.array_distinct(trigram_shingles(F.col("text")))
-    with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
-    sig = with_sh.select(
-        "doc_id", *[_minhash_md5_sig(F.col("sh"), i).alias(f"mh{i}") for i in range(8)]
-    )
-    bands = sig.select(
-        "doc_id",
-        *[
-            F.md5(F.concat(F.col(f"mh{2 * b}"), F.col(f"mh{2 * b + 1}"))).alias(f"band{b}")
-            for b in range(4)
-        ],
-    )
-    return bands.selectExpr(
-        "doc_id",
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (band_id, band_hash)",
+    return buckets.groupBy("band_id").agg(
+        F.count(F.lit(1)).alias("n_buckets"),
+        F.max("bucket_size").alias("max_bucket"),
+        F.sum(
+            (F.col("bucket_size") * (F.col("bucket_size") - 1) / 2).cast("bigint")
+        ).alias("candidate_pairs"),
     )
 
 
@@ -486,17 +470,7 @@ def minhash_md5_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-partitioned groupBy, never an all-pairs join; md5 costs a
     little more per shingle but buys cross-engine verifiability."""
     docs = load_spread(spark, sf_dir)
-    stacked = minhash_md5_band_table(docs).drop("doc_id")
-    buckets = stacked.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    )
-    return buckets.groupBy("band_id").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("bucket_size").alias("max_bucket"),
-        F.sum(
-            (F.col("bucket_size") * (F.col("bucket_size") - 1) / 2).cast("bigint")
-        ).alias("candidate_pairs"),
-    )
+    return _bucket_stats(minhash_band_table(docs, minhash_khash_sig))
 
 
 _MINHASH_BOTTOMK_ORACLE = """
@@ -547,63 +521,7 @@ def minhash_bottomk_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     in candidate generation). Docs with < 8 distinct shingles are
     excluded (their bottom-8 sketch is undefined)."""
     docs = load_spread(spark, sf_dir)
-    n = F.size(F.split("text", " "))
-    shingles = F.array_distinct(trigram_shingles(F.col("text")))
-    with_sh = docs.filter(n >= 3).select("doc_id", shingles.alias("sh"))
-    mins = F.slice(
-        F.sort_array(
-            F.transform(F.col("sh"), lambda s: F.substring(F.md5(s), 1, 15))
-        ),
-        1,
-        8,
-    )
-    sig = with_sh.select("doc_id", mins.alias("m"))
-    # Docs with < 8 distinct shingles are excluded via NULL bands
-    # rather than a ``size(m) >= 8`` filter: a filter over the sketch
-    # column would be alias-substituted by Catalyst and pushed below
-    # the repartition into the single-task scan stage, re-evaluating
-    # the whole md5+sort sketch there (serializing exactly the work
-    # the repartition parallelizes, then computing it a second time
-    # above). ``try_element_at`` past the end of a short sketch yields
-    # NULL -> concat/md5 propagate it -> band_hash NULL; the NOT NULL
-    # predicate references the stack() GENERATOR's output, which
-    # Catalyst cannot push below the Generate, so the sketch is
-    # evaluated once, after the exchange (plan-audited in
-    # tests/test_plans.py).
-    bands = sig.select(
-        "doc_id",
-        *[
-            # The m[8] IS NOT NULL term makes a SHORT sketch (< 8
-            # shingles) null out EVERY band, not just the bands past
-            # its end — without it a 3-shingle doc still lands in band
-            # 0 while the oracle's HAVING count(*) >= 8 excludes the
-            # whole doc (degenerate-input parity). Still a projection
-            # over m, so nothing new is pushable below the exchange.
-            F.when(
-                F.try_element_at("m", F.lit(8)).isNotNull(),
-                F.md5(
-                    F.concat(
-                        F.try_element_at("m", F.lit(2 * b + 1)),
-                        F.try_element_at("m", F.lit(2 * b + 2)),
-                    )
-                ),
-            ).alias(f"band{b}")
-            for b in range(4)
-        ],
-    )
-    stacked = bands.selectExpr(
-        "stack(4, 0, band0, 1, band1, 2, band2, 3, band3) AS (band_id, band_hash)"
-    ).filter(F.col("band_hash").isNotNull())
-    buckets = stacked.groupBy("band_id", "band_hash").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    )
-    return buckets.groupBy("band_id").agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.max("bucket_size").alias("max_bucket"),
-        F.sum(
-            (F.col("bucket_size") * (F.col("bucket_size") - 1) / 2).cast("bigint")
-        ).alias("candidate_pairs"),
-    )
+    return _bucket_stats(minhash_band_table(docs, bottomk_sketch))
 
 
 _SIM_LSH_ORACLE = """

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gostream_spark.functions.sketches import minhash_band_table, minhash_khash_sig
 from gostream_spark.io import load_table
 from gostream_spark.parity import TS_FMT_DUCK, ts_str
 # A streaming twin of a batch query shares its oracle: both must
@@ -937,16 +938,14 @@ def streaming_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     is materialized once (parquet, bucketed by band_hash) instead of
     recomputed per batch, and the join shuffles only band-key matches,
     never all-pairs."""
-    from gostream_spark.queries.llm_similarity import minhash_md5_band_table
-
-    static_bands = (
-        minhash_md5_band_table(
-            load_table(spark, sf_dir, "documents").filter(F.col("source") != "src1")
-        )
-        .withColumnRenamed("doc_id", "corpus_doc")
-    )
+    static_bands = minhash_band_table(
+        load_table(spark, sf_dir, "documents").filter(F.col("source") != "src1"),
+        minhash_khash_sig,
+    ).withColumnRenamed("doc_id", "corpus_doc")
     stream = file_stream(spark, sf_dir, "documents")
-    new_bands = minhash_md5_band_table(stream.filter(F.col("source") == "src1"))
+    new_bands = minhash_band_table(
+        stream.filter(F.col("source") == "src1"), minhash_khash_sig
+    )
     joined = new_bands.join(static_bands, ["band_id", "band_hash"]).select(
         "doc_id", "corpus_doc"
     )

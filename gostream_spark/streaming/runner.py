@@ -414,12 +414,12 @@ def _run_to_memory(
         else lambda: predicate(spark.table(name)),
         **run,
     )
-    # Materialize off the memory sink (localCheckpoint: executor-side
-    # blocks, freed by the ContextCleaner once the result is
-    # unreferenced), then drop the temp view so event-scale sink
-    # contents are not pinned in driver memory for the session
-    # lifetime across repeated harness runs.
-    result = spark.table(name).localCheckpoint(eager=True)
+    # The returned DataFrame's plan holds the memory sink itself, so
+    # it stays readable after the temp view is dropped; dropping the
+    # view means the driver keeps the sink rows only while that
+    # DataFrame lives, not for the session lifetime across repeated
+    # harness runs.
+    result = spark.table(name)
     spark.catalog.dropTempView(name)
     return result
 

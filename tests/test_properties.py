@@ -218,27 +218,20 @@ def test_minhash_bands_collide_for_exact_duplicates(spark, texts):
     band — an exact duplicate can never escape candidate generation.
     (The converse — distinct docs rarely colliding — is statistical,
     not asserted.)"""
-    from gostream_spark.queries.llm_similarity import _minhash_md5_sig
+    from gostream_spark.functions.sketches import minhash_band_table, minhash_khash_sig
 
     # Force at least one duplicate pair.
     texts = texts + [texts[0]]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id INT, text STRING"
     )
-    shingles = F.array_distinct(_zip_with_shingles(F.col("text")))
-    sig = df.select("doc_id", "text", shingles.alias("sh")).select(
-        "doc_id",
-        "text",
+    bands = minhash_band_table(df, minhash_khash_sig).groupBy("doc_id").agg(
         *[
-            F.md5(
-                F.concat(
-                    _minhash_md5_sig(F.col("sh"), 2 * b),
-                    _minhash_md5_sig(F.col("sh"), 2 * b + 1),
-                )
-            ).alias(f"band{b}")
+            F.max(F.when(F.col("band_id") == b, F.col("band_hash"))).alias(f"band{b}")
             for b in range(4)
-        ],
+        ]
     )
+    sig = df.join(bands, "doc_id")
     rows = sig.collect()
     by_text = {}
     for r in rows:
@@ -334,6 +327,163 @@ def test_minhash_bottomk_and_khash_estimators_agree(spark, overlap, seed):
     assert abs(est_khash - true_j) <= 0.35, (est_khash, true_j)
     assert abs(est_bottomk - true_j) <= 0.35, (est_bottomk, true_j)
     assert abs(est_khash - est_bottomk) <= 0.45, (est_khash, est_bottomk)
+
+
+_DUCK_SHINGLES = """
+sub AS (
+  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+), sh AS (
+  SELECT DISTINCT doc_id,
+         unnest(list_transform(range(1, len(toks) - 1),
+                               i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2]))
+           AS shingle
+  FROM sub WHERE len(toks) >= 3
+)"""
+
+# The two MinHash signatures the dedup oracles compute, as one list
+# column ``m`` per doc.
+_DUCK_SIGS = {
+    "khash": "SELECT doc_id, ["
+    + ", ".join(f"min(substr(md5(shingle || '#{i}'), 1, 15))" for i in range(8))
+    + "] AS m FROM sh GROUP BY doc_id",
+    "bottomk": "SELECT doc_id,"
+    " list_slice(list_sort(list(substr(md5(shingle), 1, 15))), 1, 8) AS m"
+    " FROM sh GROUP BY doc_id HAVING count(*) >= 8",
+}
+
+
+def _duck_bands(sig: str) -> str:
+    """The dedup oracles' band CTE, row level: (doc_id, band_id,
+    band_hash) for the named signature."""
+    return (
+        f"WITH {_DUCK_SHINGLES}, sig AS ({_DUCK_SIGS[sig]})\n"
+        + "\nUNION ALL ".join(
+            f"SELECT doc_id, {b} AS band_id, md5(m[{2 * b + 1}] || m[{2 * b + 2}])"
+            " AS band_hash FROM sig"
+            for b in range(4)
+        )
+    )
+
+
+def _kernel_sigs():
+    from gostream_spark.functions.sketches import bottomk_sketch, minhash_khash_sig
+
+    return {"khash": minhash_khash_sig, "bottomk": bottomk_sketch}
+
+
+def test_minhash_band_table_matches_duckdb_bands(spark, sf_dir, oracle):
+    """The one banding kernel equals the DuckDB band CTE row for row on
+    the fixture, under both signatures: the bottom-k one behind the
+    near-dup graph and the k-hash one behind ``minhash_md5_bands`` and
+    the streaming near-dup join."""
+    from gostream_spark.functions.sketches import minhash_band_table
+    from gostream_spark.io import load_table
+    from tools.oracle import compare
+
+    docs = load_table(spark, sf_dir, "documents")
+    for name, sig in _kernel_sigs().items():
+        n = compare(minhash_band_table(docs, sig), _duck_bands(name), oracle)
+        assert n > 0, name
+
+
+def test_minhash_band_table_short_docs(spark, tmp_path):
+    """Short and repetitive docs: a doc with 3-7 distinct shingles gets
+    k-hash bands but no bottom-k bands, a doc of < 3 tokens or NULL
+    text gets none, and repeated shingles count once. Component i of
+    the k-hash signature is md5(item || '#i') (15-hex prefix)."""
+    import hashlib
+
+    from gostream_spark.functions.sketches import minhash_band_table, minhash_khash_sig
+    from tools.oracle import compare, oracle_con
+
+    long_text = " ".join(f"w{i}" for i in range(14))
+    docs = spark.createDataFrame(
+        [
+            (1, long_text),
+            (2, "a b c d e f g"),  # 5 distinct shingles
+            (3, "x y x y x y x y x y x y"),  # 2 distinct, 10 in all
+            (4, "a b"),
+            (5, None),
+            (6, long_text + " " + long_text),  # repeats of doc 1's shingles
+        ],
+        "doc_id BIGINT, text STRING",
+    )
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+    con = oracle_con(str(tmp_path))
+    banded = {}
+    for name, sig in _kernel_sigs().items():
+        bands = minhash_band_table(docs, sig)
+        compare(bands, _duck_bands(name), con)
+        banded[name] = {r.doc_id for r in bands.select("doc_id").distinct().collect()}
+    con.close()
+    assert banded == {"khash": {1, 2, 3, 6}, "bottomk": {1, 6}}, banded
+
+    items = ["s0", "s1", "s2"]
+    got = spark.range(1).select(
+        minhash_khash_sig(F.array(*map(F.lit, items)), 4).alias("sig")
+    ).first().sig
+    want = [
+        min(hashlib.md5(f"{s}#{i}".encode()).hexdigest()[:15] for s in items)
+        for i in range(4)
+    ]
+    assert got == want
+
+
+def test_md5_banding_lives_in_one_kernel():
+    """One banding kernel: a band ``stack(4, ...)`` appears in the
+    package only in ``functions.sketches.minhash_band_table`` and in
+    the xxhash64 path of ``minhash_lsh_buckets``."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "gostream_spark")
+    hits = set()
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(root, fn)
+            src = open(path).read()
+            funcs = [
+                n for n in ast.walk(ast.parse(src)) if isinstance(n, ast.FunctionDef)
+            ]
+            for i, line in enumerate(src.splitlines(), 1):
+                if "stack(4," in line:
+                    owner = min(
+                        (f for f in funcs if f.lineno <= i <= f.end_lineno),
+                        key=lambda f: f.end_lineno - f.lineno,
+                        default=None,
+                    )
+                    hits.add((os.path.relpath(path, pkg), owner and owner.name))
+    assert hits == {
+        ("functions/sketches.py", "minhash_band_table"),
+        ("queries/llm_similarity.py", "minhash_lsh_buckets"),
+    }, hits
+
+
+def test_no_lambda_default_arguments():
+    """No lambda in the package takes a default argument. A
+    ``lambda s, i=i: ...`` handed to ``F.transform`` gets the element
+    index bound to ``i``, silently replacing the captured value (the
+    fault that once salted every k-hash MinHash component with a
+    lambda variable's name instead of its seed)."""
+    import ast
+    import os
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(repo, "gostream_spark")
+    bad = []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in files:
+            if fn.endswith(".py"):
+                path = os.path.join(root, fn)
+                for node in ast.walk(ast.parse(open(path).read())):
+                    if isinstance(node, ast.Lambda) and (
+                        node.args.defaults or any(node.args.kw_defaults)
+                    ):
+                        bad.append((os.path.relpath(path, repo), node.lineno))
+    assert not bad, bad
 
 
 def test_word_ngrams_short_doc_guard(spark):
