@@ -12,11 +12,13 @@ re-derive them:
   comparison).
 - array sums: cast elements to double BEFORE folding so both engines
   accumulate in float64 in array order.
+- per-label centroids: cross-row element sums go through DECIMAL(18,7),
+  are divided by the count and rounded to 6 places (``centroids``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,6 +50,30 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     cross-engine-agreeing value. try_divide is the non-throwing
     division with exactly that semantic."""
     return F.try_divide(dot_product(a, b), l2_norm(a) * l2_norm(b))
+
+
+def centroids(vectors: DataFrame, key: str) -> DataFrame:
+    """Per-``key`` centroids of the ``embedding`` arrays, as ``(key, cv)``.
+
+    Each element is summed through DECIMAL(18,7), so the order in which
+    partitions fold the rows cannot move a bit, then divided by the
+    count and rounded to 6 places; ``cv`` is reassembled in 1-based
+    element order. Every DuckDB centroid oracle encodes this same rule."""
+    elems = vectors.select(key, F.posexplode("embedding").alias("pos0", "v")).select(
+        key, (F.col("pos0") + 1).alias("pos"), "v"
+    )
+    cent_elems = elems.groupBy(key, "pos").agg(
+        F.round(
+            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
+            / F.count(F.lit(1)),
+            6,
+        ).alias("c")
+    )
+    return cent_elems.groupBy(key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
+        ).alias("cv")
+    )
 
 
 def array_sum(a: Column) -> Column:

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.functions import cosine_similarity
+from gostream_spark.functions import centroids, cosine_similarity
 from gostream_spark.io import load_table
 from gostream_spark.registry import register
 
@@ -29,46 +29,6 @@ def _assign(emb: DataFrame, centroids: DataFrame) -> DataFrame:
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "embedding", "c_id")
-    )
-
-
-def _recompute(assigned: DataFrame) -> DataFrame:
-    """New centroids = per-cluster element means, decimal-routed and
-    rounded so partition order can't move a bit."""
-    elems = assigned.select(
-        "c_id", F.posexplode("embedding").alias("pos0", "v")
-    ).select("c_id", (F.col("pos0") + 1).alias("pos"), "v")
-    cent_elems = elems.groupBy("c_id", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    return cent_elems.groupBy("c_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
-    )
-
-
-def _seed_centroids(seeds: DataFrame) -> DataFrame:
-    """Per-label seed centroids (same decimal-routed element means as
-    ``_recompute``, keyed by the label column)."""
-    elems = seeds.select("label", F.posexplode("embedding").alias("pos0", "v")).select(
-        F.col("label").alias("c_id"), (F.col("pos0") + 1).alias("pos"), "v"
-    )
-    cent_elems = elems.groupBy("c_id", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    return cent_elems.groupBy("c_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
     )
 
 
@@ -107,14 +67,15 @@ def kmeans_refined_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into ONE lazy plan that re-executes every earlier iteration's
     # crossJoin+window inside each later one — the r10 cold audit put
     # this query at ~4 s warm, almost all of it replayed lineage.
-    centroids = _seed_centroids(seeds).localCheckpoint(eager=True)
+    seed_vectors = seeds.select(F.col("label").alias("c_id"), "embedding")
+    cents = centroids(seed_vectors, "c_id").localCheckpoint(eager=True)
     for _ in range(2):
-        assigned = _assign(emb, centroids)
-        centroids = _recompute(assigned).localCheckpoint(eager=True)
+        assigned = _assign(emb, cents)
+        cents = centroids(assigned, "c_id").localCheckpoint(eager=True)
     # The final assignment feeds BOTH the census and the partition
     # stats; checkpoint it once so the crossJoin+window isn't executed
     # twice (separate DataFrame subtrees don't share work).
-    final = _assign(emb, centroids).localCheckpoint(eager=True)
+    final = _assign(emb, cents).localCheckpoint(eager=True)
     census = final.groupBy("c_id").agg(F.count(F.lit(1)).alias("n_members"))
     cstats = census.agg(
         F.coalesce(F.sum("n_members"), F.lit(0)).alias("assigned"),
@@ -142,8 +103,8 @@ def kmeans_refined_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("label")
             + F.coalesce(F.max(F.col("label").isNull().cast("long")), F.lit(0))
         ).alias("n_seed_groups"),
-        # Zero rows with a non-empty embedding => _seed_centroids yields
-        # ZERO centroids and the crossJoin assignment is empty by
+        # Zero rows with a non-empty embedding => the seed centroids are
+        # ZERO rows and the crossJoin assignment is empty by
         # construction — the partition/cluster verdicts are vacuous.
         F.coalesce(
             F.sum((F.size("embedding") > 0).cast("long")), F.lit(0)

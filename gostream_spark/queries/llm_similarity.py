@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.functions import cosine_similarity
+from gostream_spark.functions import centroids, cosine_similarity
 from gostream_spark.functions.sketches import (
     bottomk_sketch,
     minhash_band_table,
@@ -162,25 +162,11 @@ def nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts and each vector scores against all centroids row-
     locally — a linear scan at any corpus size."""
     emb = load_table(spark, sf_dir, "embeddings")
-    elems = emb.select(
-        "label", F.posexplode("embedding").alias("pos0", "v")
-    ).select("label", (F.col("pos0") + 1).alias("pos"), "v")
-    cent_elems = elems.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    centroids = cent_elems.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
-    )
+    cents = centroids(emb, "label").withColumnRenamed("label", "c_label")
     cos = F.round(cosine_similarity(F.col("embedding"), F.col("cv")), 6)
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("c_label"))
     return (
-        emb.crossJoin(F.broadcast(centroids))
+        emb.crossJoin(F.broadcast(cents))
         .select("vec_id", "label", "c_label", cos.alias("cos"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
@@ -768,24 +754,9 @@ def embedding_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame
     runs over the label-cardinality centroid table (tiny at any
     corpus size — the corpus itself contributes only one aggregation
     pass), so the quadratic term is labels^2, never vectors^2."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    elems = emb.select(
-        "label", F.posexplode("embedding").alias("pos0", "v")
-    ).select("label", (F.col("pos0") + 1).alias("pos"), "v")
-    cent_elems = elems.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    centroids = cent_elems.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
-    )
-    a = centroids.select(F.col("label").alias("label_a"), F.col("cv").alias("cv_a"))
-    b = centroids.select(F.col("label").alias("label_b"), F.col("cv").alias("cv_b"))
+    cents = centroids(load_table(spark, sf_dir, "embeddings"), "label")
+    a = cents.select(F.col("label").alias("label_a"), F.col("cv").alias("cv_a"))
+    b = cents.select(F.col("label").alias("label_b"), F.col("cv").alias("cv_b"))
     return (
         a.join(b, F.col("label_a") < F.col("label_b"))
         .select(

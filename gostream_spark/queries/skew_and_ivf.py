@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gostream_spark.functions import cosine_similarity
+from gostream_spark.functions import centroids, cosine_similarity
 from gostream_spark.io import load_table
 from gostream_spark.operators.ranking import topk, topk_ranked
 from gostream_spark.operators.skew import salted_agg, salted_join
@@ -130,27 +130,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force twin (`similarity_topk`) is the recall baseline. Exact
     oracle: DuckDB replicates both stages bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # coarse quantizer: per-label centroids (decimal-routed, rounded)
-    elems = emb.select("label", F.posexplode("embedding").alias("pos0", "v")).select(
-        "label", (F.col("pos0") + 1).alias("pos"), "v"
-    )
-    cent_elems = elems.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    centroids = cent_elems.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
-    )
+    cents = centroids(emb, "label").withColumnRenamed("label", "c_label")
     q = F.broadcast(
         emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     )
     probe = topk(
-        centroids.crossJoin(q),
+        cents.crossJoin(q),
         3,
         F.round(cosine_similarity(F.col("cv"), F.col("qv")), 6).desc(),
         F.col("c_label"),
@@ -311,21 +296,7 @@ def ann_recall_at_k(
     ride one window each; the final recall join is probe-keyed and
     tiny. Exact oracle replicates both arms bit-for-bit."""
     emb = load_table(spark, sf_dir, "embeddings")
-    elems = emb.select("label", F.posexplode("embedding").alias("pos0", "v")).select(
-        "label", (F.col("pos0") + 1).alias("pos"), "v"
-    )
-    cent_elems = elems.groupBy("label", "pos").agg(
-        F.round(
-            F.sum(F.col("v").cast("double").cast("decimal(18,7)")).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("c")
-    )
-    centroids = cent_elems.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "c"))), lambda x: x["c"]
-        ).alias("cv")
-    )
+    cents = centroids(emb, "label").withColumnRenamed("label", "c_label")
     # probe_below (decade-sweep knob, default None = every 25th vector
     # probes): bound the panel to replica 0 at decade fixtures so the
     # ground-truth product stays panel x corpus — linear in corpus —
@@ -363,7 +334,7 @@ def ann_recall_at_k(
         .select(F.col("probe_id").alias("x_probe_id"), "vec_id")
     )
     cells = (
-        centroids.crossJoin(probes)
+        cents.crossJoin(probes)
         .select(
             "probe_id",
             "c_label",

@@ -885,22 +885,20 @@ SELECT brand, CAST(count(*) AS BIGINT) AS n_triangles FROM (
 _TRIANGLE_ORACLE = triangle_oracle()
 
 
-@register("graph_triangle_count", oracle=_TRIANGLE_ORACLE, tags=("J1", "A1", "ext"))
-def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-based TRIANGLE COUNTING — the canonical distributed graph
-    primitive (clustering coefficients, community strength, spam
-    detection) run entirely as relational joins: per-brand triangle
-    participation over the high-affinity brand co-occurrence graph.
-    Edges = brand pairs co-appearing in an order in the TOP QUARTILE of
-    edge support (exact integer percentile_disc gate — scale-stable
-    where an absolute or mean-relative threshold saturates or
-    collapses as co-occurrence counts concentrate). Triangles enumerate via the canonical
-    a<b<c orientation: edge(a,b) ⋈ edge(b,c) ⋈ edge(a,c) — each
-    triangle counted exactly once, two hash joins, no explosion
-    beyond wedge count. At 100 TB the same plan is the MapReduce
-    triangle algorithm (Suri & Vassilvitskii 2011): orientation
-    bounds wedge fan-out by the smaller-degree endpoint, and every
-    join hash-partitions on its key."""
+def _affinity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The high-affinity brand graph shared by the triangle count and
+    the k-core peel: brand pairs ``(ba, bb)``, ``ba < bb``, that
+    co-appear in orders at or above the top-quartile edge support
+    (exact integer percentile_disc gate).
+
+    Eagerly checkpointed: the triangle count references the edge list
+    nine times (three edge roles, three-way vertex union) and each peel
+    round three times (two semi-joins + the degree aggregate), so
+    without lineage truncation Spark replays the corpus-sized
+    co-occurrence self-join per reference — 27x after three peel
+    rounds, the exponential-lineage trap every iterative graph
+    algorithm hits (same discipline as operators/components.py). The
+    edge set is tiny post-threshold, so materializing it is ~free."""
     li = load_table(spark, sf_dir, "lineitem")
     pt = load_table(spark, sf_dir, "part")
     bl = (
@@ -920,17 +918,31 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("q75")
     )
-    # localCheckpoint: `co` feeds three edge roles AND the three-way
-    # vertex union — nine downstream references; materializing the
-    # tiny thresholded edge list once stops Spark replaying the
-    # corpus-sized co-occurrence self-join per reference (the same
-    # lineage discipline as the k-core peel below).
-    co = (
+    return (
         co_all.crossJoin(F.broadcast(tot))
         .filter(F.col("s") >= F.col("q75"))
         .select("ba", "bb")
         .localCheckpoint(eager=True)
     )
+
+
+@register("graph_triangle_count", oracle=_TRIANGLE_ORACLE, tags=("J1", "A1", "ext"))
+def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Join-based TRIANGLE COUNTING — the canonical distributed graph
+    primitive (clustering coefficients, community strength, spam
+    detection) run entirely as relational joins: per-brand triangle
+    participation over the high-affinity brand co-occurrence graph.
+    Edges = brand pairs co-appearing in an order in the TOP QUARTILE of
+    edge support (exact integer percentile_disc gate — scale-stable
+    where an absolute or mean-relative threshold saturates or
+    collapses as co-occurrence counts concentrate). Triangles enumerate via the canonical
+    a<b<c orientation: edge(a,b) ⋈ edge(b,c) ⋈ edge(a,c) — each
+    triangle counted exactly once, two hash joins, no explosion
+    beyond wedge count. At 100 TB the same plan is the MapReduce
+    triangle algorithm (Suri & Vassilvitskii 2011): orientation
+    bounds wedge fan-out by the smaller-degree endpoint, and every
+    join hash-partitions on its key."""
+    co = _affinity_edges(spark, sf_dir)
     e1 = co.select(F.col("ba").alias("a"), F.col("bb").alias("b"))
     e2 = co.select(F.col("ba").alias("b2"), F.col("bb").alias("c"))
     e3 = co.select(F.col("ba").alias("a3"), F.col("bb").alias("c3"))
@@ -1006,38 +1018,7 @@ def graph_kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     at convergence-critical scale you iterate to fixpoint with the
     same loop and a driver convergence check, exactly like
     `operators/components.py`."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pt = load_table(spark, sf_dir, "part")
-    bl = (
-        li.join(F.broadcast(pt), li.l_partkey == pt.p_partkey)
-        .select("l_orderkey", "p_brand")
-        .distinct()
-    )
-    a = bl.select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("ba"))
-    b = bl.select(F.col("l_orderkey").alias("ok2"), F.col("p_brand").alias("bb"))
-    co_all = (
-        a.join(b, (F.col("ok") == F.col("ok2")) & (F.col("ba") < F.col("bb")))
-        .groupBy("ba", "bb")
-        .agg(F.count(F.lit(1)).cast("long").alias("s"))
-    )
-    tot = co_all.agg(
-        F.expr("percentile_disc(0.75) WITHIN GROUP (ORDER BY s)")
-        .cast("long")
-        .alias("q75")
-    )
-    # localCheckpoint: the peel loop references `edges` three times per
-    # round (two semi-joins + the degree aggregate), so without lineage
-    # truncation each round TRIPLES the number of times Spark replays
-    # the upstream co-occurrence self-join (27x after three rounds —
-    # the exponential-lineage trap every iterative graph algorithm
-    # hits; same discipline as operators/components.py). The edge set
-    # is tiny post-threshold, so materializing it is ~free.
-    edges = (
-        co_all.crossJoin(F.broadcast(tot))
-        .filter(F.col("s") >= F.col("q75"))
-        .select("ba", "bb")
-        .localCheckpoint(eager=True)
-    )
+    edges = _affinity_edges(spark, sf_dir)
 
     def degrees(e: DataFrame) -> DataFrame:
         verts = e.select(F.col("ba").alias("v")).unionAll(

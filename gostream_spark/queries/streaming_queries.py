@@ -162,6 +162,39 @@ def streaming_stateful_counts(
 # --- J10 for real: watermarked stream-stream join -----------------------
 
 
+def _purchase_click_join(
+    spark: SparkSession,
+    sf_dir: str,
+    how: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The J10 stream pair: purchases ``(purchase_id, p_user, p_ts)``
+    joined ``how`` (inner / left_outer / full_outer) to clicks
+    ``(click_id, c_user, c_ts)`` of the same user at most one hour
+    before the purchase. Both sides carry a 1-hour watermark, so the
+    time-range condition bounds the join state Spark must hold."""
+
+    def side(event_type: str, id_col: str, prefix: str) -> DataFrame:
+        return (
+            file_stream(spark, sf_dir, "events", max_files_per_trigger)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(f"{prefix}_user"),
+                F.col("ts").alias(f"{prefix}_ts"),
+            )
+            .withWatermark(f"{prefix}_ts", "1 hour")
+        )
+
+    return side("purchase", "purchase_id", "p").join(
+        side("click", "click_id", "c"),
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
+        & (F.col("c_ts") <= F.col("p_ts")),
+        how,
+    )
+
+
 @register("streaming_stream_stream_join", oracle=_J10_ORACLE, tags=("S2", "J10", "T4"))
 def streaming_stream_stream_join(
     spark: SparkSession,
@@ -174,31 +207,8 @@ def streaming_stream_stream_join(
     With all input available, the appended matches equal the batch
     join — the oracle asserts exactly that. max_files_per_trigger:
     probe replay knob (see streaming_tumbling_counts)."""
-    p = (
-        file_stream(spark, sf_dir, "events", max_files_per_trigger)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        file_stream(spark, sf_dir, "events", max_files_per_trigger)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
+    joined = _purchase_click_join(
+        spark, sf_dir, "inner", max_files_per_trigger
     ).select("purchase_id", "click_id", F.col("p_user").alias("user_id"))
     return run_available_now(joined, output_mode="append")
 
@@ -650,33 +660,7 @@ def streaming_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataF
     (verified row-exact against the engine's eviction boundary).
     Null click_id is surfaced as the -1 sentinel (engine
     hashed-output convention)."""
-    p = (
-        file_stream(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        file_stream(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "left_outer",
-    ).select(
+    joined = _purchase_click_join(spark, sf_dir, "left_outer").select(
         "purchase_id",
         F.coalesce("click_id", F.lit(-1)).alias("click_id"),
         F.col("p_user").alias("user_id"),
@@ -1037,33 +1021,7 @@ def streaming_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataF
     correctly never emit under availableNow; the oracle encodes both
     boundaries and is row-exact against the engine's eviction.
     Nulls surface as -1 sentinels (hashed-output convention)."""
-    p = (
-        file_stream(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "1 hour")
-    )
-    c = (
-        file_stream(spark, sf_dir, "events")
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = p.join(
-        c,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR"))
-        & (F.col("c_ts") <= F.col("p_ts")),
-        "full_outer",
-    ).select(
+    joined = _purchase_click_join(spark, sf_dir, "full_outer").select(
         F.coalesce("purchase_id", F.lit(-1)).alias("purchase_id"),
         F.coalesce("click_id", F.lit(-1)).alias("click_id"),
         F.coalesce(F.col("p_user"), F.col("c_user")).alias("user_id"),

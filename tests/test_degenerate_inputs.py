@@ -274,8 +274,8 @@ def test_nullkey_embeddings_match_oracle(spark, degenerate_nullkey_dir, name):
 
 def test_kmeans_all_malformed_and_null_vec_ids(spark):
     """ADVICE r8 edges for kmeans_refined_clusters, two fixtures:
-    (a) EVERY embedding malformed (NULL/empty) -> _seed_centroids
-    yields zero centroids, the crossJoin assignment is empty, and the
+    (a) EVERY embedding malformed (NULL/empty) -> the seed centroids
+    are zero rows, the crossJoin assignment is empty, and the
     partition/cluster verdicts must be VACUOUSLY true rather than 0
     against the literal-1 oracle; (b) NULL vec_ids with good
     embeddings -> the assignment window collapses them into one key,

@@ -83,17 +83,18 @@ def test_kmeans_census_accounts_for_corpus(spark, sf_dir):
 
     # Quality: rebuild the refined assignment with the module's own
     # helpers and check the census the old rows-only output carried.
-    from gostream_spark.functions import cosine_similarity
-    from gostream_spark.queries.kmeans_demo import _assign, _recompute, _seed_centroids
+    from gostream_spark.functions import centroids, cosine_similarity
+    from gostream_spark.queries.kmeans_demo import _assign
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    centroids = _seed_centroids(load_table(spark, sf_dir, "embeddings"))
+    seeds = load_table(spark, sf_dir, "embeddings")
+    emb = seeds.select("vec_id", "embedding")
+    cents = centroids(seeds.select(F.col("label").alias("c_id"), "embedding"), "c_id")
     for _ in range(2):
-        centroids = _recompute(_assign(emb, centroids))
-    final = _assign(emb, centroids)
+        cents = centroids(_assign(emb, cents), "c_id")
+    final = _assign(emb, cents)
     cos = F.round(cosine_similarity(F.col("embedding"), F.col("cv")), 6)
     census = (
-        final.join(F.broadcast(centroids), "c_id")
+        final.join(F.broadcast(cents), "c_id")
         .select("c_id", cos.alias("cos"))
         .groupBy("c_id")
         .agg(F.count(F.lit(1)).alias("n_members"), F.avg("cos").alias("mean_cos"))
