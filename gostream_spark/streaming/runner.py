@@ -236,7 +236,11 @@ _LOCAL_CHECKPOINT_MANAGER = (
 def _start_pins(checkpoint: str, state_partitions: int) -> dict[str, str]:
     """The session confs a stream's ``start()`` runs under: its state
     width, and on a local checkpoint (no URI scheme, or ``file``) the
-    FileSystem checkpoint manager."""
+    FileSystem checkpoint manager. Both are fixed in the session
+    clone ``start()`` makes. The file-listing threshold cannot be
+    pinned here: the file source lists each micro-batch in the session
+    the stream was read in, so ``get_spark`` sets it for the session's
+    lifetime."""
     pins = {"spark.sql.shuffle.partitions": str(state_partitions)}
     if urlparse(checkpoint).scheme in ("", "file"):
         pins["spark.sql.streaming.checkpointFileManagerClass"] = (

@@ -93,9 +93,10 @@ def _jobs_launched(spark, fn) -> int:
 
 
 def test_repeat_load_launches_no_schema_job(spark, sf_dir):
-    """Parquet schema inference launches a footer-reading Spark job;
-    io memoizes the inferred schema per session and file set, so a
-    second load of any table — batch or streaming — launches none."""
+    """io memoizes each table's schema per session and file set, so a
+    second load of any table — batch or streaming — launches no job
+    (Spark's own inference, where the footer read falls back to it,
+    launches one)."""
     from gostream_spark.io import TABLES
     from gostream_spark.streaming.source import file_stream
 
@@ -143,32 +144,44 @@ def test_rewritten_table_is_inferred_again(spark, tmp_path, layout):
 _RESTART_SCRIPT = """
 import sys, uuid
 sys.path.insert(0, sys.argv[1])
-from gostream_spark.io import load_table
+from gostream_spark import io
 from gostream_spark.session import get_spark
 
-def jobs(spark):
+reads = []
+footer_schema = io._footer_schema
+
+def counted(*args):
+    reads.append(1)
+    return footer_schema(*args)
+
+io._footer_schema = counted
+
+def load(spark):
     sc = spark.sparkContext
     group = uuid.uuid4().hex
     sc.setJobGroup(group, group)
-    load_table(spark, sys.argv[2], "nation")
+    del reads[:]
+    io.load_table(spark, sys.argv[2], "nation")
     sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return len(sc.statusTracker().getJobIdsForGroup(group)), len(reads)
 
 spark = get_spark(master="local[1]", shuffle_partitions=1)
-counts = [jobs(spark), jobs(spark)]
+counts = [load(spark), load(spark)]
 spark.stop()
 spark = get_spark(master="local[1]", shuffle_partitions=1)
-counts.append(jobs(spark))
+counts.append(load(spark))
 spark.stop()
-print("JOBS", *counts)
+print("JOBS", *(jobs for jobs, _ in counts))
+print("READS", *(n for _, n in counts))
 """
 
 
 def test_restarted_session_infers_again(sf_dir):
     """The memo is keyed by the live session: after ``spark.stop()`` and
-    a new session, the first load infers again (exactly one job), and
-    the repeat load before the stop launched none. Runs in its own
-    driver process so the shared test session stays up."""
+    a new session, the first load reads the footer again (exactly one
+    read), and the repeat load before the stop read none. No load
+    launches a job. Runs in its own driver process so the shared test
+    session stays up."""
     import subprocess
     import sys
 
@@ -179,8 +192,93 @@ def test_restarted_session_infers_again(sf_dir):
         capture_output=True, text=True, timeout=600, env=env,
     )
     assert done.returncode == 0, done.stderr[-3000:]
-    line = [ln for ln in done.stdout.splitlines() if ln.startswith("JOBS ")][-1]
-    assert line.split()[1:] == ["1", "0", "1"]
+    out = done.stdout.splitlines()
+    jobs = [ln for ln in out if ln.startswith("JOBS ")][-1]
+    reads = [ln for ln in out if ln.startswith("READS ")][-1]
+    assert reads.split()[1:] == ["1", "0", "1"]
+    assert jobs.split()[1:] == ["0", "0", "0"]
+
+
+@pytest.fixture(scope="module")
+def sf001(sf_dir):
+    """The sf0.01 fixture beside the test fixture."""
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"no sf0.01 fixture at {sf}")
+    return sf
+
+
+def _shard_tables(src: str, dst: str, shards: int = 3) -> None:
+    """Every fixture table of ``src`` restaged under ``dst`` as a
+    directory of ``shards`` part files (tools/restage_sharded.py's
+    layout), plus the hidden names Spark's writers leave beside
+    them."""
+    import duckdb
+
+    from gostream_spark.io import TABLES
+
+    con = duckdb.connect()
+    try:
+        for t in TABLES:
+            tdir = os.path.join(dst, f"{t}.parquet")
+            os.makedirs(tdir)
+            for s in range(shards):
+                con.execute(
+                    f"COPY (SELECT * EXCLUDE (__rn) FROM ("
+                    f"  SELECT *, row_number() OVER () AS __rn"
+                    f"  FROM read_parquet('{src}/{t}.parquet')"
+                    f") WHERE (__rn - 1) % {shards} = {s}) "
+                    f"TO '{tdir}/shard-{s}.parquet' (FORMAT PARQUET)"
+                )
+            open(os.path.join(tdir, "_SUCCESS"), "w").close()
+            open(os.path.join(tdir, ".shard-0.parquet.crc"), "w").close()
+    finally:
+        con.close()
+
+
+def test_footer_schema_is_sparks_inferred_schema(spark, sf001, tmp_path):
+    """The schema read from one footer on the driver equals the one
+    Spark's inference returns, for every fixture table, as one file
+    and as a directory of part files, with ``nanosAsLong`` on and
+    off. The first load of a fresh table path launches no job."""
+    from gostream_spark.io import (
+        TABLES, _footer_schema, path_status, table_path, table_schema,
+    )
+
+    sharded = str(tmp_path / "sharded")
+    _shard_tables(sf001, sharded)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key, None)
+    try:
+        for nanos in ("true", "false"):
+            spark.conf.set(key, nanos)
+            for root in (sf001, sharded):
+                for name in TABLES:
+                    path = table_path(root, name)
+                    status = path_status(spark, path)
+                    want = spark.read.parquet(path).schema
+                    assert _footer_schema(spark, path, status) == want, (nanos, path)
+                    assert table_schema(spark, path, status) == want, (nanos, path)
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+    fresh = str(tmp_path / "fresh")
+    _shard_tables(sf001, fresh)
+    for name in TABLES:
+        assert _jobs_launched(spark, lambda: load_table(spark, fresh, name)) == 0, name
+
+
+def test_empty_table_directory_names_its_path(spark, tmp_path):
+    """A table directory without a visible part file has no footer to
+    read; the error names the path."""
+    path = tmp_path / "documents.parquet"
+    path.mkdir()
+    (path / "_SUCCESS").touch()
+    with pytest.raises(FileNotFoundError, match=str(path)):
+        load_table(spark, str(tmp_path), "documents")
 
 
 @pytest.mark.parametrize(

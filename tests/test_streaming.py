@@ -974,27 +974,75 @@ def test_file_listing_does_not_fan_out_per_file(spark, tmp_path, sf_dir):
     ``spark.sql.sources.parallelPartitionDiscovery.parallelism``
     (default 10,000), i.e. one task per file, each deserializing the
     whole Hadoop configuration. The session caps it at the core
-    count. Two micro-batches of 35 files each: the cap must hold for
-    every batch, not only the first, because the source reads the
-    setting again for each batch."""
+    count. The session also lists up to 1024 paths on the driver, so
+    this test puts Spark's default threshold back to make each batch
+    run its listing job. Two micro-batches of 35 files each: the cap
+    must hold for every batch, not only the first, because the source
+    reads the setting again for each batch."""
     from gostream_spark.streaming.source import file_stream
 
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
     root = tmp_path / "sf-70-files"
     ev.repartition(70).write.parquet(str(root / "events.parquet"))
     assert len(glob.glob(str(root / "events.parquet" / "*.parquet"))) == 70
 
-    before = max((job.jobId() for job in _jobs(spark)[1]), default=-1)
-    out = run_available_now(
-        file_stream(spark, str(root), "events", max_files_per_trigger=35)
-        .select("event_id"),
-    )
-    stages = _stages_after(spark, before)
+    threshold = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        before = max((job.jobId() for job in _jobs(spark)[1]), default=-1)
+        out = run_available_now(
+            file_stream(spark, str(root), "events", max_files_per_trigger=35)
+            .select("event_id"),
+        )
+        stages = _stages_after(spark, before)
+    finally:
+        spark.conf.set(key, threshold)
+    listings = [
+        (job.jobId(), job.numTasks())
+        for job in _jobs(spark)[1]
+        if job.jobId() > before
+        and job.description().isDefined()
+        and job.description().get().startswith("Listing leaf files")
+    ]
     assert out.count() == ev.count()
     assert len(RECENT_PROGRESS[-1]["batches"]) >= 2
+    assert len(listings) >= 2, listings
+    assert all(n <= spark.sparkContext.defaultParallelism for _, n in listings), listings
     # Not bounded by defaultParallelism: the scan stage may pack the
     # batch's 35 small files into a few more partitions than that.
     assert stages and all(n < 35 for _, _, n in stages), stages
+
+
+def test_local_catch_up_drain_is_one_job(spark, tmp_path, sf_dir):
+    """A catch-up drain of an 81-file local directory, in one
+    availableNow micro-batch, launches exactly one Spark job (the
+    batch itself): the new table's schema is read from a footer on
+    the driver, and the batch's 81 files are listed on the driver
+    because the session lists up to 1024 paths there. Without either,
+    the drain also ran a 1-task schema-inference job and a
+    file-listing job (3 jobs). The sink holds the rows a drain of the
+    one-file fixture table gives."""
+    from gostream_spark.streaming.source import file_stream
+
+    ev = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet")
+    root = tmp_path / "sf-81-files"
+    ev.repartition(81).write.parquet(str(root / "events.parquet"))
+    assert len(glob.glob(str(root / "events.parquet" / "*.parquet"))) == 81
+
+    def drain(d):
+        return run_available_now(
+            windowed_counts(file_stream(spark, d, "events")),
+            output_mode="complete",
+            state_partitions=8,
+        )
+
+    before = max((job.jobId() for job in _jobs(spark)[1]), default=-1)
+    out = drain(str(root))
+    stages = _stages_after(spark, before)
+    assert len({job for job, _, _ in stages}) == 1, stages
+    assert len(RECENT_PROGRESS[-1]["batches"]) == 1
+    assert sorted(out.collect()) == sorted(drain(sf_dir).collect())
 
 
 @pytest.mark.parametrize("store", ["hdfs", "rocksdb"])
