@@ -28,6 +28,7 @@ from gostream_spark.operators import (
 )
 from gostream_spark.parity import TS_FMT_DUCK, dec2, ts_str
 from gostream_spark.registry import register
+from gostream_spark.streaming.ops import _CS_OUT_SCHEMA, _capped_session_fold
 
 # --- T1 tumbling window -------------------------------------------------
 
@@ -855,9 +856,6 @@ def linear_interp_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- T3 ext: duration-capped sessionization (gap OR max-length split) ---
 
-_CAPPED_GAP_US = 1_800 * 1_000_000  # 30 min inactivity gap
-_CAPPED_LEN_US = 7_200 * 1_000_000  # 2 h hard cap from session anchor
-
 _CAPPED_SESSION_ORACLE = """
 WITH RECURSIVE ordered AS (
   SELECT user_id, ts, event_id, epoch_us(ts) AS us,
@@ -888,38 +886,6 @@ GROUP BY user_id, session_no
 """
 
 
-def _capped_session_fold(pdf):
-    """Per-user sequential fold (runs inside applyInPandas): a new
-    session starts when the inactivity gap exceeds 30 min OR the
-    span from the current session's ANCHOR would exceed the 2 h hard
-    cap. All time math in integer microseconds — exact on both
-    engines."""
-    pdf = pdf.sort_values(["ts", "event_id"]).reset_index(drop=True)
-    # normalize to µs regardless of whether Arrow delivered [ns] or [us]
-    us = pdf["ts"].astype("datetime64[us]").astype("int64")
-    session_no, anchor, prev = 0, None, None
-    nos = []
-    for u in us:
-        if anchor is None or u - prev > _CAPPED_GAP_US or u - anchor > _CAPPED_LEN_US:
-            session_no += 1
-            anchor = u
-        prev = u
-        nos.append(session_no)
-    pdf = pdf.assign(session_no=nos)
-    out = (
-        pdf.groupby("session_no", as_index=False)
-        .agg(
-            user_id=("user_id", "first"),
-            n_events=("event_id", "size"),
-            session_start=("ts", "min"),
-            session_end=("ts", "max"),
-        )
-    )
-    out["session_start"] = out["session_start"].dt.strftime("%Y-%m-%d %H:%M:%S")
-    out["session_end"] = out["session_end"].dt.strftime("%Y-%m-%d %H:%M:%S")
-    return out[["user_id", "session_no", "n_events", "session_start", "session_end"]]
-
-
 @register("session_window_capped", oracle=_CAPPED_SESSION_ORACLE, tags=("T3", "U2", "ext"))
 def session_window_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 ext: sessionization with BOTH a 30 min inactivity gap and a
@@ -928,7 +894,8 @@ def session_window_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the running anchor, which resets only when a split fires — a
     true sequential recurrence, so the engine runs it as a per-user
     ``applyInPandas`` fold (one user_id shuffle, per-group O(n)
-    integer-microsecond math), and the oracle replays the identical
+    integer-microsecond math; the walk is the one
+    ``streaming.capped_session_stateful`` runs), and the oracle replays the identical
     recurrence as a DuckDB RECURSIVE CTE walk over rank-ordered
     events. The plain gap-only session (`session_window`,
     `session_window_dynamic_gap`) stays the built-in-window fast
@@ -938,11 +905,5 @@ def session_window_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ev.select("user_id", "ts", "event_id")
         .groupBy("user_id")
-        .applyInPandas(
-            _capped_session_fold,
-            schema=(
-                "user_id long, session_no long, n_events long, "
-                "session_start string, session_end string"
-            ),
-        )
+        .applyInPandas(_capped_session_fold, schema=_CS_OUT_SCHEMA)
     )

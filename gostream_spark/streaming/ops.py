@@ -7,26 +7,36 @@ them; what's added here is the streaming-only machinery: watermarks
 (T4 — bound state and drop late rows), stream-static joins, and
 arbitrary per-key state via applyInPandasWithState (T6 — the
 reference's stateful bolt).
+
+Every stateful op is an ``applyInPandasWithState`` fold. Spark 4's
+newer ``transformWithStateInPandas`` (timers, TTL, composite state) is
+the intended upgrade, but its Python driver worker requires
+``google.protobuf``, which this environment lacks (it fails with
+STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE; ``import
+google.protobuf`` still raised ModuleNotFoundError on 2026-10-22). On
+an image with protobuf, a fold's body can become a StatefulProcessor
+with the same state schema; the operator contract is unchanged.
+
+The folds share one layer: an order-sensitive fold reads its group
+through ``_ordered_group``, every emitted time string comes from
+``_fmt_us``, and the duration-capped session rule is
+``_capped_session_walk``, which the stream op and the batch
+``session_window_capped`` both run.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from gostream_spark.operators import tumbling_windowed
+from gostream_spark.parity import TS_FMT_DUCK
 
 
 def windowed_counts(
@@ -91,20 +101,51 @@ def enrich_stream(events: DataFrame, dim: DataFrame, on, how: str = "inner") -> 
     return events.join(F.broadcast(dim), on, how)
 
 
-_STATE_SCHEMA = StructType([StructField("cnt", LongType())])
-_OUT_SCHEMA = StructType(
-    [StructField("user_id", LongType()), StructField("n_events", LongType())]
-)
+# --- the fold layer: event order, time unit, time string -----------------
+
+_EPOCH = datetime.datetime(1970, 1, 1)
+
+
+def _ordered_group(pdfs: Iterable[pd.DataFrame], *cols: str) -> list[list]:
+    """One group's rows in event order. A group larger than
+    ``arrow.maxRecordsPerBatch`` arrives as several Arrow chunks in
+    arbitrary shuffle order, so an order-sensitive fold gathers every
+    chunk and sorts ONCE by ``(ts, event_id)`` (group-at-a-time memory
+    is already the per-key state model's assumption). Returns the
+    event times as integer microseconds, whatever unit Arrow delivered
+    them in, then each of ``cols`` as a list. A group with no rows (a
+    timeout call) gives empty lists."""
+    chunks = list(pdfs)
+    if not chunks:
+        return [[] for _ in range(1 + len(cols))]
+    pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
+    us = pdf["ts"].astype("datetime64[us]").astype("int64").tolist()
+    return [us, *(pdf[c].tolist() for c in cols)]
+
+
+def _fmt_us(us: int) -> str:
+    """The oracle's timestamp string (``parity.TS_FMT_DUCK``) of an
+    integer-microsecond UTC time; exact integer math, no float."""
+    return (_EPOCH + datetime.timedelta(microseconds=us)).strftime(TS_FMT_DUCK)
+
+
+# --- T6: per-key running counts ----------------------------------------
+
+_COUNT_STATE_SCHEMA = "cnt long"
+
+
+def _running_count(pdfs: Iterable[pd.DataFrame], state: GroupState) -> int:
+    """Add the group's rows to the key's stored count; store and return it."""
+    (cnt,) = state.get if state.exists else (0,)
+    cnt += sum(len(pdf) for pdf in pdfs)
+    state.update((cnt,))
+    return cnt
 
 
 def _count_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    (cnt,) = state.get if state.exists else (0,)
-    for pdf in pdfs:
-        cnt += len(pdf)
-    state.update((cnt,))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events": [cnt]})
+    yield pd.DataFrame({"user_id": [key[0]], "n_events": [_running_count(pdfs, state)]})
 
 
 def running_count_stateful(events: DataFrame) -> DataFrame:
@@ -112,29 +153,14 @@ def running_count_stateful(events: DataFrame) -> DataFrame:
     via ``applyInPandasWithState`` (the stateful bolt: user code, Arrow
     batches in, explicit state handle with optional timeouts). Emits
     the updated count for each key touched in each micro-batch; state
-    lives in the executor-local state store keyed by user.
-
-    Spark 4's newer ``transformWithStateInPandas`` (timers, TTL,
-    composite state) is the intended upgrade, but its Python driver
-    worker requires ``google.protobuf``, which this environment lacks
-    (verified: STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    ImportError; gate re-checked absent each round through r16 (2026-08-17))
-    — on a cluster image with protobuf, swap this
-    function's body for a StatefulProcessor with the same state
-    schema; the operator contract is unchanged."""
+    lives in the executor-local state store keyed by user."""
     return events.groupBy("user_id").applyInPandasWithState(
         _count_fn,
-        outputStructType=_OUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
+        outputStructType="user_id long, n_events long",
+        stateStructType=_COUNT_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-_SET_STATE_SCHEMA = StructType([StructField("seen", StringType())])
-_SET_OUT_SCHEMA = StructType(
-    [StructField("user_id", LongType()), StructField("n_distinct_types", LongType())]
-)
 
 
 def _distinct_types_fn(
@@ -157,44 +183,24 @@ def distinct_types_stateful(events: DataFrame) -> DataFrame:
     has each user produced) via ``applyInPandasWithState`` — the
     dedup-within-key bolt. State size is bounded by the type
     vocabulary; the update-mode emission per micro-batch carries the
-    running distinct count. Same protobuf-gated
-    ``transformWithStateInPandas`` upgrade path as
-    ``running_count_stateful``."""
+    running distinct count."""
     return events.groupBy("user_id").applyInPandasWithState(
         _distinct_types_fn,
-        outputStructType=_SET_OUT_SCHEMA,
-        stateStructType=_SET_STATE_SCHEMA,
+        outputStructType="user_id long, n_distinct_types long",
+        stateStructType="seen string",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-_EWMA_STATE_SCHEMA = StructType(
-    [StructField("ewma", DoubleType()), StructField("n", LongType())]
-)
-_EWMA_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("ewma", DoubleType()),
-    ]
-)
 
 
 def _ewma_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     ewma, n = state.get if state.exists else (0.0, 0)
-    # A group larger than arrow.maxRecordsPerBatch arrives as MULTIPLE
-    # chunks in arbitrary shuffle order; an order-sensitive fold must
-    # materialize the whole group and sort ONCE (group-at-a-time memory
-    # is already the per-key state model's assumption).
-    chunks = list(pdfs)
-    if chunks:
-        pdf = pd.concat(chunks)
-        for v in pdf.sort_values(["ts", "event_id"])["value"].tolist():
-            ewma = v if n == 0 else 0.5 * v + 0.5 * ewma
-            n += 1
+    _, values = _ordered_group(pdfs, "value")
+    for v in values:
+        ewma = v if n == 0 else 0.5 * v + 0.5 * ewma
+        n += 1
     state.update((ewma, n))
     yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "ewma": [ewma]})
 
@@ -203,30 +209,17 @@ def ewma_stateful(events: DataFrame) -> DataFrame:
     """T6 third shape: NUMERIC recurrence state — a per-user running
     EWMA (half-decay) folded event by event inside
     ``applyInPandasWithState``. Unlike the count/set states, the value
-    depends on fold ORDER, so the update materializes the group's
-    Arrow chunks and sorts once by event time (chunk arrival order is
-    arbitrary); every operation is an exact IEEE scaling (x0.5), so
-    the result is bit-reproducible against any engine running the
-    same fold. Same protobuf-gated ``transformWithStateInPandas``
-    upgrade path as the other stateful ops."""
+    depends on fold ORDER, so the update reads its group in event
+    order (``_ordered_group``); every operation is an exact IEEE
+    scaling (x0.5), so the result is bit-reproducible against any
+    engine running the same fold."""
     return events.groupBy("user_id").applyInPandasWithState(
         _ewma_fn,
-        outputStructType=_EWMA_OUT_SCHEMA,
-        stateStructType=_EWMA_STATE_SCHEMA,
+        outputStructType="user_id long, n_events long, ewma double",
+        stateStructType="ewma double, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-_TRANS_STATE_SCHEMA = StructType([StructField("last_type", StringType())])
-_TRANS_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("prev_type", StringType()),
-        StructField("next_type", StringType()),
-        StructField("n", LongType()),
-    ]
-)
 
 
 def _transition_fn(
@@ -234,16 +227,11 @@ def _transition_fn(
 ) -> Iterator[pd.DataFrame]:
     last_type = state.get[0] if state.exists and state.get[0] else None
     pairs: dict[tuple, int] = {}
-    # Materialize + sort once across ALL chunks: multi-chunk groups
-    # arrive in arbitrary order, and the prev->next pairing is
-    # order-sensitive (same discipline as _ewma_fn).
-    chunks = list(pdfs)
-    if chunks:
-        pdf = pd.concat(chunks)
-        for t in pdf.sort_values(["ts", "event_id"])["event_type"].tolist():
-            if last_type is not None:
-                pairs[(last_type, t)] = pairs.get((last_type, t), 0) + 1
-            last_type = t
+    _, types = _ordered_group(pdfs, "event_type")
+    for t in types:
+        if last_type is not None:
+            pairs[(last_type, t)] = pairs.get((last_type, t), 0) + 1
+        last_type = t
     state.update((last_type if last_type is not None else "",))
     if pairs:
         ks = sorted(pairs)
@@ -266,21 +254,11 @@ def transition_counts_stateful(events: DataFrame) -> DataFrame:
     is the global lag()-derived transition matrix."""
     return events.groupBy("user_id").applyInPandasWithState(
         _transition_fn,
-        outputStructType=_TRANS_OUT_SCHEMA,
-        stateStructType=_TRANS_STATE_SCHEMA,
+        outputStructType="user_id long, prev_type string, next_type string, n long",
+        stateStructType="last_type string",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-_TIMEOUT_STATE_SCHEMA = StructType([StructField("cnt", LongType())])
-_TIMEOUT_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("closed", StringType()),
-    ]
-)
 
 
 def _make_session_timeout_fn(timeout_ms: int):
@@ -290,19 +268,15 @@ def _make_session_timeout_fn(timeout_ms: int):
         if state.hasTimedOut:
             (cnt,) = state.get
             state.remove()  # eviction: no re-arm, state is gone
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [cnt], "closed": ["timeout"]}
-            )
-            return
-        (cnt,) = state.get if state.exists else (0,)
-        for pdf in pdfs:
-            cnt += len(pdf)
-        state.update((cnt,))
-        # Activity re-arms the idle timer; the key is closed only
-        # after timeout_ms of silence.
-        state.setTimeoutDuration(timeout_ms)
+            closed = "timeout"
+        else:
+            cnt = _running_count(pdfs, state)
+            # Activity re-arms the idle timer; the key is closed only
+            # after timeout_ms of silence.
+            state.setTimeoutDuration(timeout_ms)
+            closed = "open"
         yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [cnt], "closed": ["open"]}
+            {"user_id": [key[0]], "n_events": [cnt], "closed": [closed]}
         )
 
     return _session_timeout_fn
@@ -315,9 +289,6 @@ def session_timeout_stateful(events: DataFrame, timeout_ms: int = 500) -> DataFr
     of processing time gets the timed-out callback: it emits a final
     'timeout' record and removes its state, which is how unbounded
     keyspaces stay bounded without watermark-eligible event time.
-    (`transformWithStateInPandas` adds per-timer registration; this is
-    the timeout form `applyInPandasWithState` supports in this
-    environment — no protobuf needed.)
 
     MUST be driven by a processing-time trigger
     (``runner.run_until``), NOT ``availableNow``: under
@@ -329,44 +300,26 @@ def session_timeout_stateful(events: DataFrame, timeout_ms: int = 500) -> DataFr
     output, not input exhaustion."""
     return events.groupBy("user_id").applyInPandasWithState(
         _make_session_timeout_fn(timeout_ms),
-        outputStructType=_TIMEOUT_OUT_SCHEMA,
-        stateStructType=_TIMEOUT_STATE_SCHEMA,
+        outputStructType="user_id long, n_events long, closed string",
+        stateStructType=_COUNT_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
 _CW_N = 5
-_CW_STATE_SCHEMA = StructType(
-    [StructField("win_no", LongType()), StructField("buf", StringType())]
-)
-_CW_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("win_no", LongType()),
-        StructField("n_events", LongType()),
-        StructField("win_start", StringType()),
-        StructField("win_end", StringType()),
-        StructField("sum_value", DoubleType()),
-    ]
-)
 
 
 def _count_window_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     # Buffer = the <N pending events, serialized "ts_micro,cents"
-    # pairs; win_no = completed windows so far. Incoming rows are
-    # materialized and sorted ONCE per group (multi-chunk groups
-    # arrive in arbitrary order — same discipline as _ewma_fn).
+    # pairs; win_no = completed windows so far.
     win_no, buf = (state.get if state.exists else (0, ""))
     pending = [p for p in buf.split(";") if p]
-    pdf = pd.concat(list(pdfs))
-    pdf = pdf.sort_values(["ts", "event_id"])
-    for _, row in pdf.iterrows():
-        ts_micro = int(row["ts"].value // 1_000)
-        cents = 0 if pd.isna(row["value"]) else int(round(row["value"] * 100))
-        pending.append(f"{ts_micro},{cents}")
+    for us, v in zip(*_ordered_group(pdfs, "value")):
+        cents = 0 if pd.isna(v) else int(round(v * 100))
+        pending.append(f"{us},{cents}")
     out = []
     while len(pending) >= _CW_N:
         window, pending = pending[:_CW_N], pending[_CW_N:]
@@ -377,12 +330,8 @@ def _count_window_fn(
                 "user_id": key[0],
                 "win_no": win_no,
                 "n_events": _CW_N,
-                "win_start": pd.Timestamp(ts_list[0] * 1_000).strftime(
-                    "%Y-%m-%d %H:%M:%S"
-                ),
-                "win_end": pd.Timestamp(ts_list[-1] * 1_000).strftime(
-                    "%Y-%m-%d %H:%M:%S"
-                ),
+                "win_start": _fmt_us(ts_list[0]),
+                "win_end": _fmt_us(ts_list[-1]),
                 "sum_value": round(cent_sum / 100.0, 2),
             }
         )
@@ -406,8 +355,11 @@ def count_window_stateful(events: DataFrame) -> DataFrame:
         "user_id"
     ).applyInPandasWithState(
         _count_window_fn,
-        outputStructType=_CW_OUT_SCHEMA,
-        stateStructType=_CW_STATE_SCHEMA,
+        outputStructType=(
+            "user_id long, win_no long, n_events long, "
+            "win_start string, win_end string, sum_value double"
+        ),
+        stateStructType="win_no long, buf string",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -417,17 +369,6 @@ def count_window_stateful(events: DataFrame) -> DataFrame:
 
 _SS_CAPACITY = 400  # >= 2/phi -> no false negatives at phi = 1/200
 _SS_PHI_INV = 200
-_SS_STATE_SCHEMA = StructType(
-    [StructField("n_tokens", LongType()), StructField("summary", StringType())]
-)
-_SS_OUT_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("token", StringType()),
-        StructField("est_cnt", LongType()),
-        StructField("n_tokens", LongType()),
-    ]
-)
 
 
 def _space_saving_fn(
@@ -501,8 +442,8 @@ def space_saving_stateful(docs: DataFrame) -> DataFrame:
     test asserts against exact batch counts."""
     return docs.select("source", "text").groupBy("source").applyInPandasWithState(
         _space_saving_fn,
-        outputStructType=_SS_OUT_SCHEMA,
-        stateStructType=_SS_STATE_SCHEMA,
+        outputStructType="source string, token string, est_cnt long, n_tokens long",
+        stateStructType="n_tokens long, summary string",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -511,29 +452,6 @@ def space_saving_stateful(docs: DataFrame) -> DataFrame:
 # --- T6 seventh shape: EVENT-time (watermark-driven) session close ------
 
 _ET_GAP_MS = 30 * 60 * 1000
-_ET_STATE_SCHEMA = StructType(
-    [
-        StructField("start_ms", LongType()),
-        StructField("last_ms", LongType()),
-        StructField("cnt", LongType()),
-    ]
-)
-_ET_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", StringType()),
-        StructField("session_end", StringType()),
-        StructField("event_cnt", LongType()),
-    ]
-)
-
-
-def _fmt_ms(ms: int) -> str:
-    import datetime as _dt
-
-    return _dt.datetime.fromtimestamp(ms / 1000.0, tz=_dt.timezone.utc).strftime(
-        "%Y-%m-%d %H:%M:%S"
-    )
 
 
 def _event_session_fn(
@@ -542,8 +460,8 @@ def _event_session_fn(
     def row(st: int, last: int, cnt: int) -> dict:
         return {
             "user_id": key[0],
-            "session_start": _fmt_ms(st),
-            "session_end": _fmt_ms(last + _ET_GAP_MS),
+            "session_start": _fmt_us(st * 1_000),
+            "session_end": _fmt_us((last + _ET_GAP_MS) * 1_000),
             "event_cnt": cnt,
         }
 
@@ -553,17 +471,10 @@ def _event_session_fn(
         yield pd.DataFrame([row(st, last, cnt)])
         return
 
-    chunks = list(pdfs)
-    pdf = pd.concat(chunks)
-    # Order-sensitive fold: materialize + sort ONCE per group (the
-    # multi-chunk lesson pinned for the EWMA/transition folds).
-    ts_ms = (
-        pdf.sort_values(["ts", "event_id"])["ts"].astype("int64") // 1_000_000
-    ).tolist()
-    st_last_cnt = state.get if state.exists else None
-    st, last, cnt = st_last_cnt if st_last_cnt else (None, None, 0)
+    (us,) = _ordered_group(pdfs)
+    st, last, cnt = state.get if state.exists else (None, None, 0)
     out = []
-    for t in ts_ms:
+    for t in (u // 1_000 for u in us):
         if st is None:
             st, last, cnt = t, t, 1
         elif t - last >= _ET_GAP_MS:
@@ -598,48 +509,28 @@ def event_session_stateful(events: DataFrame, watermark: str = "0 seconds") -> D
         .groupBy("user_id")
         .applyInPandasWithState(
             _event_session_fn,
-            outputStructType=_ET_OUT_SCHEMA,
-            stateStructType=_ET_STATE_SCHEMA,
+            outputStructType=(
+                "user_id long, session_start string, session_end string, event_cnt long"
+            ),
+            stateStructType="start_ms long, last_ms long, cnt long",
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
 
 
-_LINDLEY_STATE_SCHEMA = StructType(
-    [
-        StructField("balance", LongType()),
-        StructField("max_balance", LongType()),
-        StructField("n_clamped", LongType()),
-        StructField("n", LongType()),
-    ]
-)
-_LINDLEY_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("final_balance", LongType()),
-        StructField("max_balance", LongType()),
-        StructField("n_clamped", LongType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-
 def _lindley_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
     bal, mx, clamps, n = state.get if state.exists else (0, 0, 0, 0)
-    chunks = list(pdfs)
-    if chunks:
-        # order-sensitive fold: materialize the group, sort ONCE
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        for d in pdf["delta"].tolist():
-            nxt = bal + int(d)
-            if nxt < 0:
-                nxt, clamps = 0, clamps + 1
-            bal = nxt
-            mx = max(mx, bal)
-            n += 1
+    _, deltas = _ordered_group(pdfs, "delta")
+    for d in deltas:
+        nxt = bal + int(d)
+        if nxt < 0:
+            nxt, clamps = 0, clamps + 1
+        bal = nxt
+        mx = max(mx, bal)
+        n += 1
     state.update((bal, mx, clamps, n))
     yield pd.DataFrame(
         {
@@ -660,94 +551,81 @@ def lindley_stateful(events_with_delta: DataFrame) -> DataFrame:
     window algebra. Input must carry (user_id, ts, event_id, delta);
     all arithmetic is exact Python ints over BIGINT cents, so the
     streaming fold and the batch closed form agree bit for bit — the
-    two are oracle-checked against the SAME DuckDB SQL. Same
-    protobuf-gated ``transformWithStateInPandas`` upgrade path as the
-    sibling stateful ops."""
+    two are oracle-checked against the SAME DuckDB SQL."""
     return events_with_delta.groupBy("user_id").applyInPandasWithState(
         _lindley_fn,
-        outputStructType=_LINDLEY_OUT_SCHEMA,
-        stateStructType=_LINDLEY_STATE_SCHEMA,
+        outputStructType=(
+            "user_id long, final_balance long, max_balance long, "
+            "n_clamped long, n_events long"
+        ),
+        stateStructType="balance long, max_balance long, n_clamped long, n long",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-# --- T6 seventh shape: duration-capped sessions in state ----------------
+# --- T6 seventh shape: duration-capped sessions, batch and stream -------
 
-_CS_GAP_US = 1_800 * 1_000_000
-_CS_LEN_US = 7_200 * 1_000_000
-_CS_STATE_SCHEMA = StructType(
-    [
-        StructField("anchor_us", LongType()),
-        StructField("prev_us", LongType()),
-        StructField("session_no", LongType()),
-        StructField("cur_start_us", LongType()),
-        StructField("cur_count", LongType()),
-    ]
+_CS_GAP_US = 1_800 * 1_000_000  # 30 min inactivity gap
+_CS_LEN_US = 7_200 * 1_000_000  # 2 h hard cap from the session's anchor
+_CS_OUT_SCHEMA = (
+    "user_id long, session_no long, n_events long, "
+    "session_start string, session_end string"
 )
-_CS_OUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_no", LongType()),
-        StructField("n_events", LongType()),
-        StructField("session_start", StringType()),
-        StructField("session_end", StringType()),
-    ]
-)
+
+
+def _capped_session_walk(
+    us: Iterable[int], open_session: tuple | None = None
+) -> tuple[list[tuple], tuple]:
+    """The duration-capped session rule over event times ``us``
+    (integer microseconds, in event order): an event starts a new
+    session when its gap from the previous event exceeds 30 min, or
+    its span from the session's anchor (first event) exceeds the 2 h
+    cap. ``open_session`` is the session earlier events left open, as
+    ``(anchor, prev, session_no, start, count)``. Returns the sessions
+    the walk closed, as ``(session_no, count, start, end)``, and the
+    session left open after it, in the ``open_session`` layout."""
+    anchor, prev, sess_no, start, count = open_session or (None, None, 0, None, 0)
+    closed = []
+    for u in us:
+        if anchor is None or u - prev > _CS_GAP_US or u - anchor > _CS_LEN_US:
+            if anchor is not None:
+                closed.append((sess_no, count, start, prev))
+            anchor = start = u
+            sess_no, count = sess_no + 1, 0
+        count += 1
+        prev = u
+    return closed, (anchor, prev, sess_no, start, count)
+
+
+def _capped_session_rows(user_id, sessions: list[tuple]) -> pd.DataFrame:
+    return pd.DataFrame(
+        [(user_id, no, n, _fmt_us(st), _fmt_us(end)) for no, n, st, end in sessions],
+        columns=["user_id", "session_no", "n_events", "session_start", "session_end"],
+    )
+
+
+def _capped_session_fold(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Batch adapter (runs inside ``applyInPandas`` for
+    ``session_window_capped``): every session of one user's events,
+    the last, still-open one included."""
+    (us,) = _ordered_group([pdf])
+    closed, (_, end, no, start, n) = _capped_session_walk(us)
+    return _capped_session_rows(pdf["user_id"].iloc[0], closed + [(no, n, start, end)])
 
 
 def _capped_session_state_fn(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Sequential capped-session recurrence held in per-key state:
-    a session CLOSES (and emits) when the next event's gap exceeds
-    30 min or the span from the session anchor would exceed the 2 h
-    cap. The open session rides in state across micro-batches; it
-    never emits (matching the exact oracle, which drops each user's
-    last session). Integer-microsecond math throughout."""
-
-    def fmt(us: int) -> str:
-        return pd.Timestamp(us, unit="us").strftime("%Y-%m-%d %H:%M:%S")
-
-    if state.exists:
-        anchor, prev, sess_no, cur_start, cur_count = state.get
-    else:
-        anchor = prev = cur_start = None
-        sess_no, cur_count = 0, 0
-    out = []
-    # Order-sensitive fold: materialize ALL Arrow chunks and sort once
-    # (chunk arrival order is arbitrary — same discipline as _ewma_fn).
-    chunks = list(pdfs)
-    if chunks:
-        pdf = pd.concat(chunks).sort_values(["ts", "event_id"])
-        for us in pdf["ts"].astype("datetime64[us]").astype("int64"):
-            if (
-                anchor is None
-                or us - prev > _CS_GAP_US
-                or us - anchor > _CS_LEN_US
-            ):
-                if anchor is not None:
-                    out.append(
-                        (key[0], sess_no, cur_count, fmt(cur_start), fmt(prev))
-                    )
-                sess_no += 1
-                anchor = us
-                cur_start = us
-                cur_count = 0
-            cur_count += 1
-            prev = us
-    state.update((anchor, prev, sess_no, cur_start, cur_count))
-    if out:
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "session_no",
-                "n_events",
-                "session_start",
-                "session_end",
-            ],
-        )
+    """Stream adapter: emits the sessions this micro-batch closed and
+    keeps the open one in state. The open session never emits,
+    matching the exact oracle, which drops each user's last
+    session."""
+    (us,) = _ordered_group(pdfs)
+    closed, open_session = _capped_session_walk(us, state.get if state.exists else None)
+    state.update(open_session)
+    if closed:
+        yield _capped_session_rows(key[0], closed)
 
 
 def capped_session_stateful(events: DataFrame) -> DataFrame:
@@ -762,7 +640,10 @@ def capped_session_stateful(events: DataFrame) -> DataFrame:
     ).applyInPandasWithState(
         _capped_session_state_fn,
         outputStructType=_CS_OUT_SCHEMA,
-        stateStructType=_CS_STATE_SCHEMA,
+        stateStructType=(
+            "anchor_us long, prev_us long, session_no long, "
+            "cur_start_us long, cur_count long"
+        ),
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

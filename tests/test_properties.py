@@ -478,6 +478,22 @@ def test_centroid_rule_lives_in_one_kernel():
     assert hits == {("functions/__init__.py", "centroids")}, hits
 
 
+def test_fold_rules_live_in_one_function():
+    """One stateful-fold layer in ``streaming.ops``: the event-order
+    sort has one owner, the ordered group reader; every Python
+    ``.strftime(`` is the oracle-string formatter (the oracles' SQL
+    ``strftime(ts, ...)`` has no dot and does not match); and the
+    capped-session gap is defined once, beside the one walk."""
+    ops = "streaming/ops.py"
+    assert _package_owners_of('sort_values(["ts", "event_id"])') == {
+        (ops, "_ordered_group")
+    }
+    assert _package_owners_of("datetime64[") == {(ops, "_ordered_group")}
+    assert _package_owners_of(".strftime(") == {(ops, "_fmt_us")}
+    assert _package_owners_of("_GAP_US =") == {(ops, None)}
+    assert _package_owners_of("1_800 * 1_000_000") == {(ops, None)}
+
+
 def test_no_lambda_default_arguments():
     """No lambda in the package takes a default argument. A
     ``lambda s, i=i: ...`` handed to ``F.transform`` gets the element
@@ -1332,10 +1348,16 @@ def test_misra_gries_candidates_are_superset_of_heavy_tokens(stream, n_chunks):
 
 
 class _FakeGroupState:
-    """Minimal stand-in for pyspark GroupState: exists/get/update."""
+    """Minimal stand-in for pyspark GroupState: exists/get/update, and
+    a timer that never fires."""
+
+    hasTimedOut = False
 
     def __init__(self):
         self._v = None
+
+    def setTimeoutTimestamp(self, _ms):
+        pass
 
     @property
     def exists(self):
@@ -1488,9 +1510,9 @@ def test_capped_session_fold_invariants(gaps_s):
     are 1..K dense and event counts sum to n."""
     import pandas as pd
 
-    from gostream_spark.queries.event_time import (
-        _CAPPED_GAP_US,
-        _CAPPED_LEN_US,
+    from gostream_spark.streaming.ops import (
+        _CS_GAP_US,
+        _CS_LEN_US,
         _capped_session_fold,
     )
 
@@ -1512,14 +1534,14 @@ def test_capped_session_fold_invariants(gaps_s):
     cur, anchor, prev = 0, None, None
     assignment = []
     for u in us:
-        if anchor is None or u - prev > _CAPPED_GAP_US or u - anchor > _CAPPED_LEN_US:
+        if anchor is None or u - prev > _CS_GAP_US or u - anchor > _CS_LEN_US:
             cur += 1
             anchor = u
             sess_first[cur] = u
         else:
             # staying in-session must satisfy BOTH constraints
-            assert u - prev <= _CAPPED_GAP_US
-            assert u - sess_first[cur] <= _CAPPED_LEN_US
+            assert u - prev <= _CS_GAP_US
+            assert u - sess_first[cur] <= _CS_LEN_US
         prev = u
         assignment.append(cur)
     counts = pd.Series(assignment).value_counts().sort_index()
@@ -1533,12 +1555,12 @@ def test_capped_session_fold_invariants(gaps_s):
 )
 @settings(max_examples=60, deadline=None)
 def test_streaming_capped_session_equals_batch_minus_open(gaps_s, n_batches):
-    """The streaming capped-session state machine, fed the same events
-    over ANY time-ordered micro-batch split, must emit exactly the
-    batch fold's sessions minus the final still-open one."""
+    """The streaming capped-session adapter, fed the same events over
+    ANY time-ordered micro-batch split, must emit exactly the batch
+    adapter's sessions minus the final still-open one (both run
+    ``ops._capped_session_walk``)."""
     import pandas as pd
 
-    from gostream_spark.queries.event_time import _capped_session_fold
     from gostream_spark.streaming import ops
 
     base = pd.Timestamp("2024-01-01")
@@ -1548,7 +1570,7 @@ def test_streaming_capped_session_equals_batch_minus_open(gaps_s, n_batches):
         ts.append(t)
     pdf = pd.DataFrame({"user_id": 7, "ts": ts, "event_id": range(len(ts))})
 
-    batch = _capped_session_fold(pdf.copy())
+    batch = ops._capped_session_fold(pdf.copy())
     want = batch.iloc[:-1]  # drop the last (open) session
 
     state = _FakeGroupState()
@@ -1566,6 +1588,84 @@ def test_streaming_capped_session_equals_batch_minus_open(gaps_s, n_batches):
     assert len(got) == len(want), (len(got), len(want))
     for col in ("session_no", "n_events", "session_start", "session_end"):
         assert got[col].tolist() == want[col].tolist(), col
+
+
+_ORDERED_FOLDS = (
+    "_ewma_fn",
+    "_transition_fn",
+    "_count_window_fn",
+    "_event_session_fn",
+    "_lindley_fn",
+    "_capped_session_state_fn",
+)
+
+
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=0, max_value=4000),  # seconds after the last event
+            st.sampled_from(["view", "cart", "buy"]),
+            st.one_of(st.none(), st.integers(min_value=-5000, max_value=5000)),
+        ),
+        min_size=1,
+        max_size=40,
+    ),
+    n_chunks=st.integers(min_value=1, max_value=4),
+    rnd=st.randoms(use_true_random=False),
+)
+@settings(max_examples=60, deadline=None)
+def test_ordered_folds_ignore_chunk_order(rows, n_chunks, rnd):
+    """A group larger than ``arrow.maxRecordsPerBatch`` reaches a fold
+    as several Arrow chunks in any order. Every order-sensitive fold
+    must emit the same frames and leave the same state whether it gets
+    the group as one chunk, as its shuffled rows split into 1-4 chunks
+    in any order, or as one chunk whose ``ts`` is microseconds rather
+    than nanoseconds. Zero gaps tie ``ts`` so that ``event_id`` (a
+    random permutation) decides the order."""
+    import pandas as pd
+
+    from gostream_spark.streaming import ops
+
+    ts, t = [], pd.Timestamp("2024-01-01")
+    for gap, _, _ in rows:
+        t = t + pd.Timedelta(seconds=gap)
+        ts.append(t)
+    group = pd.DataFrame(
+        {
+            "user_id": 3,
+            "ts": ts,
+            "event_id": rnd.sample(range(1000), len(rows)),
+            "event_type": [r[1] for r in rows],
+            # a NULL double reaches pandas as NaN
+            "value": [float("nan") if r[2] is None else r[2] / 100 for r in rows],
+            "delta": [r[2] or 0 for r in rows],
+        }
+    )
+    shuffled = group.sample(frac=1, random_state=rnd.randrange(2**32))
+    cuts = sorted(rnd.sample(range(1, len(rows)), min(n_chunks, len(rows)) - 1))
+    chunks = [shuffled.iloc[a:b] for a, b in zip([0, *cuts], [*cuts, len(rows)])]
+    rnd.shuffle(chunks)
+    feeds = {
+        "one chunk": [group],
+        "shuffled chunks": chunks,
+        "microsecond ts": [group.astype({"ts": "datetime64[us]"})],
+    }
+
+    for name in _ORDERED_FOLDS:
+        fold = getattr(ops, name)
+        results = {}
+        for feed, pdfs in feeds.items():
+            state = _FakeGroupState()
+            out = list(fold((3,), iter(pdfs), state))
+            frame = pd.concat(out, ignore_index=True) if out else None
+            results[feed] = (frame, repr(state.get))
+        want_frame, want_state = results.pop("one chunk")
+        for feed, (frame, got_state) in results.items():
+            assert got_state == want_state, (name, feed)
+            if want_frame is None:
+                assert frame is None, (name, feed)
+            else:
+                pd.testing.assert_frame_equal(frame, want_frame, obj=f"{name} {feed}")
 
 
 @given(
